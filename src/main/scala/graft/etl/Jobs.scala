@@ -1,8 +1,12 @@
 package graft.etl
 
 import java.sql.Timestamp
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 /** E2 — watermark: max(created_at), max(last_updated) over the previously
   * landed table. The reference implements MAX as set-dedup + sorted-insert +
@@ -12,6 +16,13 @@ import org.apache.spark.sql.functions.{col, max}
 object Watermark {
   final case class Marks(created: Timestamp, updated: Timestamp)
 
+  /** The two columns [[of]] reads. Reading a landed table through this
+    * schema scans only them and skips parquet schema inference, which
+    * would otherwise cost one Spark job per table on every tick. */
+  val schema: StructType = StructType(Seq(
+    StructField("created_at", TimestampType),
+    StructField("last_updated", TimestampType)))
+
   def of(landed: DataFrame): Option[Marks] = {
     val row = landed
       .agg(max(col("created_at")).as("c"), max(col("last_updated")).as("u"))
@@ -19,6 +30,33 @@ object Watermark {
     if (row.isNullAt(0) && row.isNullAt(1)) None
     else Some(Marks(row.getTimestamp(0), row.getTimestamp(1)))
   }
+}
+
+/** Runs one side-effecting action per table on a driver thread pool, so
+  * the tables' single-task Spark jobs share the executors instead of
+  * queueing behind each other (job submission is thread-safe on one
+  * session; the callers never give two tables one write path). */
+private[etl] object PerTable {
+
+  /** `f` applied to every table. The pool is
+    * `min(#tables, spark.sparkContext.defaultParallelism)` threads wide.
+    * Returns only after every call has finished, with each call's result
+    * in input order. Anything a call throws becomes its `Failure`,
+    * fatal errors such as `ExceptionInInitializerError` included, so one
+    * broken table can neither hang the round nor leave a sibling's write
+    * running after the caller has seen the error. */
+  def run[A, T](spark: SparkSession, tables: Seq[A])(f: A => T): Seq[Try[T]] =
+    if (tables.isEmpty) Seq.empty
+    else {
+      val pool = Executors.newFixedThreadPool(
+        math.min(tables.size, spark.sparkContext.defaultParallelism))
+      try {
+        val calls = tables.map(t => new Callable[T] { def call(): T = f(t) })
+        pool.invokeAll(calls.asJava).asScala.toSeq.map { r =>
+          try Success(r.get()) catch { case e: ExecutionException => Failure(e.getCause) }
+        }
+      } finally pool.shutdown()
+    }
 }
 
 /** E1+E3 — per-table full-vs-incremental ingest (reference:
@@ -33,13 +71,12 @@ object Watermark {
   * therefore advances off the latest delta only, which is sound because
   * each delta's max dominates the previous watermark.
   */
-final class IngestJob(source: OltpSource, landed: TableStore,
-    parallelism: Int = 1) {
+final class IngestJob(source: OltpSource, landed: TableStore) {
 
   private def ingestOne(table: String): Option[String] = {
     val delta: DataFrame =
       if (!landed.exists(table)) source.full(table)
-      else Watermark.of(landed.read(table)) match {
+      else Watermark.of(landed.read(table, Watermark.schema)) match {
         case Some(m) => source.incremental(table, m.created, m.updated)
         case None    => source.full(table)
       }
@@ -49,18 +86,13 @@ final class IngestJob(source: OltpSource, landed: TableStore,
     else { landed.write(table, delta); Some(table) }
   }
 
-  /** Runs one ingest round; returns the tables that produced a delta,
-    * in `listTables()` order regardless of `parallelism`.
+  /** Runs one ingest round; returns the tables that produced a delta, in
+    * `listTables()` order.
     *
     * Each table is independent (its own watermark read, delta scan, and
-    * write target), but serial execution pays THREE driver round-trips
-    * per table (exists, watermark agg, isEmpty) before the write —
-    * reference-parity and fine at 11 tables, a driver-bound bottleneck
-    * at a 1,000-table source. With `parallelism > 1` the per-table
-    * pipelines are submitted from a driver thread pool; Spark's
-    * scheduler interleaves the concurrent jobs across executors (job
-    * submission is thread-safe on one session; distinct tables never
-    * share a write path).
+    * write target), so the per-table pipelines run concurrently through
+    * [[PerTable]]; Spark's scheduler interleaves their jobs across
+    * executors.
     *
     * Failure semantics: every submitted table runs to completion (or
     * failure) BEFORE run() returns or throws — a fail-fast await would
@@ -69,35 +101,23 @@ final class IngestJob(source: OltpSource, landed: TableStore,
     * a zombie write on the same landed path. On any failure the first
     * error (in table order) propagates AS THE CAUSE of a
     * [[IngestJob.PartialIngestException]] carrying the tables that DID
-    * land (await-all means later-listed tables may have been fully
-    * ingested before the throw, unlike the serial form which stops at
-    * the first failure) — so callers can reconcile state instead of
-    * guessing which side-effects happened. */
-  def run(): Seq[String] =
-    if (parallelism <= 1) source.listTables().flatMap(ingestOne)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.util.{Failure, Success, Try}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val fs = source.listTables().map(t => Future(Try(ingestOne(t))))
-        val results = Await.result(Future.sequence(fs),
-          scala.concurrent.duration.Duration.Inf)
-        results.collectFirst { case Failure(e) =>
-          throw new IngestJob.PartialIngestException(
-            results.collect { case Success(Some(t)) => t }, e)
-        }
-        results.flatMap(_.get)
-      } finally pool.shutdown()
+    * land (later-listed tables included) — so callers can reconcile
+    * state instead of guessing which side-effects happened. */
+  def run(): Seq[String] = {
+    val results = PerTable.run(SparkSession.active, source.listTables())(ingestOne)
+    results.collectFirst { case Failure(e) =>
+      throw new IngestJob.PartialIngestException(
+        results.collect { case Success(Some(t)) => t }, e)
     }
+    results.flatMap(_.get)
+  }
 }
 
 object IngestJob {
-  /** A parallel ingest round failed for at least one table AFTER
-    * sibling tables already landed their deltas (await-all semantics).
-    * `landed` lists the tables whose writes completed, in submission
-    * order; the first per-table error (in table order) is the cause. */
+  /** An ingest round failed for at least one table AFTER sibling tables
+    * already landed their deltas (await-all semantics). `landed` lists
+    * the tables whose writes completed, in table order; the first
+    * per-table error (in table order) is the cause. */
   final class PartialIngestException(val landed: Seq[String], cause: Throwable)
       extends RuntimeException(
         s"ingest failed after ${landed.size} table(s) landed " +
@@ -107,7 +127,12 @@ object IngestJob {
 /** Transform stage (reference: src/transform.py:256-308): read the 11
   * landed tables, build 8 dims + 3 facts as independent lazy plans, write
   * each to the processed store. Each source table is read once; address
-  * feeds both dim_location and dim_counterparty from the same scan. */
+  * feeds both dim_location and dim_counterparty from the same scan.
+  *
+  * The 11 writes run concurrently through [[PerTable]]. Like
+  * [[IngestJob.run]], run() waits for every write to finish before it
+  * throws the first failing output's error (in declared order), so no
+  * write is still running when the caller sees it. */
 final class TransformJob(landed: TableStore, processed: TableStore) {
 
   /** dim_date generation range hardcoded by the reference's transform()
@@ -115,6 +140,7 @@ final class TransformJob(landed: TableStore, processed: TableStore) {
   val dimDateStart = "2022-01-01"
   val dimDateEnd = "2024-01-01"
 
+  /** Returns the 11 output names in declared order. */
   def run(spark: SparkSession): Seq[String] = {
     def in(name: String): DataFrame =
       landed.read(name, Schemas.sourceTables(name))
@@ -133,7 +159,9 @@ final class TransformJob(landed: TableStore, processed: TableStore) {
       "fact_purchase_order" -> FactBuilders.factPurchaseOrder(in("purchase_order")),
       "fact_payment" -> FactBuilders.factPayment(in("payment")))
 
-    outputs.map { case (name, df) => processed.write(name, df); name }
+    PerTable.run(spark, outputs) { case (name, df) =>
+      processed.write(name, df); name
+    }.map(_.get)
   }
 }
 

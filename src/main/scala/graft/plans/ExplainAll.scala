@@ -16,7 +16,8 @@ object ExplainAll {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val names = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(graft.SparkEntry.allQueries.map(_.name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-explain-all")

@@ -15,7 +15,8 @@ object JobCount {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(Seq("sim_ann_ivf"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-jobcount")

@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.sql.Timestamp
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 import graft.SparkSpec
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
@@ -88,34 +89,26 @@ class IngestJobSpec extends SparkSpec {
     assert(delta.collect()(0).getDecimal(3).toPlainString === "99.99")
   }
 
-  test("parallelism > 1 lands the same results as the serial form") {
+  test("run lands each fixture in listTables order, full and delta") {
     val src = tmpDir("src")
     writeSource(src, Fixtures.all(spark))
-    val serialDir = tmpDir("landed-serial"); val parDir = tmpDir("landed-par")
-    val serialStore = new ParquetStore(spark, serialDir)
-    val parStore = new ParquetStore(spark, parDir)
-    val serial = new IngestJob(new ParquetSource(spark, src), serialStore)
-    val par = new IngestJob(new ParquetSource(spark, src), parStore,
-      parallelism = 4)
+    val source = new ParquetSource(spark, src)
+    val store = new ParquetStore(spark, tmpDir("landed"))
+    val job = new IngestJob(source, store)
 
-    // full round: same tables reported, in the same (listTables) order
-    val s1 = serial.run(); val p1 = par.run()
-    assert(p1 === s1)
-    // every landed table is row-for-row identical
-    Fixtures.all(spark).keySet.foreach { t =>
-      assert(cells(parStore.read(t)) === cells(serialStore.read(t)),
-        s"table $t diverged under parallel ingest")
+    // full round: every table, in listTables order, each landed whole
+    assert(job.run() === source.listTables())
+    Fixtures.all(spark).foreach { case (t, df) =>
+      assert(cells(store.read(t)) === cells(df), s"table $t diverged from its fixture")
     }
 
-    // incremental round: both see the advanced watermark, both land the
-    // same 1-table delta
+    // incremental round: only the mutated table, landed as its delta
     val feb = Timestamp.valueOf("2023-02-02 11:30:00")
-    val withInsert = Fixtures.currency(spark).union(
-      spark.createDataFrame(Seq(
-        Row(91, "GBP", feb, feb)).asJava, Schemas.currency))
-    writeSource(src, Map("currency" -> withInsert))
-    assert(par.run() === serial.run())
-    assert(cells(parStore.read("currency")) === cells(serialStore.read("currency")))
+    val insert = spark.createDataFrame(Seq(
+      Row(91, "GBP", feb, feb)).asJava, Schemas.currency)
+    writeSource(src, Map("currency" -> Fixtures.currency(spark).union(insert)))
+    assert(job.run() === Seq("currency"))
+    assert(cells(store.read("currency")) === cells(insert))
   }
 
   test("parallel run awaits every table before propagating a failure") {
@@ -138,7 +131,7 @@ class IngestJobSpec extends SparkSpec {
     }
     val landedDir = tmpDir("landed-fail")
     val store = new ParquetStore(spark, landedDir)
-    val job = new IngestJob(failing, store, parallelism = 3)
+    val job = new IngestJob(failing, store)
     val e = intercept[IngestJob.PartialIngestException](job.run())
     assert(e.getMessage.contains("boom"))
     assert(e.getCause.getMessage.contains("boom"))
@@ -146,6 +139,39 @@ class IngestJobSpec extends SparkSpec {
     // can reconcile partial state instead of guessing
     assert(e.landed.toSet === Set("currency", "payment"))
     // both healthy tables completed their writes before the rethrow
+    assert(store.read("currency").count() === Fixtures.currency(spark).count())
+    assert(store.read("payment").count() === Fixtures.payment(spark).count())
+  }
+
+  test("a fatal error in one table fails the round, not hangs it") {
+    val src = tmpDir("src")
+    writeSource(src, Map(
+      "currency" -> Fixtures.currency(spark),
+      "payment" -> Fixtures.payment(spark)))
+    val inner = new ParquetSource(spark, src)
+    // what a JDBC driver's failing static initialiser throws: a
+    // LinkageError, which scala.util.Try does not catch
+    val fatal = new ExceptionInInitializerError("driver init failed")
+    val broken = new OltpSource {
+      def listTables(): Seq[String] = Seq("currency", "broken", "payment")
+      def full(table: String): org.apache.spark.sql.DataFrame =
+        if (table == "broken") throw fatal else inner.full(table)
+      def incremental(table: String, c: Timestamp, u: Timestamp): org.apache.spark.sql.DataFrame =
+        inner.incremental(table, c, u)
+    }
+    val store = new ParquetStore(spark, tmpDir("landed-fatal"))
+    val job = new IngestJob(broken, store)
+    val runner = Executors.newSingleThreadExecutor()
+    val thrown = try intercept[ExecutionException] {
+      runner.submit(new Callable[Seq[String]] { def call() = job.run() })
+        .get(60, TimeUnit.SECONDS) // a hang surfaces as TimeoutException
+    }.getCause finally runner.shutdownNow()
+    thrown match {
+      case e: IngestJob.PartialIngestException =>
+        assert(e.getCause eq fatal)
+        assert(e.landed === Seq("currency", "payment"))
+      case other => fail(s"expected PartialIngestException, got $other")
+    }
     assert(store.read("currency").count() === Fixtures.currency(spark).count())
     assert(store.read("payment").count() === Fixtures.payment(spark).count())
   }

@@ -2,8 +2,9 @@ package graft.etl
 
 import java.sql.Timestamp
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** End-to-end extract→transform→load over local dirs standing in for the
@@ -51,5 +52,36 @@ class PipelineSpec extends SparkSpec {
     assert(fp.filter(col("payment_id") === 3).count() === 2)
     // dims regenerate from the latest delta state and re-append
     assert(wh.read("dim_date").count() === 1462)
+  }
+
+  test("transform awaits every output before a failed write throws") {
+    val src = tmpDir("src")
+    val srcStore = new ParquetStore(spark, src)
+    Fixtures.all(spark).foreach { case (n, df) => srcStore.write(n, df) }
+    val landed = new ParquetStore(spark, tmpDir("ingested"))
+    new IngestJob(new ParquetSource(spark, src), landed).run()
+
+    val declared = Seq("dim_date", "dim_location", "dim_design", "dim_currency",
+      "dim_counterparty", "dim_staff", "dim_transaction", "dim_payment_type",
+      "fact_sales_order", "fact_purchase_order", "fact_payment")
+    assert(new TransformJob(landed, new ParquetStore(spark, tmpDir("ok")))
+      .run(spark) === declared)
+
+    val inner = new ParquetStore(spark, tmpDir("processed"))
+    val failing = new TableStore {
+      def exists(name: String): Boolean = inner.exists(name)
+      def list(): Seq[String] = inner.list()
+      def read(name: String): DataFrame = inner.read(name)
+      def read(name: String, schema: StructType): DataFrame = inner.read(name, schema)
+      def write(name: String, df: DataFrame): Unit =
+        if (name == "dim_currency") throw new RuntimeException("boom: dim_currency")
+        else inner.write(name, df)
+      def append(name: String, df: DataFrame): Unit = inner.append(name, df)
+    }
+    val e = intercept[RuntimeException](new TransformJob(landed, failing).run(spark))
+    assert(e.getMessage === "boom: dim_currency")
+    // await-all: the 10 healthy outputs were written before the throw
+    assert(inner.list() === declared.filterNot(_ == "dim_currency").sorted)
+    assert(inner.read("dim_date").count() === 731)
   }
 }
