@@ -124,45 +124,92 @@ object IngestJob {
           s"[${landed.mkString(", ")}]: ${cause.getMessage}", cause)
 }
 
-/** Transform stage (reference: src/transform.py:256-308): read the 11
-  * landed tables, build 8 dims + 3 facts as independent lazy plans, write
-  * each to the processed store. Each source table is read once; address
-  * feeds both dim_location and dim_counterparty from the same scan.
+/** Transform stage (reference: src/transform.py:256-308): read the landed
+  * tables, build 8 dims + 3 facts as independent lazy plans, write each to
+  * the processed store. Each source table is read once; address feeds both
+  * dim_location and dim_counterparty from the same read.
   *
-  * The 11 writes run concurrently through [[PerTable]]. Like
-  * [[IngestJob.run]], run() waits for every write to finish before it
+  * Rebuild rule: each output declares the landed tables it reads. An
+  * output is rewritten unless the stamp stored beside it matches
+  * - the content versions of its inputs ([[TableStore.version]], read
+  *   before any frame is built, so a table re-landed during the run reads
+  *   as changed next time, never as unchanged),
+  * - its own current version (an append or a foreign overwrite rebuilds
+  *   it), and
+  * - the builder's identity: a hash of the output schema and canonical
+  *   analyzed plan, which covers literals such as the dim_date range.
+  * A store that reports no version ("unknown") rebuilds every time. The
+  * stamp is dropped before a rewrite and stored only after the write
+  * succeeds, so a failed write leaves no stamp.
+  *
+  * The writes run concurrently through [[PerTable]]. Like
+  * [[IngestJob.run]], run() waits for every output to finish before it
   * throws the first failing output's error (in declared order), so no
   * write is still running when the caller sees it. */
 final class TransformJob(landed: TableStore, processed: TableStore) {
+  import TransformJob.Output
 
   /** dim_date generation range hardcoded by the reference's transform()
     * (src/transform.py:276). */
   val dimDateStart = "2022-01-01"
   val dimDateEnd = "2024-01-01"
 
-  /** Returns the 11 output names in declared order. */
+  private def outputs(spark: SparkSession): Seq[Output] = Seq(
+    Output("dim_date", Nil, _ => DimBuilders.dimDate(spark, dimDateStart, dimDateEnd)),
+    Output("dim_location", Seq("address"), { case Seq(a) => DimBuilders.dimLocation(a) }),
+    Output("dim_design", Seq("design"), { case Seq(d) => DimBuilders.dimDesign(d) }),
+    Output("dim_currency", Seq("currency"), { case Seq(c) => DimBuilders.dimCurrency(c) }),
+    Output("dim_counterparty", Seq("address", "counterparty"),
+      { case Seq(a, c) => DimBuilders.dimCounterparty(a, c) }),
+    Output("dim_staff", Seq("staff", "department"),
+      { case Seq(s, d) => DimBuilders.dimStaff(s, d) }),
+    Output("dim_transaction", Seq("transaction"),
+      { case Seq(t) => DimBuilders.dimTransaction(t) }),
+    Output("dim_payment_type", Seq("payment_type"),
+      { case Seq(p) => DimBuilders.dimPaymentType(p) }),
+    Output("fact_sales_order", Seq("sales_order"),
+      { case Seq(s) => FactBuilders.factSalesOrder(s) }),
+    Output("fact_purchase_order", Seq("purchase_order"),
+      { case Seq(p) => FactBuilders.factPurchaseOrder(p) }),
+    Output("fact_payment", Seq("payment"), { case Seq(p) => FactBuilders.factPayment(p) }))
+
+  /** Schema plus canonical analyzed plan: equal for equal builders over
+    * equally-shaped inputs, across runs (expression ids are normalised). */
+  private def builderId(df: DataFrame): String =
+    TableStore.sha256(df.schema.json + "\n" + df.queryExecution.analyzed.canonicalized
+      .treeString(verbose = true, maxFields = Int.MaxValue))
+
+  /** Returns the 11 output names in declared order, rebuilt or not. */
   def run(spark: SparkSession): Seq[String] = {
-    def in(name: String): DataFrame =
-      landed.read(name, Schemas.sourceTables(name))
+    val outs = outputs(spark)
+    val tables = outs.flatMap(_.inputs).distinct
+    val versions = tables.map(t => t -> landed.version(t)).toMap
+    val frames = tables.map(t => t -> landed.read(t, Schemas.sourceTables(t))).toMap
+    val built = outs.map(o => o -> o.build(o.inputs.map(frames)))
 
-    val address = in("address")
-    val outputs: Seq[(String, DataFrame)] = Seq(
-      "dim_date" -> DimBuilders.dimDate(spark, dimDateStart, dimDateEnd),
-      "dim_location" -> DimBuilders.dimLocation(address),
-      "dim_design" -> DimBuilders.dimDesign(in("design")),
-      "dim_currency" -> DimBuilders.dimCurrency(in("currency")),
-      "dim_counterparty" -> DimBuilders.dimCounterparty(address, in("counterparty")),
-      "dim_staff" -> DimBuilders.dimStaff(in("staff"), in("department")),
-      "dim_transaction" -> DimBuilders.dimTransaction(in("transaction")),
-      "dim_payment_type" -> DimBuilders.dimPaymentType(in("payment_type")),
-      "fact_sales_order" -> FactBuilders.factSalesOrder(in("sales_order")),
-      "fact_purchase_order" -> FactBuilders.factPurchaseOrder(in("purchase_order")),
-      "fact_payment" -> FactBuilders.factPayment(in("payment")))
-
-    PerTable.run(spark, outputs) { case (name, df) =>
-      processed.write(name, df); name
+    PerTable.run(spark, built) { case (o, df) =>
+      // None when any input's version is unknown: always rebuild
+      val key = Option.when(o.inputs.forall(versions(_).isDefined)) {
+        (builderId(df) +: o.inputs.map(t => s"$t ${versions(t).get}")).mkString("\n")
+      }
+      def stampFor(k: String, outVersion: String) = s"$k\n${o.name} $outVersion"
+      val current = for (k <- key; v <- processed.version(o.name)) yield stampFor(k, v)
+      if (current.isEmpty || processed.stamp(o.name) != current) {
+        processed.putStamp(o.name, None)
+        processed.write(o.name, df)
+        for (k <- key; v <- processed.version(o.name))
+          processed.putStamp(o.name, Some(stampFor(k, v)))
+      }
+      o.name
     }.map(_.get)
   }
+}
+
+object TransformJob {
+  /** One output: the landed tables it reads, and its builder over their
+    * frames in that order. */
+  private final case class Output(name: String, inputs: Seq[String],
+      build: Seq[DataFrame] => DataFrame)
 }
 
 /** Load stage L1–L3 (reference: src/load.py:51-152): read every table in

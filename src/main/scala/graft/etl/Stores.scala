@@ -1,14 +1,22 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.util.Try
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Storage abstraction standing in for the reference's S3 buckets
   * (reference: src/extract.py:122-156 bucket discovery, src/load.py:51-78
   * multi-file ingest). One named parquet table per entry; works against
   * any Hadoop-FS URI (local path in tests, s3a:// on a cluster) — the same
   * path-prefix indirection the reference's tests exploit (SURVEY.md §5).
+  *
+  * Change detection is optional: [[version]] and the stamp pair default to
+  * "unknown" and "no stamp", which makes [[TransformJob]] rebuild every
+  * output on every run, as a store without them always did.
   */
 trait TableStore {
   def exists(name: String): Boolean
@@ -20,17 +28,68 @@ trait TableStore {
   def write(name: String, df: DataFrame): Unit
   /** Append — the warehouse accumulates versions (reference: src/load.py:102-110). */
   def append(name: String, df: DataFrame): Unit
+
+  /** Content version of `name`: a token that differs whenever its data
+    * differs. `None` means unknown (the default, and any missing table);
+    * callers must then treat the table as changed. */
+  def version(name: String): Option[String] = None
+
+  /** The stamp last stored beside `name` by [[putStamp]], if it is still
+    * there. A write that replaces `name` must drop its stamp. */
+  def stamp(name: String): Option[String] = None
+
+  /** Stores `stamp` beside `name`, or removes it when `None`. The default
+    * keeps no stamps, so [[stamp]] stays `None`. */
+  def putStamp(name: String, stamp: Option[String]): Unit = ()
 }
 
 /** Parquet-directory store: `<root>/<name>.parquet/` (a parquet dataset per
   * table, so writes scale out across executors instead of the reference's
-  * single-buffer upload). */
+  * single-buffer upload).
+  *
+  * [[version]] hashes a driver-side listing of the data files (path,
+  * size, mtime). Spark names every part file with a per-write UUID,
+  * so each overwrite or append yields a new version. The stamp is the
+  * hidden file `<name>.parquet/_graft_stamp`: Spark's readers skip
+  * `_`-prefixed files, and an overwrite deletes the directory and the
+  * stamp with it. */
 final class ParquetStore(spark: SparkSession, root: String) extends TableStore {
 
   private def path(name: String) = s"$root/$name.parquet"
 
-  private def fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  private def fs = new Path(root).getFileSystem(conf)
+
+  private def stampPath(name: String) = new Path(path(name), "_graft_stamp")
+
+  /** Spark's rule for files and directories its readers skip. */
+  private def hidden(n: String) =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+
+  /** Data files under `dir`, partition directories included, in path
+    * order; directories are listed only as the iterator reaches them. */
+  private def dataFiles(dir: Path): Iterator[FileStatus] =
+    fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName))
+      .sortBy(_.getPath.getName).iterator
+      .flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Iterator(s))
+
+  /** The schema Spark wrote into the footer of the first data file, or
+    * `None` when `spark.read.parquet` must infer it instead: schema
+    * merging is on, the dataset is missing or has no data file, or the
+    * file was not written by Spark. Spark's own inference reads the same
+    * footer key. The store passes no reader options, so the
+    * `spark.sql.parquet.mergeSchema` conf is the only merge switch. */
+  private def footerSchema(name: String): Option[StructType] = {
+    val dir = new Path(path(name))
+    if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean || !fs.exists(dir)) None
+    else dataFiles(dir).nextOption().flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }.flatMap(json => Try(DataType.fromJson(json)).toOption.collect { case s: StructType => s })
+  }
 
   override def exists(name: String): Boolean = fs.exists(new Path(path(name)))
 
@@ -44,8 +103,13 @@ final class ParquetStore(spark: SparkSession, root: String) extends TableStore {
       .sorted
   }
 
+  /** Reads `name` with the schema from its footer ([[footerSchema]]),
+    * resolved on the driver, so no Spark job runs; `spark.read.parquet`
+    * would launch one to infer it. Partition columns still come from
+    * Spark's path discovery. Falls back to `spark.read.parquet` where the
+    * footer cannot stand in for inference. */
   override def read(name: String): DataFrame =
-    spark.read.parquet(path(name))
+    footerSchema(name).fold(spark.read.parquet(path(name)))(read(name, _))
 
   override def read(name: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(path(name))
@@ -55,6 +119,29 @@ final class ParquetStore(spark: SparkSession, root: String) extends TableStore {
 
   override def append(name: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(path(name))
+
+  override def version(name: String): Option[String] = {
+    val dir = new Path(path(name))
+    if (!fs.exists(dir)) None
+    else Some(TableStore.sha256(dataFiles(dir)
+      .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").mkString("\n")))
+  }
+
+  override def stamp(name: String): Option[String] = {
+    val p = stampPath(name)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
+    }
+  }
+
+  override def putStamp(name: String, stamp: Option[String]): Unit = stamp match {
+    case Some(s) =>
+      val out = fs.create(stampPath(name), true)
+      try out.write(s.getBytes(UTF_8)) finally out.close()
+    case None => fs.delete(stampPath(name), false)
+  }
 
   /** Hive-style partitioned layout (`<name>.parquet/<col>=<v>/...`): the
     * 100 TB fact-table layout — scans filtered on the partition columns
@@ -71,4 +158,11 @@ final class ParquetStore(spark: SparkSession, root: String) extends TableStore {
     df.write.mode(SaveMode.Append)
       .partitionBy(partitionCols: _*)
       .parquet(path(name))
+}
+
+object TableStore {
+  /** Hex SHA-256 of `s`: fixed-size tokens for versions and stamps. */
+  private[etl] def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(UTF_8)).map(b => f"$b%02x").mkString
 }

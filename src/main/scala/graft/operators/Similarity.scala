@@ -237,11 +237,16 @@ object Similarity {
     * ([[graft.functions.NearestCentroidBcast]], same kernel loop).
     * Conf-overridable for tests and tuning; 4 MB default ≈ the point
     * where per-task deserialization of the literal visibly beats a
-    * one-time broadcast fetch. */
+    * one-time broadcast fetch. A value that is not a whole number throws
+    * an `IllegalArgumentException` naming the key. */
   private[operators] def maxInlineCentroidBytes(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.nearestCentroid.maxInlineBytes")
-      .map(_.toLong).getOrElse(4L << 20)
+      spark: org.apache.spark.sql.SparkSession): Long = {
+    val key = "graft.nearestCentroid.maxInlineBytes"
+    spark.conf.getOption(key).map { v =>
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be a whole number of bytes, got '$v'"))
+    }.getOrElse(4L << 20)
+  }
 
   /** argmax-by-cosine over the centroid set — the k-means / IVF E-step.
     *

@@ -39,4 +39,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `f`'s result and the number of Spark jobs it started on this thread
+    * (tagged with a one-off job group, so stray jobs of other threads do
+    * not count). The listener bus is drained before counting, through its
+    * `waitUntilEmpty` (private to Spark, so reached by reflection). */
+  def jobsIn[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobsIn-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = f
+      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
+      bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+        .get.invoke(bus)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -1154,6 +1154,18 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("maxInlineCentroidBytes: a malformed conf value names its key") {
+    val key = "graft.nearestCentroid.maxInlineBytes"
+    assert(Similarity.maxInlineCentroidBytes(spark) === (4L << 20))
+    spark.conf.set(key, "12")
+    try {
+      assert(Similarity.maxInlineCentroidBytes(spark) === 12L)
+      spark.conf.set(key, "4MB")
+      val e = intercept[IllegalArgumentException](Similarity.maxInlineCentroidBytes(spark))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("4MB"), e.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   private implicit class Round4(d: Double) {
     def round4: Double = math.rint(d * 10000) / 10000
   }

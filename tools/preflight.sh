@@ -12,6 +12,15 @@ cd "$(dirname "$0")/.."
 
 mode="${1:-}"
 
+# The same offline sbt settings and Spark environment as the tier-1 test
+# command in ROADMAP.md, so this gate runs what tier-1 runs. Values already
+# set in the environment win.
+export COURSIER_MODE=offline
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
+
 echo "[preflight] sbt compile"
 sbt -batch compile Test/compile < /dev/null
 
