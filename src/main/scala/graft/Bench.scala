@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...}. Each query executes to completion
   * (count() forces the full plan including sinks-less materialization).
@@ -34,11 +32,10 @@ object Bench {
     try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Task-level health counters. Listener delivery is async (the bus
-    * drains within milliseconds of count() returning, and queries run
-    * strictly one at a time), so per-query attribution is read after each
-    * query's cache-drop — accurate to the query for everything but the
-    * final few events of a pathological backlog. */
+  /** Task-level health counters. Listener delivery is async, so every
+    * per-query delta is read after [[GraftSession.drainListenerBus]]:
+    * queries run strictly one at a time, so once the bus is empty the
+    * counters hold exactly the tasks of the queries run so far. */
   private final class HealthListener
       extends org.apache.spark.scheduler.SparkListener {
     val spilled = new java.util.concurrent.atomic.AtomicLong(0)
@@ -131,10 +128,8 @@ object Bench {
     // dev-subset runs (SPARK_GRAFT_ONLY) write BENCH_DEV.json and never
     // touch the baselines the gate protects — don't stall an iterating
     // developer on a busy host
-    val settleMax =
-      if (sys.env.contains("SPARK_GRAFT_ONLY")) 0.0
-      else sys.env.getOrElse("SPARK_GRAFT_SETTLE_SEC", "300").toDouble
-    val settleLoad = sys.env.getOrElse("SPARK_GRAFT_SETTLE_LOAD", "2.0").toDouble
+    val settleMax = if (sys.env.contains("SPARK_GRAFT_ONLY")) 0.0 else 300.0
+    val settleLoad = 2.0
     val settleT0 = System.nanoTime()
     var loadPreWarm = loadEntry
     while (loadPreWarm > settleLoad &&
@@ -144,59 +139,8 @@ object Bench {
     }
     val settleWait = (System.nanoTime() - settleT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      // dev A/B knob for the scheduling-floor experiment: more initial
-      // shuffle partitions would only help if task skew (not task count)
-      // limited the small-sf gates; default stays = cores (measured, see
-      // BENCH_NOTES round 8)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // dev A/B knob: parallelismFirst=false lets AQE honor the advisory
-      // partition size instead of the default parallelism, collapsing
-      // tiny shuffles to few tasks (the Spark docs' recommended prod
-      // setting); default stays true pending measurement
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "true"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINTS", "true"))
-      // size-gated broadcast, not hints: the minhash verification join's
-      // build side (per-doc token arrays) is ~10-15 MB at bench sf — just
-      // over the 10 MB default, under which AQE shuffles the near-quadratic
-      // candidate side twice. 64 MB lets AQE broadcast what actually fits;
-      // at corpus scale the build side exceeds any threshold and correctly
-      // falls back to a shuffled join (PlanAuditSpec guards no forced hint).
-      // A/B'd r9 (BENCH_NOTES): disabling STATIC broadcasts entirely
-      // (runtime-measured sizes only) fixes q03's mis-ranked build side but
-      // costs the deep-DAG dedup family ~15% in per-join stage
-      // materialization — the 64m/64m pair stays; q03 carries a targeted
-      // strategy hint instead.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST_STATIC", "64m"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST_ADAPTIVE", "64m"))
-      // A/B knobs for the statistics story: ANALYZE-backed catalog tables
-      // (Tables.analyzeDir) + the cost-based estimator pricing filters and
-      // join build sides from row counts/NDVs instead of file sizes
-      .config("spark.sql.cbo.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CBO", "false"))
-      .config("spark.sql.cbo.joinReorder.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CBO_REORDER", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    // opt-in stats: one ANALYZE pass per table before any query runs —
-    // session setup (the warehouse-ingest analogue), outside every timed
-    // region, same amortization class as the Janino/JIT warm sweep
-    if (sys.env.get("SPARK_GRAFT_ANALYZE").contains("true"))
-      graft.core.Tables.analyzeDir(spark, sfDir)
 
     // Warm every query once AT THE MEASURED SF, then measure: compiles all
     // generated code (Janino cache) and JIT-warms the hot loops, so
@@ -279,8 +223,8 @@ object Bench {
       }
       val first = once()
       // CPU attribution for the FIRST pass only (the reported time), read
-      // before any rerun adds its own tasks; the bus drains within ms of
-      // count() returning (queries run strictly one at a time)
+      // before any rerun adds its own tasks
+      GraftSession.drainListenerBus(spark)
       cpus_ ::= (q.name -> (health.cpuNs.get() - cpu0) / 1e9)
       // self-defense triggers: regression vs the last committed artifact
       // (>1.5× prior, with a 0.5 s floor so sub-second jitter doesn't
@@ -301,6 +245,7 @@ object Bench {
       // outside the timed region: drop operator-cached frames (minhash
       // bands) so entries never accumulate across the 94-query run
       spark.catalog.clearCache()
+      GraftSession.drainListenerBus(spark)
       // record zeros too: an all-zero map in the artifact proves the
       // listener was attached and delivering (an empty map is
       // indistinguishable from a broken listener — r8's driver artifact

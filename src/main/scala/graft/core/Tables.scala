@@ -80,8 +80,9 @@ object Tables {
     * the warehouse-ingest analogue, same amortization class as parquet
     * footer metadata in engines that read stats for free. Idempotent;
     * re-analyzing after a data rewrite refreshes the stats. Plain-path
-    * mode stays the default — callers opt in (Bench: SPARK_GRAFT_ANALYZE).
-    */
+    * mode stays the default: a deployment opts in by calling this once
+    * per session (the README's deployment example); Bench and Verify do
+    * not, because full-surface CBO measured slower (BENCH_NOTES r10). */
   def analyzeDir(spark: SparkSession, dir: String,
       forAllColumns: Boolean = true): Unit = {
     // stable per-dir database name (paths are not valid identifiers) —

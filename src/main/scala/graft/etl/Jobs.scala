@@ -276,38 +276,51 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     * copies, same as any SQL MERGE source). */
   def upsert(table: String, df: DataFrame, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, s"upsert into $table needs at least one key column")
-    val stage = s"${table}_stage"
-    // quote identifiers the way Spark's JDBC writer quotes COLUMN names
-    // it creates (case-preserved; also covers "unit price"). Table names
-    // pass through the writer verbatim, so the stage is created under
-    // its quoted name explicitly to match the statements below.
-    def q(id: String) = "\"" + id + "\""
+    stagedSwap(table, df, keys) { (stage, cols, matched) =>
+      (s"DELETE FROM ${q(table)} WHERE $matched",
+        s"INSERT INTO ${q(table)} ($cols) SELECT $cols FROM $stage")
+    }
+  }
+
+  /** Quotes an identifier the way Spark's JDBC writer quotes COLUMN names
+    * it creates (case-preserved; also covers "unit price"). */
+  private def q(id: String) = "\"" + id + "\""
+
+  /** The set-based swap [[upsert]] and [[scd2Load]] share: land `df`
+    * (conformed, writer-capped) in the `<table>_stage` table through the
+    * parallel batched-insert path, run the two statements `statements`
+    * builds in ONE transaction (rolled back if either fails, so a failed
+    * second statement leaves the first undone), then drop the stage.
+    * `statements` receives the quoted stage name, the quoted column list
+    * and the correlated `EXISTS` predicate that matches a `table` row to
+    * a stage row on `keys`. */
+  private def stagedSwap(table: String, df: DataFrame, keys: Seq[String])(
+      statements: (String, String, String) => (String, String)): Unit = {
+    // table names pass through the writer verbatim, so the stage is
+    // created under its quoted name to match the statements
+    val stage = q(s"${table}_stage")
     val frame = writerFrame(table, df)
     frame.write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("batchsize", batchSize)
-      .jdbc(url, q(stage), props)
+      .jdbc(url, stage, props)
     val cols = frame.schema.fieldNames.map(q).mkString(", ")
-    val matchCond = keys
-      .map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ")
-    val delete =
-      s"DELETE FROM ${q(table)} WHERE EXISTS (" +
-        s"SELECT 1 FROM ${q(stage)} s WHERE $matchCond)"
-    val insert =
-      s"INSERT INTO ${q(table)} ($cols) SELECT $cols FROM ${q(stage)}"
+    val matched = s"EXISTS (SELECT 1 FROM $stage s WHERE " +
+      keys.map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ") + ")"
+    val (first, second) = statements(stage, cols, matched)
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
       try {
-        st.executeUpdate(delete)
-        st.executeUpdate(insert)
+        st.executeUpdate(first)
+        st.executeUpdate(second)
         conn.commit()
       } catch {
         case e: Throwable => conn.rollback(); throw e
       } finally st.close()
       val drop = conn.createStatement()
-      try { drop.executeUpdate(s"DROP TABLE ${q(stage)}"); conn.commit() }
+      try { drop.executeUpdate(s"DROP TABLE $stage"); conn.commit() }
       finally drop.close()
     } finally conn.close()
   }
@@ -341,41 +354,15 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
   def scd2Load(table: String, df: DataFrame, keys: Seq[String],
       effectiveDate: java.sql.Date): Unit = {
     require(keys.nonEmpty, s"scd2Load into $table needs at least one key column")
-    val stage = s"${table}_stage"
-    def q(id: String) = "\"" + id + "\""
-    val frame = writerFrame(table, df)
-    frame.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("batchsize", batchSize)
-      .jdbc(url, q(stage), props)
-    val cols = frame.schema.fieldNames.map(q).mkString(", ")
-    val matchCond = keys
-      .map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ")
     val d = "'" + effectiveDate.toString + "'"
-    val close =
-      s"UPDATE ${q(table)} SET ${q("valid_to")} = DATE($d), " +
+    stagedSwap(table, df, keys) { (stage, cols, matched) =>
+      (s"UPDATE ${q(table)} SET ${q("valid_to")} = DATE($d), " +
         s"${q("is_current")} = false " +
-        s"WHERE ${q("is_current")} = true AND EXISTS (" +
-        s"SELECT 1 FROM ${q(stage)} s WHERE $matchCond)"
-    val insert =
-      s"INSERT INTO ${q(table)} ($cols, ${q("valid_from")}, " +
-        s"${q("valid_to")}, ${q("is_current")}) " +
-        s"SELECT $cols, DATE($d), CAST(NULL AS DATE), true FROM ${q(stage)}"
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      try {
-        st.executeUpdate(close)
-        st.executeUpdate(insert)
-        conn.commit()
-      } catch {
-        case e: Throwable => conn.rollback(); throw e
-      } finally st.close()
-      val drop = conn.createStatement()
-      try { drop.executeUpdate(s"DROP TABLE ${q(stage)}"); conn.commit() }
-      finally drop.close()
-    } finally conn.close()
+        s"WHERE ${q("is_current")} = true AND $matched",
+        s"INSERT INTO ${q(table)} ($cols, ${q("valid_from")}, " +
+          s"${q("valid_to")}, ${q("is_current")}) " +
+          s"SELECT $cols, DATE($d), CAST(NULL AS DATE), true FROM $stage")
+    }
   }
 }
 

@@ -125,7 +125,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object GraftFunctions {
 
   val cosineName = "graft_cosine"
-  val minhashName = "graft_minhash"
   val intersectName = "graft_intersect_count"
   val intersectSortedName = "graft_intersect_count_sorted"
   val intersectBoundedName = "graft_intersect_count_sorted_bounded"
@@ -255,11 +254,6 @@ object GraftFunctions {
         MinhashBandsXX(exprs(0),
           intLit(minhashBandsXXName, exprs(1), "numHashes"),
           intLit(minhashBandsXXName, exprs(2), "bands")) }),
-    (minhashName, classOf[MinHashAgg],
-      "_FUNC_(token, numHashes) - MinHash signature aggregate over a " +
-        "token column, one long[] buffer per group",
-      exprs => { arity(minhashName, exprs, 2, "token, numHashes")
-        MinHashAgg(exprs(0), intLit(minhashName, exprs(1), "numHashes")) }),
     (nearestCentroidName, classOf[NearestCentroid],
       "_FUNC_(v, centroids) - argmax-cosine centroid of a numeric-array " +
         "vector over a foldable struct<id, ce> table, fused loop, " +
@@ -300,8 +294,8 @@ object GraftFunctions {
   /** Column-API handle (requires register(spark) on the active session). */
   def cosine(a: Column, b: Column): Column = call_function(cosineName, a, b)
 
-  /** |set(a) ∩ set(b)| of two array<string> columns — the fused MinHash
-    * verification kernel. */
+  /** |set(a) ∩ set(b)| of two array<string> columns in any order, with
+    * duplicates and null elements (one hash-probe pass). */
   def intersectCount(a: Column, b: Column): Column =
     call_function(intersectName, a, b)
 
@@ -395,10 +389,6 @@ object GraftFunctions {
     }
     WinnowFingerprints(exprs(0), litInt(exprs(1), "k"), litInt(exprs(2), "w"))
   }
-
-  /** MinHash signature aggregate over a token column → array<long>. */
-  def minhash(token: Column, numHashes: Int): Column =
-    call_function(minhashName, token, org.apache.spark.sql.functions.lit(numHashes))
 
   /** Fused int8 quantization → struct<scale: double, qvec: array<long>>. */
   def quantizeInt8(embedding: Column): Column =

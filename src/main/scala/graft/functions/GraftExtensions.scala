@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 /** SparkSessionExtensions installer: makes the engine's native functions
   * available in ANY session built with
   * `spark.sql.extensions=graft.functions.GraftExtensions` (cluster-wide
-  * config, spark-submit, or SparkSession.builder.withExtensions) — no
+  * config, spark-submit, or the session builder's withExtensions) — no
   * per-session register() call needed.
   *
   * This is the (c)-path registration hook of the custom-operator ladder;

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   *
   * Replaces the composed pipeline (bigram `transform` + `concat_ws`
   * array build → explode → `conv(substring(md5(w), 1, 15), 16, 10)`):
-  * DsirPeek measured that form at ~8 s per corpus pass at 10× bench sf
+  * that form measured ~8 s per corpus pass at 10× bench sf
   * — ~3.6 s allocating the per-doc gram-string array before the explode
   * and ~4.5 s in the md5→hex→parse round-trip — against ~1 s for this
   * kernel's single O(tokens) pass (incremental digest over token bytes,

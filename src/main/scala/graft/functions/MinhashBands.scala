@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why native: the composed form paid, PER TOKEN OCCURRENCE, an
   * md5→hex-string→conv→cast round-trip plus 64 codegen'd min-aggregate
   * buffer updates across a corpus-wide exploded row stream — the same
-  * cost profile DsirPeek measured on the gram pipeline before
+  * cost profile measured on the gram pipeline before
   * [[GramBuckets]] (which this kernel's digest handling mirrors: md5
   * straight over token bytes, top 60 bits taken from the raw digest, no
   * hex materialization). Fused, the whole sketch is one O(tokens ·

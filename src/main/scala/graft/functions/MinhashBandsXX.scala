@@ -8,15 +8,13 @@ import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: the full xxhash64-family MinHash band
   * sketch of ONE document — distinct-token array in, `array<bigint>` of
-  * `bands` band hashes out, byte-identical to the composed production
-  * form (`Dedup.minhashSignaturesAgg`'s per-token
-  * `xxhash64(w, lit(i))` lanes min-folded by [[MinHashAgg]], then
-  * `Dedup.lshBandsFromSig`'s `xxhash64(sig_slice..., lit(b))` band
-  * hash). The xx twin of [[MinhashBands]]: same dataflow restructure —
-  * per-row sorted-distinct token arrays replace the corpus-wide
-  * exploded (doc, token) stream, so the tokenSet repartition, the
-  * 64-lane hash aggregate, AND the verification-array re-aggregation
-  * all disappear from `Dedup.minhashNearDups`' plan (the gate pair
+  * `bands` band hashes out, byte-identical to the definitional column
+  * form (per-lane `min(xxhash64(w, lit(i)))` over the document's
+  * tokens, then `xxhash64(sig_slice..., lit(b))` per band). The xx
+  * twin of [[MinhashBands]]: same dataflow restructure — per-row
+  * sorted-distinct token arrays replace the corpus-wide exploded
+  * (doc, token) stream, so the 64-lane hash aggregate AND the
+  * verification-array re-aggregation all disappear from `Dedup.minhashNearDups`' plan (the gate pair
   * dedup_minhash_lsh / dedup_minhash_shingle — the two largest wall
   * numbers in every bench artifact before this kernel).
   *
@@ -26,11 +24,11 @@ import org.apache.spark.sql.types._
   * hash as seed starting from 42, dispatching by type —
   * `XxHash64Function.hash(_, StringType/IntegerType/LongType, seed)`.
   * So per token w: base = H_str(w, 42); lane i: h_i = H_int(i, base)
-  * (exactly [[MinHashAgg]]'s update); per band b over signature rows
+  * (exactly `xxhash64(w, lit(i))`); per band b over signature rows
   * r_0..r_{k-1}: H_int(b, fold(H_long)(42, r_0..r_{k-1})) (exactly the
   * composed `xxhash64(sig_0, ..., sig_{k-1}, lit(b))`). Drift under a
   * Spark upgrade is caught by that spec before this kernel silently
-  * diverges; end-to-end equality vs the composed plan is additionally
+  * diverges; end-to-end equality vs the column form is additionally
   * pinned in MinhashBandsXXSpec.
   *
   * Null token slots are skipped (the tokenizers never produce them); an
@@ -72,7 +70,7 @@ case class MinhashBandsXX(child: Expression, numHashes: Int, bands: Int)
       if (t != null) {
         any = true
         // xxhash64(w, lit(k)) = H_int(k, H_str(w, 42)) — one string hash
-        // per token, one 4-byte int fold per lane (MinHashAgg's update)
+        // per token, one 4-byte int fold per lane
         val base = XxHash64Function.hash(t, StringType, 42L)
         var k = 0
         while (k < nh) {

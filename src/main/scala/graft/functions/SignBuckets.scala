@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * numeric-array vector against a FOLDABLE set of hyperplanes — bit p of
   * the result is set iff dot(v, plane_p) > 0.
   *
-  * The composable formulation ([[graft.operators.Similarity.bucketIdFold]])
+  * The composable formulation (the test-side `Oracles.bucketIdFold`)
   * builds one `aggregate(zip_with(v, planesLit_p))` tree PER PLANE and
   * OR-reduces them: numPlanes interpreted higher-order folds per row,
   * each allocating an intermediate product array, under an expression

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * case for any real subword vocab) with a boxed-map spillover for wider
   * code units, so the longest-match walk does ZERO allocation — the
   * previous HashSet probe built one substring PER CANDIDATE LENGTH per
-  * position (SubwordBudgetPeek measured the probe loop as the dominant
+  * position (a timing run measured the probe loop as the dominant
   * cost of a corpus counting pass at bench sf; matching, not piece
   * materialization, was ~88% of it). */
 private[functions] final class SubwordTrie private () {
@@ -191,7 +191,7 @@ object SubwordTokenize {
   * strings, no per-word arrays). This is the budget/accounting hot path:
   * a token-budget pass needs only the count, and at corpus scale the
   * emitting kernel spent most of its time materializing pieces the
-  * consumer immediately discarded (SubwordBudgetPeek). Null token slots
+  * consumer immediately discarded. Null token slots
   * are skipped, matching `transform`'s null propagation into a 0-size
   * contribution. */
 case class SubwordCount(left: Expression, right: Expression)

@@ -20,9 +20,8 @@ import org.apache.spark.sql.types._
   * window-membership explode → per-(doc, win) argmin → corpus-wide
   * distinct). That form's argmin is `min(struct(h, -pos))`, which Spark
   * cannot hash-aggregate (struct ordering forces SortAggregate), so the
-  * plan sorts the w-fold exploded gram stream — WinnowPeek measured the
-  * explode + sort-agg + distinct tail at ~0.6 s of the gate's 1.04 s at
-  * sf0.1. This kernel is one O(G) pass per document: incremental md5 over
+  * plan sorts the w-fold exploded gram stream; the explode + sort-agg
+  * + distinct tail measured ~0.6 s of the gate's 1.04 s at sf0.1. This kernel is one O(G) pass per document: incremental md5 over
   * the token bytes (no gram-string concat), a monotonic index deque for
   * the sliding-window minimum (h asc, rightmost on position ties), and
   * record-on-change emission.

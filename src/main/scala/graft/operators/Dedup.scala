@@ -113,7 +113,7 @@ object Dedup {
     * a 5000-word doc has Jaccard ≈ 0.01 but containment 1.0 from the small
     * side. Emits one row per ordered (id, other) direction with id's
     * coverage. Quadratic verifier like [[jaccardPairs]] — scope the input.
-    * NOTE the scale path is [[containmentPairsPrefix]], NOT MinHash-LSH
+    * NOTE the scale path is [[containmentPairsPrefixArr]], NOT MinHash-LSH
     * banding: band-collision probability is a function of symmetric
     * Jaccard, so the high-containment/low-Jaccard pairs this operator
     * exists for would almost never collide in Jaccard-tuned bands —
@@ -159,25 +159,17 @@ object Dedup {
     * prunes with the ASYMMETRIC length bound |B| >= t·|A| (|A∩B| <= |B|,
     * so smaller `other` sides can't reach the threshold — the symmetric
     * Jaccard size-ratio bound does not apply to containment), then counts
-    * the intersection with the codegen kernel per surviving pair. */
-  def containmentPairsPrefix(sets: DataFrame, threshold: Double): DataFrame =
-    // compat form over an exploded set frame: aggregate it into the
-    // per-doc array shape the pipeline actually wants (one exchange),
-    // then share everything with the array-form entry point
-    containmentPairsPrefixArr(
-      sets.groupBy("doc_id")
-        .agg(sort_array(collect_set(col("w"))).as("toks")),
-      threshold)
-
-  /** [[containmentPairsPrefix]] over the per-doc SORTED distinct-token
-    * array frame `(doc_id, toks)` — the preferred entry point: per-doc
-    * sizes come from `size(toks)` (no aggregation), the verification
-    * arrays ARE the input (no re-aggregation), and an array built
-    * per-row upstream (`sort_array(array_distinct(tokens))`) makes the
-    * whole candidate generation start from ZERO corpus exchanges — the
-    * same restructuring that took the portable-MinHash sketch below its
-    * oracle. Only corpus-level document frequency (the rarity order the
-    * prefix needs) still aggregates. */
+    * the intersection with the codegen kernel per surviving pair.
+    *
+    * Input is the per-doc SORTED distinct-token array frame
+    * `(doc_id, toks)`: per-doc sizes come from `size(toks)` (no
+    * aggregation), the verification arrays ARE the input (no
+    * re-aggregation), and an array built per-row upstream
+    * (`sort_array(array_distinct(tokens))`) makes the whole candidate
+    * generation start from ZERO corpus exchanges — the same restructuring
+    * that took the portable-MinHash sketch below its oracle. Only
+    * corpus-level document frequency (the rarity order the prefix needs)
+    * still aggregates. */
   def containmentPairsPrefixArr(tokArr0: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // cache the array frame: it feeds THREE branches (the exploded
@@ -217,123 +209,33 @@ object Dedup {
       .select(col("id"), col("other"), round(col("containment"), 4).as("containment"))
   }
 
-  /** MinHash signatures: numHashes permutations simulated as seeded
-    * xxhash64(token, seed=i); sig_i = min over the doc's tokens. One
-    * explode + one groupBy — O(tokens), map-side combined. */
-  def minhashSignatures(sets: DataFrame, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map(i =>
-      min(xxhash64(col("w"), lit(i))).as(s"sig_$i")) :+
-      count(lit(1)).as("n_toks")
-    sets.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Same signatures as one native sketch aggregate
-    * ([[graft.functions.MinHashAgg]]): a single long[] buffer updated in
-    * one pass instead of numHashes aggregation slots. Returns
-    * (doc_id, sig: array<long>); values are identical to
-    * [[minhashSignatures]] (spec-asserted). */
-  def minhashSignaturesAgg(sets: DataFrame, numHashes: Int): DataFrame =
-    sets.groupBy("doc_id")
-      .agg(graft.functions.GraftFunctions.minhash(col("w"), numHashes).as("sig"),
-        count(lit(1)).as("n_toks"))
-
-  /** One (band_idx, band_hash) row per band: the single banding
-    * construction shared by every LSH variant — `sigCol` abstracts where
-    * signature element i lives (array slot vs column), `bandHash` the
-    * band-hash family (xxhash64 in production, md5 in the
-    * oracle-portable pipeline).
+  /** Candidate pairs from LSH banding via FIRST-COLLISION emission, with
+    * both set sizes attached: docs sharing any (band_idx, band_hash) are
+    * candidates (a pair with Jaccard s collides with probability
+    * 1-(1-s^r)^b), and each colliding pair is emitted exactly once with
+    * no `distinct` exchange. A true near-dup pair collides in ~b·s^r of
+    * b bands (≈2 of 16 on the bench corpus), so a plain band join emits
+    * every pair ~2× and then pays a full shuffle+dedup over the
+    * near-quadratic candidate stream — the one super-output stage of the
+    * whole pipeline (stage-profiled, BENCH_NOTES r8). Instead, each
+    * joined row checks the pair's SHARED band-hash prefix (both docs
+    * carry their full `bhs` array, equal length by construction): emit
+    * only when NO band before this one collided, i.e. only from the
+    * pair's first colliding band. Each colliding pair then appears
+    * exactly once, straight out of the join stage — provably the
+    * distinct of the multiset, with zero extra exchange. The prefix scan
+    * is the fused [[graft.functions.PrefixCollision]] kernel: one
+    * codegen'd loop over ≤b hashes per joined row, zero allocation,
+    * evaluated before any pair leaves the stage (the equivalent
+    * zip_with/slice/exists chain is CodegenFallback and was measured 8×
+    * slower end-to-end — see the kernel's scaladoc). Requires the `bhs`
+    * column ([[fusedSketch]] `carryAll = true`); the width cost is
+    * per-band-row, bounded by b hashes, and never persisted.
     *
-    * `carryAll = true` additionally keeps the doc's FULL band-hash array
-    * (`bhs`, band order) on every exploded row — the extra width
-    * (bands−1 redundant hashes per row) buys
-    * [[lshCandidatesFirstCollision]] its shuffle-free pair dedup. The
-    * default stays narrow: it is the schema [[BandIndex]] persists, and
-    * the cross-corpus paths keep their `distinct`. */
-  private def bandedExplode(signatures: DataFrame, numHashes: Int, bands: Int,
-      sigCol: Int => Column,
-      bandHash: (Seq[Column], Int) => Column,
-      carryAll: Boolean = false): DataFrame = {
-    val rows = numHashes / bands
-    val hashCols = (0 until bands).map { b =>
-      val slice = (0 until rows).map(r => sigCol(b * rows + r))
-      bandHash(slice, b)
-    }
-    // n_toks rides along so candidate pairs emerge with both set sizes
-    // attached for free (the length-filter prune needs them BEFORE the
-    // wide token-array joins)
-    val exploded = signatures
-      .select(col("doc_id"), col("n_toks"), array(hashCols: _*).as("bhs"))
-      .select(col("doc_id"), col("n_toks"), col("bhs"),
-        posexplode(col("bhs")).as(Seq("band_idx", "band_hash")))
-    if (carryAll) exploded else exploded.drop("bhs")
-  }
-
-  private def xxBandHash(slice: Seq[Column], b: Int): Column =
-    xxhash64(slice :+ lit(b): _*)
-
-  /** LSH banding over an array<long> signature column. The signature
-    * frame MUST also carry an `n_toks` set-size column (as produced by
-    * [[minhashSignaturesAgg]]) — it rides along into the candidate pairs
-    * so the length-filter prune can run before the wide token-array
-    * joins; a caller-built frame without it fails to resolve. */
-  def lshBandsFromSig(signatures: DataFrame, numHashes: Int, bands: Int,
-      carryAll: Boolean = false): DataFrame =
-    bandedExplode(signatures, numHashes, bands,
-      i => element_at(col("sig"), i + 1), xxBandHash, carryAll)
-
-  /** LSH banding over minhash signatures: split the signature into
-    * `bands` groups of rows, hash each band, and emit (doc_id, band_idx,
-    * band_hash) — docs sharing any (band_idx, band_hash) are candidates.
-    * Probability a pair with Jaccard s collides: 1-(1-s^r)^b. Like
-    * [[lshBandsFromSig]], requires an `n_toks` column on the signature
-    * frame ([[minhashSignatures]] produces it). */
-  def lshBands(signatures: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    bandedExplode(signatures, numHashes, bands,
-      i => col(s"sig_$i"), xxBandHash)
-
-  /** Candidate pairs from LSH banding (distinct on the pair), with both
-    * set sizes attached (n is functionally dependent on the id, so the
-    * distinct's cardinality is unchanged). `threshold > 0` applies the
-    * PPJoin length prune BEFORE the distinct: a pair colliding in k bands
-    * enters the distinct's shuffle k times, so dropping size-mismatched
-    * pairs at generation shrinks that shuffle by the prune's selectivity
-    * (36% on the bench corpus — measured 11.7 s → 8.3 s for the
-    * candidate stage at 10× sf). Filter∘distinct ≡ distinct∘filter on a
-    * deterministic predicate, so the pair set is unchanged and
-    * [[verifyCandidates]]'s own prune (kept for direct callers) passes
-    * everything through. */
-  def lshCandidates(bandsDf: DataFrame, threshold: Double = 0.0): DataFrame =
-    bandsDf.as("a")
-      .join(bandsDf.as("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_hash") === col("b.band_hash")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        col("a.n_toks").as("n1"), col("b.n_toks").as("n2"))
-      .filter(least(col("n1"), col("n2")).cast("double")
-        >= lit(threshold) * greatest(col("n1"), col("n2")).cast("double"))
-      .distinct()
-
-  /** Candidate pairs via FIRST-COLLISION emission — the same pair set as
-    * [[lshCandidates]] with the `distinct` exchange deleted. A true
-    * near-dup pair collides in ~b·s^r of b bands (≈2 of 16 on the bench
-    * corpus), so the classic band join emits every pair ~2× and then
-    * pays a full shuffle+dedup over the near-quadratic candidate stream
-    * — the one super-output stage of the whole pipeline (stage-profiled,
-    * BENCH_NOTES r8). Instead, each joined row checks the pair's SHARED
-    * band-hash prefix (both docs carry their full `bhs` array, equal
-    * length by construction): emit only when NO band before this one
-    * collided, i.e. only from the pair's first colliding band. Each
-    * colliding pair then appears exactly once, straight out of the join
-    * stage — provably the distinct of the multiset, with zero extra
-    * exchange. The prefix scan is the fused
-    * [[graft.functions.PrefixCollision]] kernel: one codegen'd loop over
-    * ≤b hashes per joined row, zero allocation, evaluated before any
-    * pair leaves the stage (the equivalent zip_with/slice/exists chain
-    * is CodegenFallback and was measured 8× slower end-to-end — see the
-    * kernel's scaladoc). Requires the `bhs` column ([[bandedExplode]]
-    * `carryAll = true`); the width cost is per-band-row, bounded by b
-    * hashes, and never persisted. */
+    * `threshold > 0` applies the PPJoin length prune at generation, so
+    * size-mismatched pairs never reach verification (36% of candidates
+    * on the bench corpus); [[verifyCandidates]] re-applies it, so the
+    * output is unchanged. */
   def lshCandidatesFirstCollision(bandsDf: DataFrame,
       threshold: Double = 0.0): DataFrame = {
     val noEarlierCollision = !graft.functions.GraftFunctions.prefixCollision(
@@ -346,8 +248,8 @@ object Dedup {
           && noEarlierCollision)
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
         col("a.n_toks").as("n1"), col("b.n_toks").as("n2"))
-      // PPJoin length prune at generation (see lshCandidates) — the
-      // verification tail re-applies it, so output is unchanged
+      // PPJoin length prune at generation — the verification tail
+      // re-applies it, so output is unchanged
       .filter(least(col("n1"), col("n2")).cast("double")
         >= lit(threshold) * greatest(col("n1"), col("n2")).cast("double"))
   }
@@ -368,14 +270,12 @@ object Dedup {
       shingleN: Int = 1): DataFrame = {
     // shingleN = 1: word-set MinHash; >= 2: the shingle→minhash→band→
     // bucket-join pipeline over n-word shingles (stricter near-dup notion).
-    // Sketching is the fused per-document kernel (xxSketch): the former
-    // composed form exploded a corpus-wide (doc, token) stream through a
-    // doc-keyed repartition, a 64-lane min hash-aggregate, and a
-    // collect_set RE-aggregation for the verification arrays — all three
-    // exchanges replaced by one kernel call per row over the same cached
-    // per-doc array frame the verification tail reads (the restructure
-    // that took the portable twin below its oracle in r13; byte-parity
-    // with the composed plan pinned in MinhashBandsXXSpec).
+    // Sketching is the fused per-document kernel (xxSketch): one kernel
+    // call per row over the same cached per-doc array frame the
+    // verification tail reads, instead of a corpus-wide (doc, token)
+    // stream through a 64-lane min hash-aggregate and a collect_set
+    // re-aggregation (byte-parity with that definitional form, rebuilt
+    // from plain columns, is pinned in MinhashBandsXXSpec).
     val (bandsDf, tokArr) =
       xxSketch(df, idCol, textCol, numHashes, bands, shingleN,
         carryAll = true)
@@ -387,12 +287,11 @@ object Dedup {
     * every minhash pipeline (production and oracle-portable MUST stay
     * byte-identical here, or the portable gate stops mirroring the
     * production path). `tokArr` is the per-doc SORTED distinct-token
-    * array frame `(doc_id, toks)` — the portable sketch serves it
-    * directly; the xxhash64 path aggregates it from its exploded set
-    * frame. Attaches each doc's array with plain joins (no broadcast
+    * array frame `(doc_id, toks)` that both fused sketches serve
+    * directly. Attaches each doc's array with plain joins (no broadcast
     * hint — the per-doc array table is corpus-sized at scale; AQE
     * broadcasts it only when it fits) and counts the intersection with
-    * the fused codegen kernel ([[graft.functions.IntersectCount]];
+    * the fused codegen kernel ([[graft.functions.IntersectCountSortedBounded]];
     * `size(array_intersect(...))` would allocate an intermediate array
     * per candidate pair). */
   private def verifyCandidates(cands: DataFrame, tokArr: DataFrame,
@@ -422,17 +321,7 @@ object Dedup {
       .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Engine-portable MinHash hash family: h_i(w) = first 15 hex chars of
-    * md5("i|w") as a 60-bit integer. Any engine with md5 reproduces it
-    * (the DuckDB oracle does), unlike xxhash64. Kept as the simple
-    * one-seed-per-permutation form; [[minhashNearDupsPortable]] uses the
-    * cheaper one-digest affine family below (one md5 per token instead of
-    * numHashes). */
-  def md5TokenHash(w: Column, seed: Int): Column =
-    conv(substring(md5(concat(lit(seed.toString), lit("|"), w)), 1, 15), 16, 10)
-      .cast("long")
-
-  /** Engine-portable MinHash family v2 — ONE digest per token + k
+  /** Engine-portable MinHash family — ONE digest per token + k
     * universal affine transforms (the classic Broder/Carter–Wegman
     * construction every production MinHash uses): base b(w) =
     * 60-bit-md5(w) mod p, h_i(w) = (a_i·b + c_i) mod p with p = 2^31 − 1.
@@ -488,13 +377,13 @@ object Dedup {
 
   /** [[portableSketch]]'s production twin over the xxhash64 family —
     * identical dataflow, the fused [[graft.functions.MinhashBandsXX]]
-    * kernel instead of the md5-affine one; band hashes are longs (the
-    * schema [[lshBandsFromSig]] emits, so every banding consumer —
-    * first-collision prefix scan included — is family-agnostic).
+    * kernel instead of the md5-affine one; both emit `array<bigint>`
+    * band hashes, so every banding consumer — first-collision prefix
+    * scan included — is family-agnostic.
     *
     * Unlike the portable twin, the raw doc rows are redistributed BEFORE
-    * the kernel ([[byDoc]] — the same pre-explode exchange the composed
-    * tokenSet path carried, and for the same measured reason): this is
+    * the kernel ([[byDoc]] — the same pre-explode exchange [[tokenSet]]
+    * carries, and for the same measured reason): this is
     * the FULL-CORPUS self-dedup entry ([[minhashNearDups]] runs it over
     * every document), and a single-row-group documents file scans as ONE
     * task that would otherwise carry the whole tokenize→kernel pipeline,
@@ -1085,16 +974,6 @@ object Dedup {
     }
   }
 
-  /** Min-label propagation form of [[connectedComponents]] (the
-    * vertex-shaped default — callers that know their graph shape can pin
-    * the algorithm; the dispatcher measures it). */
-  def connectedComponentsMinLabel(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = symmetrizedEdges(pairs)
-    // one job over checkpointed local blocks — cheap, and it sizes the
-    // loop's exchanges
-    minLabelLoop(edges, edges.count(), maxIter)
-  }
-
   private def minLabelLoop(edges: DataFrame,
       edgeRows: Long, maxIter: Int): DataFrame =
       withShufflePartitions(edges.sparkSession,
@@ -1366,10 +1245,6 @@ object Dedup {
       .filter(col("comp").isNull || col(idCol) === col("_rep"))
       .drop("comp", "_rep")
   }
-
-  /** 64-bit SimHash keyed by xxhash64 — the fast production variant. */
-  def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhashSig(df, idCol, textCol, w => xxhash64(w), 64)
 
   /** 60-bit SimHash keyed by the first 15 hex chars of md5 — slower than
     * xxhash64 but reproducible in any engine with md5 (the DuckDB oracle

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** 60-bit content hash (same family as [[Dedup.md5TokenHash]]). */
+  /** 60-bit portable content hash: the first 15 hex chars of md5 as a
+    * long — the base hash of the portable MinHash, Bloom and CountMin
+    * families, reproducible in any engine with md5. */
   def hash60(key: Column): Column =
     conv(substring(md5(key), 1, 15), 16, 10).cast("long")
 
@@ -239,7 +241,7 @@ object Sampling {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     graft.functions.GraftFunctions.register(df.sparkSession)
     // fused kernel: one md5 pass per doc over the token bytes — no gram
-    // strings, no hex round-trip (DsirPeek: ~8 s/pass composed vs ~1 s
+    // strings, no hex round-trip (measured ~8 s/pass composed vs ~1 s
     // fused at 10× bench sf, and this stream is scanned twice below)
     val grams = df
       .select(col(idCol).as("doc_id"), isTarget.as("is_tgt"),

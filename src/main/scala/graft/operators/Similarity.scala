@@ -30,15 +30,10 @@ object Similarity {
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Composable higher-order-function cosine (interpreted; kept as the
-    * registration-free fallback and the cross-check for the native path). */
-  def cosineFold(a: Column, b: Column): Column =
-    dot(a, b) / (l2norm(a) * l2norm(b))
-
   /** Codegen'd native cosine ([[graft.functions.CosineSimilarity]]) — the
     * hot-path kernel. Requires GraftFunctions.register on the session,
     * which [[graft.core.Tables]] performs on every load; accumulation
-    * order matches cosineFold bit for bit. The kernel reads
+    * order matches `dot(a, b) / (l2norm(a) * l2norm(b))` bit for bit. The kernel reads
     * float/long/int arrays natively (in-loop widening, exact), so NO
     * cast wrapper: the round-7 `transform(_.cast("double"))` here ran
     * once per candidate pair inside the re-rank tail — an allocation
@@ -108,22 +103,13 @@ object Similarity {
   /** Sign-of-projection bucket id: bit p set iff dot(v, plane_p) > 0.
     * Fused native kernel ([[graft.functions.SignBuckets]]): one
     * expression node holding the plane matrix, one loop per row. The
-    * fold form below built numPlanes interpreted HOF folds under a
+    * per-plane fold form built numPlanes interpreted HOF folds under a
     * numPlanes×dim-literal tree — measured ~0.85 s of constant
     * plan/compile/interpret cost on the bucket gates at EVERY data
     * scale. Same arithmetic, same null algebra (SignBucketsSpec pins
     * parity row-for-row). */
   def bucketId(embedding: Column, planes: Array[Array[Double]]): Column =
     graft.functions.GraftFunctions.signBuckets(embedding, planes)
-
-  /** Higher-order-function formulation of [[bucketId]] — kept as the
-    * registration-free fallback and the value-parity cross-check for
-    * the native kernel (same pattern as [[cosineFold]]). */
-  def bucketIdFold(embedding: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (plane, p) =>
-      val planeCol = array(plane.toIndexedSeq.map(lit): _*)
-      when(dot(embedding, planeCol) > 0, lit(1L << p)).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
 
   /** ANN via LSH buckets with Hamming-1 multi-probe: each query probes its
     * own bucket plus every bucket that differs in one bit, candidates come
@@ -390,8 +376,7 @@ object Similarity {
 
   /** IVF with an engine-PORTABLE coarse quantizer: centroids are the
     * `numCentroids` vectors with the lowest 60-bit md5 hash of their id
-    * (the same portable hash family as [[Sampling.hash60]] /
-    * [[Dedup.md5TokenHash]]) instead of [[kmeansCentroids]]'s
+    * (the portable [[Sampling.hash60]] family) instead of [[kmeansCentroids]]'s
     * xxhash64-sample + Lloyd refinement. Same recall characteristics as
     * `lloydIters = 0` (both are uniform deterministic samples of the
     * corpus), but every step — sample, assign, probe, re-rank — is
@@ -496,7 +481,7 @@ object Similarity {
     val planes = hyperplanes(k, dim, seed)
     val scale = math.sqrt(3.0 / k)
     // fused mat-vec kernel ([[graft.functions.ProjectPlanes]]): one loop
-    // per row for all k dots. The fold form below ran k interpreted HOF
+    // per row for all k dots. The per-plane fold form ran k interpreted HOF
     // folds per row (measured 0.16 -> 0.85 s across 10x rows on the
     // gate); the per-element scale multiply stays column algebra so the
     // arithmetic (dot * scale, null dots propagated) is unchanged.
@@ -504,21 +489,6 @@ object Similarity {
       .select(col("vec_id"), posexplode(transform(
         graft.functions.GraftFunctions.projectPlanes(col("embedding"), planes),
         d => d * lit(scale))).as(Seq("j", "v")))
-      .select(col("vec_id"), col("j").cast("long").as("j"), col("v"))
-  }
-
-  /** Higher-order-function formulation of [[randomProjection]] — kept as
-    * the registration-free fallback and the value-parity cross-check for
-    * the native kernel (same pattern as [[cosineFold]]/[[bucketIdFold]]). */
-  def randomProjectionFold(vectors: DataFrame, k: Int, dim: Int,
-      seed: Long = 42L): DataFrame = {
-    val planes = hyperplanes(k, dim, seed)
-    val scale = math.sqrt(3.0 / k)
-    val comps = planes.toIndexedSeq.map { p =>
-      dot(col("embedding"), array(p.toIndexedSeq.map(lit): _*)) * lit(scale)
-    }
-    vectors
-      .select(col("vec_id"), posexplode(array(comps: _*)).as(Seq("j", "v")))
       .select(col("vec_id"), col("j").cast("long").as("j"), col("v"))
   }
 
@@ -532,7 +502,7 @@ object Similarity {
     vectors
       // fused native kernel ([[graft.functions.QuantizeInt8]]): one
       // absmax pass + one rounding pass per row, no intermediate double
-      // arrays. The column-algebra form ([[quantizeInt8Fold]]) is
+      // arrays. The column-algebra form is
       // structurally slow and cannot be made reliably fast: built in one
       // select, the scale tree lands inside the transform lambda and
       // re-evaluates PER ELEMENT (~12k interpreted lambda evals/row —
@@ -543,20 +513,6 @@ object Similarity {
       .withColumn("q", graft.functions.GraftFunctions.quantizeInt8(col("embedding")))
       .select(col("vec_id"), col("q.scale").as("scale"),
         col("q.qvec").as("qvec"))
-
-  /** Higher-order-function formulation of [[quantizeInt8]] — interpreted
-    * and per-element-recompute-prone (see quantizeInt8's note); kept as
-    * the registration-free fallback and the value-parity cross-check for
-    * the native kernel (QuantizeInt8Spec). */
-  def quantizeInt8Fold(vectors: DataFrame): DataFrame = {
-    val e = transform(col("embedding"), _.cast("double"))
-    val scale = greatest(
-      array_max(transform(e, x => abs(x))) / lit(127.0), lit(1e-30))
-    vectors.select(
-      col("vec_id"),
-      scale.as("scale"),
-      transform(e, x => round(x / scale).cast("long")).as("qvec"))
-  }
 
   /** Bucket occupancy histogram — the partitioning diagnostic for the ANN
     * index (skewed buckets → add planes or salt). */

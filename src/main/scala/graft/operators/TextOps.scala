@@ -125,8 +125,8 @@ object TextOps {
     * record-on-change emission that IS the distinct — so the plan is
     * scan → byDoc exchange → project → explode, with no window-membership
     * explode, no struct-min SortAggregate, and no corpus-wide distinct
-    * (the composed form [[winnowComposed]] pays all three; WinnowPeek
-    * measured them at ~0.6 s of its 1.04 s at sf0.1). */
+    * (the composed explode-and-aggregate form pays all three, measured
+    * at ~0.6 s of its 1.04 s at sf0.1). */
   def winnow(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
@@ -138,43 +138,6 @@ object TextOps {
         explode(graft.functions.GraftFunctions.winnowFingerprints(
           tokens(col(textCol)), k, w)).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
-  }
-
-  /** The composed column-algebra form of [[winnow]] — gram explode →
-    * bounded window-membership explode (≤ w windows per gram) →
-    * per-(doc, win) argmin aggregation → distinct. Kept as the
-    * independent second implementation the equality spec checks the
-    * fused kernel against (same role as the portable MinHash twins). */
-  private[graft] def winnowComposed(df: DataFrame, idCol: String,
-      textCol: String, k: Int, w: Int): DataFrame = {
-    // G (the doc's gram count) is a pure function of the token array, so
-    // it is computed BEFORE the explode and carried per gram row — the
-    // previous form recovered it as max(pos) OVER (PARTITION BY doc_id),
-    // a whole extra exchange + window stage for a value the generator
-    // already knew (measured −0.3 s/gate at sf0.1, plans identical
-    // otherwise).
-    val grams = Dedup.byDoc(df, idCol)
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("t"))
-      .select(col("doc_id"),
-        greatest(size(col("t")) - (k - 1), lit(1)).cast("long").as("n_grams"),
-        explode(transform(
-          sequence(lit(1), greatest(size(col("t")) - (k - 1), lit(1))),
-          i => struct(i.as("pos"), slice(col("t"), i, lit(k)).as("g")))).as("s"))
-      .filter(size(col("s.g")) === k) // drops the short-doc sentinel index
-      .select(col("doc_id"), col("s.pos").cast("long").as("pos"),
-        greatest(col("n_grams") - (w - 1), lit(1L)).as("last_win"),
-        Sampling.hash60(concat_ws(" ", col("s.g"))).as("h"))
-    // gram at pos belongs to windows [pos-w+1, pos] clipped to
-    // [1, G-w+1] (G = gram count; all grams share window 1 when G < w)
-    grams
-      .withColumn("win", explode(sequence(
-        greatest(col("pos") - (w - 1), lit(1L)),
-        least(col("pos"), col("last_win")))))
-      .groupBy(col("doc_id"), col("win"))
-      // struct min = (h asc, -pos asc) = minimal hash, rightmost on ties
-      .agg(min(struct(col("h"), (-col("pos")).as("np"))).as("m"))
-      .select(col("doc_id"), (-col("m.np")).as("pos"), col("m.h").as("fp"))
-      .distinct()
   }
 
   /** Substring-overlap pairs from shared [[winnow]] fingerprints — what

@@ -681,7 +681,7 @@ object TotalOrder {
     * after, but the window sorts ~one bucket instead of the corpus: the
     * running sum is the prefix (untouched by the prune — it aggregates
     * from the totals branch over ALL buckets) plus an intra-bucket term
-    * over the bucket's own rows, also untouched. TokenBudgetPeek
+    * over the bucket's own rows, also untouched. A timing run
     * measured the unpruned window + downstream materialization as the
     * dominant term of the budget gate at 10× bench sf.
     *

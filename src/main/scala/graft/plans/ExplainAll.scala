@@ -1,34 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for a list of registered gate
   * queries into files (`sbt "runMain graft.plans.ExplainAll <outDir>
-  * <sfDir> <name>[,<name>...]"`), under the SAME session confs the bench
-  * runs with (shuffle partitions = cores, AQE on, 64 MB size-gated
-  * broadcast thresholds) — [[Explain]]'s local[4]/10 MB defaults can plan
-  * a different join strategy than the bench session actually executes,
-  * which is exactly what a committed plan excerpt must not do. One JVM
-  * for the whole list; output files are `<outDir>/<name>.txt`. */
+  * <sfDir> <name>[,<name>...]"`), under the bench's own session
+  * ([[graft.GraftSession]]), so a committed plan excerpt shows the join
+  * strategies the bench actually executes. One JVM for the whole list;
+  * output files are `<outDir>/<name>.txt`; pass one name to inspect a
+  * single gate. */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r15")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val names = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(graft.SparkEntry.allQueries.map(_.name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain-all")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-explain-all")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val byName = graft.SparkEntry.allQueries.map(q => q.name -> q).toMap

@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one registered gate query to completion and report its
   * Spark job / stage / task counts (`sbt "runMain graft.plans.JobCount
   * <name>[,<name>...] [sfDir]"`) under the bench session confs. Wall
@@ -9,25 +7,14 @@ import org.apache.spark.sql.SparkSession
   * task counts are DETERMINISTIC, so they are the right before/after
   * evidence for job-count optimizations (lazy checkpoints, fused
   * passes) — the same reason Bench itself records spills/failed tasks.
-  * Counts are per query with listener-bus drain between queries. */
+  * Counts are per query, read after the listener bus is drained
+  * ([[graft.GraftSession.drainListenerBus]]). */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(Seq("sim_ann_ivf"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-jobcount")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-jobcount")
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     val stages = new java.util.concurrent.atomic.AtomicLong(0)
@@ -70,19 +57,6 @@ object JobCount {
               .addAndGet(m.shuffleReadMetrics.totalBytesRead)
           }
       })
-    // drain the async listener bus before reading counters: the real
-    // waitUntilEmpty (private[spark]) via reflection, a bounded sleep as
-    // fallback — a fixed sleep under-reports on a loaded host (r15 advice)
-    def drainBus(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val busM = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-        val bus = busM.invoke(sc)
-        val wait = bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .get
-        wait.invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(1000) }
     val byName = graft.SparkEntry.allQueries.map(q => q.name -> q).toMap
     names.foreach { n =>
       byName.get(n) match {
@@ -97,7 +71,7 @@ object JobCount {
           val w0 = System.nanoTime()
           q.run(spark, sfDir).count()
           val wall = (System.nanoTime() - w0) / 1e9
-          drainBus()
+          graft.GraftSession.drainListenerBus(spark)
           println(f"[jobcount] $n%-28s jobs=${jobs.get() - j0}%3d " +
             f"stages=${stages.get() - s0}%3d tasks=${tasks.get() - t0}%5d " +
             f"wall=$wall%.3f cpu=${(cpuNs.get() - c0) / 1e9}%.3f")

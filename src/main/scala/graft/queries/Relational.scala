@@ -115,8 +115,8 @@ object Relational {
       // and the absence of a lineitem-side broadcast.
       //
       // The GENERAL fix exists (Tables.analyzeDir + cbo.enabled prices the
-      // build sides from row counts and picks the right side with no hint —
-      // StatsPeek), but full-surface CBO was A/B'd at sf0.1 and REJECTED:
+      // build sides from row counts and picks the right side with no
+      // hint), but full-surface CBO was A/B'd at sf0.1 and REJECTED:
       // +56% total, the dedup family's synthetic intermediates get
       // mispriced (BENCH_NOTES r10). The hint stays: targeted, free, and
       // it protects stat-less sessions where the static estimator still

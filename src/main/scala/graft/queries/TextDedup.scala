@@ -1872,21 +1872,6 @@ object TextDedup {
     }
   )
 
-  /** The winnowing selection (k=3, w=4) as a CTE chain ending in `r`
-    * (rows with rn = 1 are the selected fingerprints) — shared by the
-    * selection gate and the overlap-pairs gate. Emitted WITHOUT the
-    * leading WITH. */
-  /** DuckDB replay of [[graft.operators.CountMin]]: the affine constants
-    * inlined as literals, cells built from the same one-explode-per-row
-    * unnest, estimates as the min over left-joined cells (0 when a cell
-    * was never touched), exact counts from a left join on the token. */
-  /** Recursive-CTE replay of the greedy longest-match subword
-    * segmentation: the step peels the same piece the native kernel
-    * takes — the longest vocab entry prefixing the remaining suffix,
-    * else one character — via a literal length-descending COALESCE
-    * chain (no aggregate/correlated subquery in the recursive term, so
-    * any standard SQL engine runs it). Distinct words segment once;
-    * per-doc stats re-join on the word. */
   /** The shared greedy-segmentation CTE chain (`toks`/`w`/`dw`/`seg`/
     * `done`) of the subword oracles, WITHOUT the leading
     * `WITH RECURSIVE` — `done` holds per-distinct-word pieces (`ps`) and
@@ -2072,6 +2057,13 @@ object TextDedup {
        |$per""".stripMargin
   }
 
+  /** Recursive-CTE replay of the greedy longest-match subword
+    * segmentation: the step peels the same piece the native kernel
+    * takes — the longest vocab entry prefixing the remaining suffix,
+    * else one character — via a literal length-descending COALESCE
+    * chain (no aggregate/correlated subquery in the recursive term, so
+    * any standard SQL engine runs it). Distinct words segment once;
+    * per-doc stats re-join on the word. */
   private def subwordOracle(vocab: Seq[String]): String =
     s"""WITH RECURSIVE
        |${subwordSegCtes(vocab)},
@@ -2105,6 +2097,10 @@ object TextDedup {
        |FROM b WHERE cum_tokens <= $budget
        |ORDER BY doc_id""".stripMargin
 
+  /** DuckDB replay of [[graft.operators.CountMin]]: the affine constants
+    * inlined as literals, cells built from the same one-explode-per-row
+    * unnest, estimates as the min over left-joined cells (0 when a cell
+    * was never touched), exact counts from a left join on the token. */
   private def cmsOracle(depth: Int, width: Int, terms: Seq[String],
       where: String = ""): String = {
     val p = graft.operators.Dedup.minhashP
@@ -2149,6 +2145,10 @@ object TextDedup {
        |ORDER BY term""".stripMargin
   }
 
+  /** The winnowing selection (k=3, w=4) as a CTE chain ending in `r`
+    * (rows with rn = 1 are the selected fingerprints) — shared by the
+    * selection gate and the overlap-pairs gate. Emitted WITHOUT the
+    * leading WITH. */
   private def winnowingCtes: String =
     """t AS (
       |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk

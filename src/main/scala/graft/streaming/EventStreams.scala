@@ -40,15 +40,6 @@ object EventStreams {
       .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
         col("event_type"), col("n_events"), col("total_value"))
 
-  /** Sliding-window per-user activity (10 min window, 5 min slide). */
-  def slidingActivity(events: DataFrame, watermarkDelay: String): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("window_start"), col("user_id"), col("n_events"))
-
   /** Gap-based sessionization with custom state: a session closes after
     * `gapMinutes` of inactivity (tracked by event-time timeout against the
     * watermark). Emits each closed session exactly once. */

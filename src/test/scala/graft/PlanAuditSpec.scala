@@ -305,8 +305,9 @@ class PlanAuditSpec extends SparkSpec {
     // nested-loop or a still-broadcast join
     val docs = graft.core.Tables(spark, dir, "documents")
     val plan = planWithBroadcastDisabled(
-      graft.operators.Dedup.containmentPairsPrefix(
-        graft.operators.Dedup.tokenSet(docs, "doc_id", "text"), 0.8))
+      graft.operators.Dedup.containmentPairsPrefixArr(
+        docs.select(col("doc_id"), sort_array(array_distinct(
+          graft.operators.TextOps.tokens(col("text")))).as("toks")), 0.8))
     assert(!plan.contains("BroadcastHashJoin"),
       "containment-prefix joins must not be forced-broadcast:\n" + plan.take(3000))
     assert(!plan.contains("BroadcastNestedLoopJoin")

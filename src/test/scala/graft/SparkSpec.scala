@@ -42,8 +42,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** `f`'s result and the number of Spark jobs it started on this thread
     * (tagged with a one-off job group, so stray jobs of other threads do
-    * not count). The listener bus is drained before counting, through its
-    * `waitUntilEmpty` (private to Spark, so reached by reflection). */
+    * not count). The listener bus is drained before counting
+    * ([[GraftSession.drainListenerBus]]). */
   def jobsIn[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
     val group = s"jobsIn-${java.util.UUID.randomUUID}"
@@ -57,10 +57,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sc.setJobGroup(group, group)
     try {
       val out = f
-      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .get.invoke(bus)
+      GraftSession.drainListenerBus(spark)
       (out, jobs.get())
     } finally {
       sc.clearJobGroup()

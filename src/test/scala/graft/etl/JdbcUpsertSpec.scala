@@ -69,6 +69,31 @@ class JdbcUpsertSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  test("upsert rolls back its DELETE when the INSERT violates a constraint") {
+    val conn = DriverManager.getConnection(url)
+    val st = conn.createStatement()
+    st.executeUpdate(
+      """CREATE TABLE "dim_checked" (
+        |  "currency_id" INT, "currency_code" VARCHAR(3),
+        |  "currency_name" VARCHAR(64),
+        |  CHECK ("currency_code" <> 'BAD'))""".stripMargin)
+    st.close(); conn.close()
+
+    val sink = new JdbcWarehouseSink(url, props, batchSize = 2)
+    sink.upsert("dim_checked",
+      dim(Seq((1, "AAA", "Alpha"), (2, "BBB", "Beta"))), Seq("currency_id"))
+    // key 1 matches, so the DELETE removes it before the INSERT of its
+    // replacement trips the CHECK; key 3 is new
+    intercept[java.sql.SQLException] {
+      sink.upsert("dim_checked",
+        dim(Seq((1, "BAD", "Alpha-bad"), (3, "CCC", "Gamma"))), Seq("currency_id"))
+    }
+    val back = spark.read.jdbc(url, "\"dim_checked\"", props)
+      .collect().map(r => (r.getInt(0), r.getString(2))).toMap
+    assert(back === Map(1 -> "Alpha", 2 -> "Beta"),
+      "a failed upsert must leave the matched rows in place")
+  }
+
   test("scd2Load closes current versions and opens new ones with effective dating") {
     val conn = DriverManager.getConnection(url)
     val st = conn.createStatement()

@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Oracles, Similarity}
 
 /** Native codegen'd cosine vs the higher-order-function fold: bit-identical
   * on real embeddings, SQL-reachable, null-safe. */
@@ -17,7 +17,7 @@ class CosineSimilaritySpec extends SparkSpec {
     val pairs = emb.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid"))
     val diffs = pairs.select(
         Similarity.cosine(col("qe"), col("embedding")).as("native"),
-        Similarity.cosineFold(col("qe"), col("embedding")).as("fold"))
+        Oracles.cosineFold(col("qe"), col("embedding")).as("fold"))
       .filter(col("native") =!= col("fold"))
       .count()
     assert(diffs === 0L)

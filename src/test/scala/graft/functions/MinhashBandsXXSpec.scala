@@ -4,9 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** [[MinhashBandsXX]] — the fused xxhash64-family band kernel. The
-  * load-bearing test is BYTE PARITY with the composed production plan it
-  * replaced (`Dedup.minhashSignaturesAgg` → `Dedup.lshBandsFromSig`,
-  * i.e. per-token `xxhash64(w, lit(i))` lane mins and
+  * load-bearing test is BYTE PARITY with the definitional column form
+  * it replaced (per-token `xxhash64(w, lit(i))` lane mins and
   * `xxhash64(sig_slice..., lit(b))` band hashes): the lsh/shingle gates
   * are rows-only (xxhash64 is not replayable in DuckDB), so this parity
   * pin — together with XxFamilyParitySpec's fold-rule pin — is what
@@ -16,18 +15,19 @@ class MinhashBandsXXSpec extends SparkSpec {
 
   private val (numHashes, bands) = (64, 16)
 
-  /** The former composed plan over the same documents — signature
-    * aggregate + column-built band hashes, via the production helpers
-    * themselves so the comparison cannot drift from what shipped. */
+  /** The frozen reference over the same documents, built from plain
+    * columns: one `min(xxhash64(w, lit(i)))` aggregate per lane, then
+    * `xxhash64(lane slice :+ lit(b))` per band, in band order. */
   private def composedBands(docs: org.apache.spark.sql.DataFrame) = {
     val sets = graft.operators.Dedup.tokenSet(docs, "doc_id", "text")
-    graft.operators.Dedup.lshBandsFromSig(
-        graft.operators.Dedup.minhashSignaturesAgg(sets, numHashes),
-        numHashes, bands)
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("band_idx"),
-        col("band_hash")))).as("bs"))
-      .select(col("doc_id"), transform(col("bs"), _("band_hash")).as("bhs"))
+    val lanes = (0 until numHashes).map(i =>
+      min(xxhash64(col("w"), lit(i))).as(s"sig_$i"))
+    val rows = numHashes / bands
+    val bandHashes = (0 until bands).map { b =>
+      xxhash64((0 until rows).map(r => col(s"sig_${b * rows + r}")) :+ lit(b): _*)
+    }
+    sets.groupBy("doc_id").agg(lanes.head, lanes.tail: _*)
+      .select(col("doc_id"), array(bandHashes: _*).as("bhs"))
   }
 
   private def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =

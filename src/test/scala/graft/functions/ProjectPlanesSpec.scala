@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Oracles, Similarity}
 
 /** Native fused mat-vec projection vs the per-plane HOF fold:
   * bit-identical (vec_id, j, v) rows on real embeddings, and the fold's
@@ -16,7 +16,7 @@ class ProjectPlanesSpec extends SparkSpec {
     val emb = graft.core.Tables(spark, dir, "embeddings")
     val dim = emb.selectExpr("size(embedding)").head().getInt(0)
     val native = Similarity.randomProjection(emb, k = 8, dim = dim)
-    val fold = Similarity.randomProjectionFold(emb, k = 8, dim = dim)
+    val fold = Oracles.randomProjectionFold(emb, k = 8, dim = dim)
     val joined = native.as("n")
       .join(fold.as("f"), Seq("vec_id", "j"), "full_outer")
       .filter(col("n.v") =!= col("f.v") ||
@@ -34,7 +34,7 @@ class ProjectPlanesSpec extends SparkSpec {
       (4L, None)
     ).toDF("vec_id", "embedding")
     val native = Similarity.randomProjection(df, k = 4, dim = 2)
-    val fold = Similarity.randomProjectionFold(df, k = 4, dim = 2)
+    val fold = Oracles.randomProjectionFold(df, k = 4, dim = 2)
     assert(native.count() === 16L, "every vector must emit k rows")
     val n = native.orderBy("vec_id", "j").collect()
     val f = fold.orderBy("vec_id", "j").collect()

@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Oracles, Similarity}
 
 /** Native fused int8 quantization vs the HOF column-algebra form:
   * bit-identical scale and qvec on real embeddings and on adversarial
@@ -14,7 +14,7 @@ class QuantizeInt8Spec extends SparkSpec {
   test("native kernel matches the HOF fold bit for bit on real embeddings") {
     val emb = graft.core.Tables(spark, dir, "embeddings")
     val native = Similarity.quantizeInt8(emb)
-    val fold = Similarity.quantizeInt8Fold(emb)
+    val fold = Oracles.quantizeInt8Fold(emb)
     val diffs = native.as("n").join(fold.as("f"), "vec_id")
       .filter(col("n.scale") =!= col("f.scale") ||
         col("n.qvec") =!= col("f.qvec"))
@@ -33,7 +33,7 @@ class QuantizeInt8Spec extends SparkSpec {
       (3L, Array.empty[Float])
     ).toDF("vec_id", "embedding")
     val native = Similarity.quantizeInt8(df)
-    val fold = Similarity.quantizeInt8Fold(df)
+    val fold = Oracles.quantizeInt8Fold(df)
     val n = native.orderBy("vec_id").collect()
     val f = fold.orderBy("vec_id").collect()
     assert(n.toSeq === f.toSeq)

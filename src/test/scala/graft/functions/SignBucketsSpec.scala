@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Oracles, Similarity}
 
 /** Native fused sign-projection bucketing vs the per-plane HOF fold:
   * bit-identical bucket ids on real embeddings and on the fold form's
@@ -17,7 +17,7 @@ class SignBucketsSpec extends SparkSpec {
     val diffs = emb
       .select(col("vec_id"),
         Similarity.bucketId(col("embedding"), planes).as("native"),
-        Similarity.bucketIdFold(col("embedding"), planes).as("fold"))
+        Oracles.bucketIdFold(col("embedding"), planes).as("fold"))
       .filter(col("native") =!= col("fold") ||
         col("native").isNull =!= col("fold").isNull)
       .count()
@@ -42,7 +42,7 @@ class SignBucketsSpec extends SparkSpec {
     val out = df
       .select(col("vec_id"),
         Similarity.bucketId(col("embedding"), twoPlanes).as("native"),
-        Similarity.bucketIdFold(col("embedding"), twoPlanes).as("fold"))
+        Oracles.bucketIdFold(col("embedding"), twoPlanes).as("fold"))
       .orderBy("vec_id").collect()
     out.foreach { r =>
       assert(r.isNullAt(1) === r.isNullAt(2), s"null parity broke: $r")

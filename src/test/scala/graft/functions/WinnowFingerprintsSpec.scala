@@ -1,14 +1,14 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.operators.TextOps
+import graft.operators.{Oracles, TextOps}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.Row
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The fused [[WinnowFingerprints]] kernel against the composed
-  * column-algebra pipeline ([[TextOps.winnowComposed]]) — same two-
+  * column-algebra pipeline (`Oracles.winnowComposed`) — same two-
   * implementation equality discipline as the portable MinHash twins and
   * ComponentsPropertySpec. The composed form is what the DuckDB oracle
   * CTEs replay, so fused == composed certifies the kernel against the
@@ -22,13 +22,13 @@ class WinnowFingerprintsSpec extends SparkSpec {
   private def both(rows: Seq[Row], k: Int, w: Int): (Set[Seq[Any]], Set[Seq[Any]]) = {
     val df = mkDf(schema, rows)
     (cells(TextOps.winnow(df, "doc_id", "text", k, w)),
-      cells(TextOps.winnowComposed(df, "doc_id", "text", k, w)))
+      cells(Oracles.winnowComposed(df, "doc_id", "text", k, w)))
   }
 
   test("fused == composed on the sf0.001 documents table (gate params)") {
     val docs = graft.core.Tables(spark, "/root/testdata/sf0.001", "documents")
     val fused = cells(TextOps.winnow(docs, "doc_id", "text", 3, 4))
-    val composed = cells(TextOps.winnowComposed(docs, "doc_id", "text", 3, 4))
+    val composed = cells(Oracles.winnowComposed(docs, "doc_id", "text", 3, 4))
     assert(fused.nonEmpty)
     assert(fused === composed)
   }

@@ -33,11 +33,17 @@ class OperatorsSpec extends SparkSpec {
     // SET (same candidates reach verification) while emitting each pair
     // exactly ONCE (the whole point: no dedup exchange needed)
     val scoped = docs.filter(col("doc_id") < 100)
-    val sets = Dedup.tokenSet(scoped, "doc_id", "text")
-    val bands = Dedup.lshBandsFromSig(
-      Dedup.minhashSignaturesAgg(sets, 64), 64, 16, carryAll = true)
-    val legacy = Dedup.lshCandidates(bands.drop("bhs"))
-      .select("id1", "id2").collect()
+    val (bands, _) = Dedup.xxSketch(scoped, "doc_id", "text", 64, 16,
+      carryAll = true)
+    val narrow = bands.drop("bhs")
+    val legacy = narrow.as("a")
+      .join(narrow.as("b"),
+        col("a.band_idx") === col("b.band_idx")
+          && col("a.band_hash") === col("b.band_hash")
+          && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id"), col("b.doc_id"))
+      .distinct()
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val fcRows = Dedup.lshCandidatesFirstCollision(bands)
       .select("id1", "id2").collect()
@@ -326,7 +332,7 @@ class OperatorsSpec extends SparkSpec {
   test("simhash: identical docs collide at hamming 0; near-dup join finds them") {
     val dupes = docs.limit(20)
       .union(docs.limit(20).withColumn("doc_id", col("doc_id") + 10000))
-    val sigs = Dedup.simhash64(dupes, "doc_id", "text")
+    val sigs = Dedup.simhashSig(dupes, "doc_id", "text", xxhash64(_), 64)
     val pairs = Dedup.simhashNearDups(sigs, maxHamming = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // every doc pairs with its shifted twin at distance 0
@@ -353,7 +359,7 @@ class OperatorsSpec extends SparkSpec {
     // both chunkings are complete for maxHamming=3 (< 4 and < 8 chunks),
     // so after the hamming filter the pair sets must be identical — the
     // narrower chunks only change candidate-join selectivity
-    val sigs = Dedup.simhash64(docs, "doc_id", "text")
+    val sigs = Dedup.simhashSig(docs, "doc_id", "text", xxhash64(_), 64)
     val p4 = Dedup.simhashNearDups(sigs, maxHamming = 3, chunks = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val p8 = Dedup.simhashNearDups(sigs, maxHamming = 3, chunks = 8)
@@ -368,7 +374,7 @@ class OperatorsSpec extends SparkSpec {
     // candidate set for its stronger d<8 completeness guarantee. Recall
     // parity at d<=3 is asserted in the test above; here we pin the cost
     // side so a future "more chunks is free" change trips an assertion.
-    val sigs = Dedup.simhash64(docs, "doc_id", "text").cache()
+    val sigs = Dedup.simhashSig(docs, "doc_id", "text", xxhash64(_), 64).cache()
     try {
       val c4 = Dedup.simhashCandidates(sigs, chunks = 4).count()
       val c8 = Dedup.simhashCandidates(sigs, chunks = 8).count()
@@ -379,7 +385,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("simhash pigeonhole: rejects maxHamming >= chunks (incomplete)") {
-    val sigs = Dedup.simhash64(docs.limit(5), "doc_id", "text")
+    val sigs = Dedup.simhashSig(docs.limit(5), "doc_id", "text", xxhash64(_), 64)
     intercept[IllegalArgumentException] {
       Dedup.simhashNearDups(sigs, maxHamming = 4, chunks = 4)
     }
@@ -744,7 +750,10 @@ class OperatorsSpec extends SparkSpec {
       def key(r: org.apache.spark.sql.Row) =
         (r.getLong(0), r.getLong(1), r.getDouble(2))
       val exact = Dedup.containmentPairs(sets, t).collect().map(key).toSet
-      val prefix = Dedup.containmentPairsPrefix(sets, t).collect().map(key).toSet
+      val toks = sets.groupBy("doc_id")
+        .agg(sort_array(collect_set(col("w"))).as("toks"))
+      val prefix = Dedup.containmentPairsPrefixArr(toks, t)
+        .collect().map(key).toSet
       assert(prefix === exact, s"threshold $t: prefix path diverged")
     }
   }

@@ -3,7 +3,7 @@
 #
 # Usage:
 #   tools/preflight.sh              # compile + unit specs
-#   tools/preflight.sh --fast       # compile only
+#   tools/preflight.sh --fast       # compile only (sbt + benchmark harness)
 #   tools/preflight.sh --gate       # compile + specs + sf0.001 Verify + check.py
 #
 # Exit non-zero on any failure; commit only when this exits 0.
@@ -23,6 +23,12 @@ export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 
 echo "[preflight] sbt compile"
 sbt -batch compile Test/compile < /dev/null
+
+# The benchmark harness compiles src/main together with perfbench/src on its
+# own, without sbt; build it the same way so a change that breaks the
+# harness fails here and not first in a benchmark run.
+echo "[preflight] perfbench harness build"
+python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()'
 
 if [[ "$mode" != "--fast" ]]; then
   echo "[preflight] sbt test"
