@@ -2,17 +2,29 @@ package graft.etl
 
 import java.sql.Timestamp
 import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.collection.immutable.ListMap
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.{col, count, lit, max}
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 /** E2 — watermark: max(created_at), max(last_updated) over the previously
   * landed table. The reference implements MAX as set-dedup + sorted-insert +
   * take-last (src/extract.py:176-199); that is literally distinct→sort→last
-  * = MAX, so here it is a 2-value aggregate — a partial (map-side combined)
-  * agg that returns one row to the driver regardless of table size. */
+  * = MAX.
+  *
+  * The landed table is always the latest delta, so its marks are that
+  * delta's maxima. [[land]] observes them during the write itself and
+  * stores them beside the table ([[TableStore.putWatermark]]), tagged with
+  * the table's version after the write; [[stored]] hands them back on the
+  * driver while that version still holds. [[of]], a 2-value aggregate
+  * (2 Spark jobs under AQE), recomputes them where no valid sidecar is
+  * left: none was stored, a foreign writer or a failed write changed the
+  * table, or the store keeps no versions. */
 object Watermark {
   final case class Marks(created: Timestamp, updated: Timestamp)
 
@@ -23,13 +35,67 @@ object Watermark {
     StructField("created_at", TimestampType),
     StructField("last_updated", TimestampType)))
 
-  def of(landed: DataFrame): Option[Marks] = {
-    val row = landed
-      .agg(max(col("created_at")).as("c"), max(col("last_updated")).as("u"))
-      .head()
+  private val maxima = Seq(max(col("created_at")), max(col("last_updated")))
+
+  /** Marks from `row`'s first two fields; `None` when both are null. */
+  private def marks(row: Row): Option[Marks] =
     if (row.isNullAt(0) && row.isNullAt(1)) None
     else Some(Marks(row.getTimestamp(0), row.getTimestamp(1)))
+
+  def of(landed: DataFrame): Option[Marks] = marks(landed.agg(maxima.head, maxima.tail: _*).head())
+
+  /** The sidecar form: a layout tag, the table version it describes and
+    * each mark in epoch microseconds (`null` for a null mark, `none` for
+    * no marks). Microseconds are the timestamp type's own precision;
+    * `Timestamp.getTime` millis would lose the sub-millisecond part and
+    * make the strict `>` re-land those rows. */
+  private[etl] def encode(version: String, marks: Option[Marks]): String = {
+    def us(t: Timestamp) = if (t == null) "null" else DateTimeUtils.fromJavaTimestamp(t).toString
+    s"graft-watermark/1 $version " + marks.fold("none")(m => s"${us(m.created)} ${us(m.updated)}")
   }
+
+  /** The marks stored beside `table` if they describe its `version`;
+    * `None` when there are none, they describe another version, or they
+    * are not in [[encode]]'s form. */
+  private[etl] def stored(store: TableStore, table: String,
+      version: Option[String]): Option[Option[Marks]] = {
+    def ts(s: String) = if (s == "null") null else DateTimeUtils.toJavaTimestamp(s.toLong)
+    for {
+      v <- version
+      sidecar <- store.watermark(table)
+      marks <- Try(sidecar.split(" ").toSeq match {
+        case Seq("graft-watermark/1", `v`, "none") => Some(None)
+        case Seq("graft-watermark/1", `v`, c, u) => Some(Some(Marks(ts(c), ts(u))))
+        case _ => None
+      }).toOption.flatten
+    } yield marks
+  }
+
+  /** Replaces `table` with `delta` through one write that also observes
+    * its maxima and row count (Catalyst's `CollectMetrics`: no extra job),
+    * then stores the marks beside it. A write of 0 rows (the source lost
+    * rows between probe and scan) keeps `before`, so the watermark does not
+    * fall back to "none" and turn the next run into a full scan. The old
+    * sidecar is dropped first, so a failed write leaves none. Returns the
+    * rows written and the marks after, or `None` if the observation never
+    * arrives; then no sidecar is stored and the next run recomputes the
+    * marks. */
+  private[etl] def land(store: TableStore, table: String, delta: DataFrame,
+      before: Option[Marks]): Option[(Long, Option[Marks])] = {
+    store.putWatermark(table, None)
+    val observation = Observation()
+    store.write(table, delta.observe(observation, maxima.head, maxima.tail :+ count(lit(1)): _*))
+    Try(Await.result(observation.future, observationWait)).toOption.map { row =>
+      val rows = row.getLong(2)
+      val after = if (rows == 0) before else marks(row)
+      store.version(table).foreach(v => store.putWatermark(table, Some(encode(v, after))))
+      (rows, after)
+    }
+  }
+
+  /** How long [[land]] waits for a successful write's observation, which
+    * the listener bus delivers just after the write returns. */
+  private val observationWait = 60.seconds
 }
 
 /** Runs one side-effecting action per table on a driver thread pool, so
@@ -62,32 +128,55 @@ private[etl] object PerTable {
 /** E1+E3 — per-table full-vs-incremental ingest (reference:
   * src/extract.py:202-238, :259-295).
   *
-  * Per table: no landed parquet → full scan; else compute the watermark
-  * from the landed data and pull only rows with
-  * `created_at > c OR last_updated > u` (strict `>`, pushed down to the
-  * source). Empty deltas are skipped, not written as empty files
-  * (SURVEY.md §7.3-8). The landed object is REPLACED by each non-empty
-  * delta, exactly like the reference's same-key upload — the watermark
-  * therefore advances off the latest delta only, which is sound because
-  * each delta's max dominates the previous watermark.
+  * Per table: no landed table → full scan; else the watermark of the
+  * landed table, and only rows with `created_at > c OR last_updated > u`
+  * (strict `>`, pushed down to the source). Empty deltas are skipped, not
+  * written as empty files (SURVEY.md §7.3-8). The landed object is
+  * REPLACED by each non-empty delta, exactly like the reference's same-key
+  * upload, so the watermark is always the latest delta's maxima.
+  *
+  * All per-table bookkeeping is answered on the driver where it can be:
+  * - the watermark comes from the sidecar [[Watermark.land]] stored with
+  *   the last delta ([[Watermark.stored]]); only where none is valid does
+  *   [[Watermark.of]] aggregate the landed table, and then the result is
+  *   stored for the next run;
+  * - whether a delta exists comes from the source's own metadata
+  *   ([[OltpSource.marks]]); only a source that cannot say is probed with
+  *   `isEmpty`, which mirrors `len(results) > 0`
+  *   (reference: src/extract.py:230-236);
+  * - a delta lands through one write that observes its marks and rows.
+  * So an unchanged table costs no Spark job when both answers are there,
+  * and a changed one costs its write.
   */
 final class IngestJob(source: OltpSource, landed: TableStore) {
+  import IngestJob.Outcome
 
-  private def ingestOne(table: String): Option[String] = {
-    val delta: DataFrame =
-      if (!landed.exists(table)) source.full(table)
-      else Watermark.of(landed.read(table, Watermark.schema)) match {
-        case Some(m) => source.incremental(table, m.created, m.updated)
-        case None    => source.full(table)
+  private def ingestOne(table: String): Outcome = {
+    val version = landed.version(table)
+    val (before, marksFrom) =
+      if (!landed.exists(table)) (None, "none")
+      else Watermark.stored(landed, table, version) match {
+        case Some(m) => (m, "sidecar")
+        case None => (Watermark.of(landed.read(table, Watermark.schema)), "aggregate")
       }
-    // isEmpty is a cheap limit-1 job; mirrors `len(results) > 0`
-    // (reference: src/extract.py:230-236).
-    if (delta.isEmpty) None
-    else { landed.write(table, delta); Some(table) }
+    lazy val delta: DataFrame =
+      before.fold(source.full(table))(m => source.incremental(table, m.created, m.updated))
+    val probe = source.marks(table)
+    val outcome = Outcome(table, marksFrom, if (probe.isDefined) "source" else "isEmpty", before)
+    if (probe.fold(!delta.isEmpty)(_.hasDelta(before)))
+      outcome.copy(changed = true, observed = Watermark.land(landed, table, delta, before))
+    else {
+      // version was read before the aggregate, so a table changed since
+      // stores marks that no later run accepts
+      if (marksFrom == "aggregate")
+        version.foreach(v => landed.putWatermark(table, Some(Watermark.encode(v, before))))
+      outcome
+    }
   }
 
   /** Runs one ingest round; returns the tables that produced a delta, in
-    * `listTables()` order.
+    * `listTables()` order, and logs the round's report
+    * ([[IngestJob.report]]) as one JSON line at INFO.
     *
     * Each table is independent (its own watermark read, delta scan, and
     * write target), so the per-table pipelines run concurrently through
@@ -104,16 +193,59 @@ final class IngestJob(source: OltpSource, landed: TableStore) {
     * land (later-listed tables included) — so callers can reconcile
     * state instead of guessing which side-effects happened. */
   def run(): Seq[String] = {
-    val results = PerTable.run(SparkSession.active, source.listTables())(ingestOne)
+    val tables = source.listTables()
+    val results = PerTable.run(SparkSession.active, tables)(ingestOne)
+    if (IngestJob.log.isInfoEnabled) IngestJob.log.info(IngestJob.report(tables.zip(results)))
+    val changed = results.collect { case Success(o) if o.changed => o.table }
     results.collectFirst { case Failure(e) =>
-      throw new IngestJob.PartialIngestException(
-        results.collect { case Success(Some(t)) => t }, e)
+      throw new IngestJob.PartialIngestException(changed, e)
     }
-    results.flatMap(_.get)
+    changed
   }
 }
 
 object IngestJob {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[IngestJob])
+
+  /** One table's round: where its marks came from (`sidecar`, `aggregate`
+    * or `none` for a table not yet landed), how the delta was probed
+    * (`source` or `isEmpty`), the marks before, whether a delta landed and,
+    * if so, [[Watermark.land]]'s rows and marks after (`None` when its
+    * observation never arrived). */
+  private[etl] final case class Outcome(table: String, marksFrom: String, probe: String,
+      before: Option[Watermark.Marks], changed: Boolean = false,
+      observed: Option[(Long, Option[Watermark.Marks])] = None)
+
+  /** The round as one JSON object: `{"extract": [...]}` with one entry per
+    * table in table order, holding `table`, `changed`, `rows` landed,
+    * `marks_before` and `marks_after` (`{"created_at", "last_updated"}` as
+    * ISO-8601 UTC instants, or null for no marks), `marks_from` and
+    * `probe`; a failed table holds `table` and `error` only. Every value
+    * comes from the sidecar, the source probe or the write's observation,
+    * so the report starts no Spark job. `rows` and `marks_after` are null
+    * where a landed delta's observation never arrived. */
+  private[etl] def report(results: Seq[(String, Try[Outcome])]): String = {
+    def marks(m: Option[Watermark.Marks]): AnyRef = m.map { m =>
+      def iso(t: Timestamp): AnyRef = Option(t).map(_.toInstant.toString).orNull
+      Map("created_at" -> iso(m.created), "last_updated" -> iso(m.updated)).asJava
+    }.orNull
+    val entries = results.map {
+      case (t, Failure(e)) => ListMap("table" -> t, "error" -> String.valueOf(e.getMessage))
+      case (_, Success(o)) =>
+        val (rows, after) =
+          if (!o.changed) (Long.box(0L), marks(o.before))
+          else o.observed.fold[(AnyRef, AnyRef)]((null, null)) {
+            case (n, m) => (Long.box(n), marks(m))
+          }
+        ListMap("table" -> o.table, "changed" -> Boolean.box(o.changed), "rows" -> rows,
+          "marks_before" -> marks(o.before), "marks_after" -> after,
+          "marks_from" -> o.marksFrom, "probe" -> o.probe)
+    }
+    json.writeValueAsString(Map("extract" -> entries.map(_.asJava).asJava).asJava)
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** An ingest round failed for at least one table AFTER sibling tables
     * already landed their deltas (await-all semantics). `landed` lists
     * the tables whose writes completed, in table order; the first
@@ -290,7 +422,8 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     * (conformed, writer-capped) in the `<table>_stage` table through the
     * parallel batched-insert path, run the two statements `statements`
     * builds in ONE transaction (rolled back if either fails, so a failed
-    * second statement leaves the first undone), then drop the stage.
+    * second statement leaves the first undone), then drop the stage,
+    * whether the transaction committed or rolled back.
     * `statements` receives the quoted stage name, the quoted column list
     * and the correlated `EXISTS` predicate that matches a `table` row to
     * a stage row on `keys`. */
@@ -308,21 +441,28 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     val matched = s"EXISTS (SELECT 1 FROM $stage s WHERE " +
       keys.map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ") + ")"
     val (first, second) = statements(stage, cols, matched)
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
+    JdbcSource.withConnection(url, props, table) { conn =>
       conn.setAutoCommit(false)
       val st = conn.createStatement()
+      // the statement that failed is the error the caller sees; a rollback
+      // or stage drop that fails after it (a broken connection) is attached
+      var failure: Throwable = null
       try {
         st.executeUpdate(first)
         st.executeUpdate(second)
         conn.commit()
       } catch {
-        case e: Throwable => conn.rollback(); throw e
-      } finally st.close()
-      val drop = conn.createStatement()
-      try { drop.executeUpdate(s"DROP TABLE $stage"); conn.commit() }
-      finally drop.close()
-    } finally conn.close()
+        case e: Throwable =>
+          failure = e
+          try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+          throw e
+      } finally {
+        // committed or rolled back, the stage goes
+        try { st.executeUpdate(s"DROP TABLE $stage"); conn.commit() }
+        catch { case d: Throwable if failure != null => failure.addSuppressed(d) }
+        finally st.close()
+      }
+    }
   }
 
   /** [[upsert]] with the star schema's declared natural keys

@@ -1,9 +1,11 @@
 package graft.etl
 
-import java.sql.Timestamp
+import java.sql.{Connection, Timestamp}
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JdbcUtils}
+import scala.jdk.CollectionConverters._
 
 /** OLTP source abstraction (reference ops S1–S3, src/extract.py:77-119).
   * JDBC is one implementation behind the trait; a parquet-backed source
@@ -17,9 +19,34 @@ trait OltpSource {
   /** S3 — incremental scan (CDC-lite): strict-`>` timestamp watermark on
     * `created_at OR last_updated` (reference: src/extract.py:110-112). */
   def incremental(table: String, created: Timestamp, updated: Timestamp): DataFrame
+
+  /** What the source itself knows about `table` without a Spark job: its
+    * row count and the maxima of `created_at` and `last_updated`, from
+    * which [[OltpSource.TableMarks.hasDelta]] decides whether a scan
+    * returns a row. `None`, the default, means the source cannot say, and
+    * extract probes the delta frame with `isEmpty` instead. */
+  def marks(table: String): Option[OltpSource.TableMarks] = None
 }
 
 object OltpSource {
+  /** A table's row count and watermark-column maxima (`None` where every
+    * value is null), as [[OltpSource.marks]] reports them. */
+  final case class TableMarks(rows: Long, created: Option[Timestamp],
+      updated: Option[Timestamp]) {
+
+    /** Whether the scan extract runs against the landed marks `since`
+      * returns a row: with no marks that is the full scan, so any row; with
+      * marks it is [[deltaFilter]], so a maximum strictly past its mark. A
+      * null mark is never exceeded, as `col > NULL` never holds. */
+    def hasDelta(since: Option[Watermark.Marks]): Boolean = since match {
+      case None => rows > 0
+      case Some(m) => exceeds(created, m.created) || exceeds(updated, m.updated)
+    }
+
+    private def exceeds(max: Option[Timestamp], mark: Timestamp) =
+      mark != null && max.exists(_.after(mark))
+  }
+
   /** Shared incremental predicate so both implementations agree on the
     * strict-`>` OR semantics. For JDBC, Catalyst pushes this filter into
     * the remote query (predicate pushdown — SURVEY.md §4). */
@@ -39,6 +66,13 @@ final class ParquetSource(spark: SparkSession, dir: String) extends OltpSource {
     }
   override def incremental(table: String, created: Timestamp, updated: Timestamp): DataFrame =
     OltpSource.deltaFilter(full(table), created, updated)
+
+  /** From the footers' row-group statistics ([[ParquetStore.timestampMaxima]]);
+    * `None` for files without them, such as Spark's default INT96. */
+  override def marks(table: String): Option[OltpSource.TableMarks] =
+    store.timestampMaxima(table, Seq("created_at", "last_updated")).map {
+      case (rows, Seq(c, u)) => OltpSource.TableMarks(rows, c, u)
+    }
 }
 
 /** Per-table parallel-scan spec for [[JdbcSource]]: Spark's partitioned
@@ -87,8 +121,13 @@ final class JdbcSource(spark: SparkSession, url: String, props: Properties,
     extends OltpSource {
 
   override def listTables(): Seq[String] =
-    spark.read.jdbc(url, catalogQuery, props)
-      .collect().map(_.getString(0)).toSeq.sorted
+    JdbcSource.withConnection(url, props, catalogQuery) { conn =>
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery(s"SELECT * FROM $catalogQuery")
+        Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toSeq
+      } finally st.close()
+    }.sorted
 
   /** Identifiers are double-quoted, so table names must match the
     * catalog's exact case (what listTables returns) — this is what makes
@@ -138,4 +177,12 @@ object JdbcSource {
   /** Derby (embedded) equivalent, used by the JDBC integration spec. */
   val derbyCatalogQuery: String =
     "(SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLETYPE = 'T') t"
+
+  /** `f` over one driver-side connection, opened as Spark's JDBC reader
+    * opens its own: the class the `driver` property names is loaded and
+    * registered first, so it connects before any Spark read has run.
+    * `table` is the relation the options describe. */
+  private[etl] def withConnection[T](url: String, props: Properties, table: String)(
+      f: Connection => T): T =
+    JdbcUtils.withConnection(new JDBCOptions(url, table, props.asScala.toMap))(f)
 }

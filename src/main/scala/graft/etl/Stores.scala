@@ -1,10 +1,18 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.{PrimitiveType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -14,9 +22,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * any Hadoop-FS URI (local path in tests, s3a:// on a cluster) — the same
   * path-prefix indirection the reference's tests exploit (SURVEY.md §5).
   *
-  * Change detection is optional: [[version]] and the stamp pair default to
-  * "unknown" and "no stamp", which makes [[TransformJob]] rebuild every
-  * output on every run, as a store without them always did.
+  * Change detection is optional: [[version]], the stamp pair and the
+  * watermark pair default to "unknown", "no stamp" and "no watermark",
+  * which makes [[TransformJob]] rebuild every output and [[IngestJob]]
+  * recompute every watermark on every run, as a store without them always
+  * did.
   */
 trait TableStore {
   def exists(name: String): Boolean
@@ -41,6 +51,14 @@ trait TableStore {
   /** Stores `stamp` beside `name`, or removes it when `None`. The default
     * keeps no stamps, so [[stamp]] stays `None`. */
   def putStamp(name: String, stamp: Option[String]): Unit = ()
+
+  /** The watermark last stored beside `name` by [[putWatermark]], if it is
+    * still there ([[Watermark.encode]] gives its form). */
+  def watermark(name: String): Option[String] = None
+
+  /** Stores `marks` beside `name`, or removes them when `None`. The
+    * default keeps none, so [[watermark]] stays `None`. */
+  def putWatermark(name: String, marks: Option[String]): Unit = ()
 }
 
 /** Parquet-directory store: `<root>/<name>.parquet/` (a parquet dataset per
@@ -49,10 +67,10 @@ trait TableStore {
   *
   * [[version]] hashes a driver-side listing of the data files (path,
   * size, mtime). Spark names every part file with a per-write UUID,
-  * so each overwrite or append yields a new version. The stamp is the
-  * hidden file `<name>.parquet/_graft_stamp`: Spark's readers skip
-  * `_`-prefixed files, and an overwrite deletes the directory and the
-  * stamp with it. */
+  * so each overwrite or append yields a new version. The stamp and the
+  * watermark are the hidden files `<name>.parquet/_graft_stamp` and
+  * `_graft_watermark`: Spark's readers skip `_`-prefixed files, and an
+  * overwrite deletes the directory and both sidecars with it. */
 final class ParquetStore(spark: SparkSession, root: String) extends TableStore {
 
   private def path(name: String) = s"$root/$name.parquet"
@@ -61,7 +79,7 @@ final class ParquetStore(spark: SparkSession, root: String) extends TableStore {
 
   private def fs = new Path(root).getFileSystem(conf)
 
-  private def stampPath(name: String) = new Path(path(name), "_graft_stamp")
+  private def sidecar(name: String, kind: String) = new Path(path(name), s"_graft_$kind")
 
   /** Spark's rule for files and directories its readers skip. */
   private def hidden(n: String) =
@@ -127,20 +145,91 @@ final class ParquetStore(spark: SparkSession, root: String) extends TableStore {
       .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").mkString("\n")))
   }
 
-  override def stamp(name: String): Option[String] = {
-    val p = stampPath(name)
+  private def readSidecar(p: Path): Option[String] =
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
     }
+
+  private def putSidecar(p: Path, content: Option[String]): Unit = content match {
+    case Some(s) =>
+      val out = fs.create(p, true)
+      try out.write(s.getBytes(UTF_8)) finally out.close()
+    case None => fs.delete(p, false)
   }
 
-  override def putStamp(name: String, stamp: Option[String]): Unit = stamp match {
-    case Some(s) =>
-      val out = fs.create(stampPath(name), true)
-      try out.write(s.getBytes(UTF_8)) finally out.close()
-    case None => fs.delete(stampPath(name), false)
+  override def stamp(name: String): Option[String] = readSidecar(sidecar(name, "stamp"))
+
+  override def putStamp(name: String, stamp: Option[String]): Unit =
+    putSidecar(sidecar(name, "stamp"), stamp)
+
+  override def watermark(name: String): Option[String] =
+    readSidecar(sidecar(name, "watermark"))
+
+  override def putWatermark(name: String, marks: Option[String]): Unit =
+    putSidecar(sidecar(name, "watermark"), marks)
+
+  /** The row count of `name` and the maximum of each of `columns` (`None`
+    * where every value is null), from the data files' footers on the
+    * driver, so no Spark job runs. `None` unless every column is an
+    * `INT64 TIMESTAMP(MICROS|MILLIS, isAdjustedToUTC=true)` in every file
+    * and every row group carries its statistics: min/max, or a null count
+    * equal to its values. Spark's default INT96 timestamps carry none.
+    * A missing dataset answers `None`. */
+  private[etl] def timestampMaxima(name: String,
+      columns: Seq[String]): Option[(Long, Seq[Option[Timestamp]])] = {
+    val dir = new Path(path(name))
+    if (!fs.exists(dir)) None
+    else {
+      // stop reading footers at the first row group that cannot answer
+      val (known, rest) = dataFiles(dir).flatMap(rowGroupMaxima(_, columns)).span(_.isDefined)
+      val (rows, maxima) = known.flatten.foldLeft((0L, columns.map(_ => Option.empty[Long]))) {
+        case ((n, ms), (m, gs)) => (n + m, ms.zip(gs).map { case (x, y) => (x ++ y).maxOption })
+      }
+      Option.when(!rest.hasNext)((rows, maxima.map(_.map(DateTimeUtils.toJavaTimestamp))))
+    }
+  }
+
+  /** Per row group of `f`: its row count and each column's maximum in
+    * epoch microseconds, or `None` where its statistics cannot tell; a
+    * single `None` when a column is missing or not a UTC INT64 timestamp. */
+  private def rowGroupMaxima(f: FileStatus,
+      columns: Seq[String]): Seq[Option[(Long, Seq[Option[Long]])]] = {
+    def microsPerUnit(t: Type): Option[Long] = t match {
+      case p: PrimitiveType if p.getPrimitiveTypeName == PrimitiveTypeName.INT64 =>
+        p.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation if ts.isAdjustedToUTC => ts.getUnit match {
+            case TimeUnit.MICROS => Some(1L)
+            case TimeUnit.MILLIS => Some(1000L)
+            case _ => None
+          }
+          case _ => None
+        }
+      case _ => None
+    }
+    // Some(max), Some(None) when every value is null, None when unknown
+    def chunkMax(chunk: ColumnChunkMetaData): Option[Option[Long]] = {
+      val st: Statistics[_] = chunk.getStatistics
+      if (st == null || st.isEmpty) None
+      else if (st.hasNonNullValue) Some(Some(st.genericGetMax.asInstanceOf[java.lang.Long]))
+      else Option.when(st.isNumNullsSet && st.getNumNulls == chunk.getValueCount)(None)
+    }
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try {
+      val footer = reader.getFooter
+      val schema = footer.getFileMetaData.getSchema
+      val units = columns.map(c => Option.when(schema.containsField(c))(c)
+        .flatMap(c => microsPerUnit(schema.getType(schema.getFieldIndex(c)))))
+      if (units.contains(None)) Seq(None)
+      else footer.getBlocks.asScala.toSeq.map { block =>
+        val chunks = block.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
+        val maxima = columns.zip(units.flatten).map { case (c, unit) =>
+          chunks.get(c).flatMap(chunkMax).map(_.map(_ * unit))
+        }
+        Option.when(!maxima.contains(None))((block.getRowCount, maxima.flatten))
+      }
+    } finally reader.close()
   }
 
   /** Hive-style partitioned layout (`<name>.parquet/<col>=<v>/...`): the

@@ -10,6 +10,16 @@ import scala.jdk.CollectionConverters._
 object Fixtures {
 
   val t0: Timestamp = Timestamp.valueOf("2023-01-01 10:00:00")
+
+  /** Runs `f` with Spark writing parquet timestamps as `kind`
+    * (`spark.sql.parquet.outputTimestampType`): `TIMESTAMP_MICROS` and
+    * `TIMESTAMP_MILLIS` carry footer statistics, the default `INT96` none. */
+  def writingTimestampsAs[T](spark: SparkSession, kind: String)(f: => T): T = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, kind)
+    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
   private def bd(s: String) = new java.math.BigDecimal(s).setScale(2)
 
   def address(spark: SparkSession): DataFrame = spark.createDataFrame(

@@ -46,6 +46,25 @@ class JdbcSpec extends SparkSpec {
     assert(source.listTables() === Seq("CURRENCY", "DIM_CURRENCY"))
   }
 
+  test("catalog discovery loads a driver that only the driver property names") {
+    val conn = DriverManager.getConnection("jdbc:derby:memory:graftpropdb;create=true")
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate("CREATE TABLE payment (payment_id INT)")
+      st.executeUpdate("INSERT INTO payment VALUES (1)")
+      st.close()
+    } finally conn.close()
+    val p = new Properties()
+    p.setProperty("driver", classOf[PropertyOnlyDriver].getName)
+    val viaProperty = new JdbcSource(spark,
+      PropertyOnlyDriver.Prefix + "memory:graftpropdb", p,
+      catalogQuery = JdbcSource.derbyCatalogQuery)
+    // listTables is a tick's first JDBC call: no Spark read has loaded the
+    // driver yet
+    assert(viaProperty.listTables() === Seq("PAYMENT"))
+    assert(viaProperty.full("PAYMENT").count() === 1)
+  }
+
   test("full scan reads every row with JDBC types") {
     setup
     val df = source.full("CURRENCY")

@@ -32,6 +32,18 @@ class JdbcUpsertSpec extends SparkSpec {
     st.close(); conn.close()
   }
 
+  /** Asserts that the staging table of `table` did not survive the call. */
+  private def assertNoStage(table: String): Unit = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getTables(null, null, "%", null)
+      val names = Iterator.continually(rs)
+        .takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
+      assert(!names.exists(_.equalsIgnoreCase(s"${table}_stage")),
+        s"staging table leaked: $names")
+    } finally conn.close()
+  }
+
   private def dim(rows: Seq[(Int, String, String)]) = {
     import spark.implicits._
     rows.toDF("currency_id", "currency_code", "currency_name")
@@ -58,15 +70,7 @@ class JdbcUpsertSpec extends SparkSpec {
     val back = spark.read.jdbc(url, "\"dim_currency\"", props)
       .collect().map(r => (r.getInt(0), r.getString(2))).toMap
     assert(back === Map(1 -> "Alpha", 2 -> "Beta-renamed", 3 -> "Gamma"))
-    // the staging table must not survive the call
-    val conn = DriverManager.getConnection(url)
-    try {
-      val rs = conn.getMetaData.getTables(null, null, "%", null)
-      val names = Iterator.continually(rs)
-        .takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
-      assert(!names.exists(_.equalsIgnoreCase("dim_currency_stage")),
-        s"staging table leaked: $names")
-    } finally conn.close()
+    assertNoStage("dim_currency")
   }
 
   test("upsert rolls back its DELETE when the INSERT violates a constraint") {
@@ -92,6 +96,8 @@ class JdbcUpsertSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getString(2))).toMap
     assert(back === Map(1 -> "Alpha", 2 -> "Beta"),
       "a failed upsert must leave the matched rows in place")
+    // a rolled-back swap drops its stage too
+    assertNoStage("dim_checked")
   }
 
   test("scd2Load closes current versions and opens new ones with effective dating") {

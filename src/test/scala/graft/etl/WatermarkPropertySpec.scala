@@ -2,7 +2,8 @@ package graft.etl
 
 import java.sql.Timestamp
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import scala.jdk.CollectionConverters._
 
@@ -54,6 +55,58 @@ class WatermarkPropertySpec extends SparkSpec {
           landed.read("currency").collect().map(_.getInt(0)).sorted.toSeq ==
             expected.map(_._1).sorted
       fullLanded && deltaOk
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(8).withWorkers(1), prop)
+    assert(result.passed, result.toString)
+  }
+
+  /** `store` without its watermark sidecar and `source` without its own
+    * marks: extract then takes the aggregate + `isEmpty` path. */
+  private def withoutSidecar(store: TableStore): TableStore = new TableStore {
+    def exists(n: String) = store.exists(n)
+    def list() = store.list()
+    def read(n: String) = store.read(n)
+    def read(n: String, schema: StructType) = store.read(n, schema)
+    def write(n: String, df: DataFrame) = store.write(n, df)
+    def append(n: String, df: DataFrame) = store.append(n, df)
+    override def version(n: String) = store.version(n)
+  }
+  private def withoutMarks(source: OltpSource): OltpSource = new OltpSource {
+    def listTables() = source.listTables()
+    def full(t: String) = source.full(t)
+    def incremental(t: String, c: Timestamp, u: Timestamp) = source.incremental(t, c, u)
+  }
+
+  // (id, created, updated) offsets in 250 µs steps: ties, sub-millisecond
+  // and whole-millisecond marks all occur
+  private def microsDf(rows: Seq[(Int, Long, Long)]) =
+    spark.createDataFrame(
+      rows.map { case (id, c, u) =>
+        def at(off: Long) = org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .toJavaTimestamp(base * 1000 + off * 250)
+        Row(id, s"C$id", at(c), at(u))
+      }.asJava, Schemas.currency)
+
+  test("sidecar + source marks land exactly what the aggregate + isEmpty path lands") {
+    val prop = Prop.forAll(waveGen, waveGen) { (wave1, wave2) =>
+      val src = tmpDir("parity-src")
+      val srcStore = new ParquetStore(spark, src)
+      val source = new ParquetSource(spark, src)
+      val fast = new ParquetStore(spark, tmpDir("parity-fast"))
+      val plain = new ParquetStore(spark, tmpDir("parity-plain"))
+      val jobs = Seq(new IngestJob(source, fast),
+        new IngestJob(withoutMarks(source), withoutSidecar(plain)))
+      val shifted = wave2.map { case (i, c, u) => (i + 1000, c, u) }
+      // full, incremental, no-change
+      Seq(wave1, wave1 ++ shifted, wave1 ++ shifted).forall { rows =>
+        Fixtures.writingTimestampsAs(spark, "TIMESTAMP_MICROS") {
+          srcStore.write("currency", microsDf(rows))
+        }
+        val Seq(a, b) = jobs.map(_.run())
+        a == b && sortedCells(fast.read("currency").orderBy("currency_id")) ==
+          sortedCells(plain.read("currency").orderBy("currency_id"))
+      }
     }
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(8).withWorkers(1), prop)
