@@ -485,8 +485,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("token budget gates: served stats collapse the plan to one window pass") {
-    // with order stats landed (the gate body's ensureOrderStats call —
-    // fingerprint-checked against the corpus files), the bounded cut
+    // with order stats built (the gate body's ensureOrderStats call
+    // fills the session memo, fingerprint-checked against the corpus
+    // files), the bounded cut
     // must carry NO aggregate, NO join, and NO exchange other than the
     // window's own _pid hash and the presentation sort: bucket ids and
     // prefix offsets ride as literals, and the scan itself is pruned by

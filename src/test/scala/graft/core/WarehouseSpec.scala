@@ -50,20 +50,26 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("TotalOrder.persistBoundaries survives an orphaned boundary location") {
-    val df = (1L to 500L).map(i => (i, i % 7)).toDF("k", "v")
+    // the one order-stats ingest call, persistOrderStats, writes a
+    // fingerprinted table, so the input is file-backed
+    val dir = tmpDir("worph_stats")
+    (1L to 500L).map(i => (i, i % 7)).toDF("k", "v")
+      .write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
     // first persist to learn the table name (by before/after diff —
-    // other suites in the shared session land their own boundary
-    // tables), drop the table but keep a fresh orphan dir, then persist
-    // again from a cleared memo
+    // other suites in the shared session may land their own tables),
+    // drop the table but keep a fresh orphan dir, then persist again
+    // from a cleared memo
     val before = spark.catalog.listTables().collect().map(_.name).toSet
-    graft.operators.TotalOrder.persistBoundaries(df, "k")
+    graft.operators.TotalOrder.persistOrderStats(df, "k", "v")
     val name = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_boundaries_"))
+      .map(_.name).filter(_.startsWith("graft_ordstats_"))
       .filterNot(before).head
     spark.sql(s"DROP TABLE $name")
     orphanDir(name)
     graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-    graft.operators.TotalOrder.persistBoundaries(df, "k")
+    graft.operators.TotalOrder.persistOrderStats(df, "k", "v")
     assert(spark.table(name).count() === 1L)
+    spark.sql(s"DROP TABLE $name")
   }
 }

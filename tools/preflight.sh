@@ -5,7 +5,7 @@
 #   tools/preflight.sh              # compile + unit specs
 #   tools/preflight.sh --fast       # compile only (sbt + benchmark harness)
 #   tools/preflight.sh --gate       # compile + specs + sf0.001 Verify + check.py
-#                                   # + etl_ticks count repeatability
+#                                   # + etl_ticks and llm_ops count repeatability
 #
 # Exit non-zero on any failure; commit only when this exits 0.
 set -euo pipefail
@@ -61,11 +61,12 @@ assert d.get("metric") == "total" and d.get("n_queries", 0) > 0, d
 print("[preflight] bench line parses:", {k: d[k] for k in ("metric", "value", "n_queries")})
 EOF
 
-  # Two traced etl_ticks runs of one seed must repeat every count metric
-  # (jobs, tasks, rows, tables changed) exactly; a probe or sidecar path
-  # that depends on timing or listing order shows up here.
-  echo "[preflight] perfbench selftest etl_ticks"
-  python3 perfbench/selftest.py etl_ticks
+  # Two traced runs of one seed must repeat every count metric (jobs,
+  # tasks, rows, tables changed, build jobs) exactly, per workload; a probe,
+  # sidecar or memo path that depends on timing or listing order shows up
+  # here.
+  echo "[preflight] perfbench selftest etl_ticks llm_ops"
+  python3 perfbench/selftest.py etl_ticks llm_ops
 fi
 
 echo "[preflight] OK"
