@@ -267,15 +267,20 @@ object GraftFunctions {
       exprs => { arity(bpeMergeOnceName, exprs, 2, "pieces, pair")
         BpeMergeOnce(exprs(0), exprs(1)) }))
 
+  /** The planner strategies both registration paths install: the native
+    * as-of join and the one-partition global sort. */
+  val strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    Seq(graft.plans.AsofJoinStrategy, graft.plans.SmallSortStrategy)
+
   /** Idempotent session registration of the custom expressions, planner
-    * strategy, and optimizer rule, making them reachable from both the
+    * strategies, and optimizer rule, making them reachable from both the
     * Column API (call_function) and SQL. `spark.experimental` is the
     * runtime path; [[GraftExtensions]] covers config-based deployment —
-    * both iterate [[catalog]]. */
+    * both iterate [[catalog]] and [[strategies]]. */
   def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
+    val missing = strategies.filterNot(spark.experimental.extraStrategies.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
     if (!spark.experimental.extraOptimizations.contains(graft.plans.PushFilterThroughAsofJoin))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.PushFilterThroughAsofJoin

@@ -12,8 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * This is the (c)-path registration hook of the custom-operator ladder;
   * the expressions themselves stay plain Catalyst expressions. The
-  * function set comes from [[GraftFunctions.catalog]] — the SAME table
-  * the runtime register() path iterates — so a config-deployed session
+  * function set comes from [[GraftFunctions.catalog]] and the planner
+  * strategies from [[GraftFunctions.strategies]] — the SAME tables the
+  * runtime register() path iterates — so a config-deployed session
   * gets exactly the runtime session's surface (the previous
   * hand-maintained list here had drifted 9 functions behind;
   * GraftExtensionsSpec now pins the parity).
@@ -21,7 +22,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    GraftFunctions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
     GraftFunctions.catalog.foreach { case (name, clazz, usage, builder) =>
       ext.injectFunction((

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The extensions installer makes graft_cosine available in a session that
   * never called GraftFunctions.register — the deployment path for a
-  * cluster-wide config. Uses its own session (newSession shares the
-  * function registry, so a genuinely fresh SparkSession is built). */
+  * cluster-wide config — with the same functions and planner strategies.
+  * Uses its own session (newSession shares the function registry, so a
+  * genuinely fresh SparkSession is built). */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("graft_cosine resolves via spark.sql.extensions") {
@@ -14,6 +15,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // already has the function) and silently skip the extensions — clear
     // the active/default session so a genuinely new SparkSession is built
     // with the installer, then restore.
+    def graftStrategies(all: Seq[org.apache.spark.sql.execution.SparkStrategy]) =
+      all.filter(_.getClass.getName.startsWith("graft."))
+    // the register() path's planner strategies, read from the shared test
+    // session before the default session is cleared
+    val registered = {
+      val s = graft.SparkTestSession.spark
+      GraftFunctions.register(s)
+      graftStrategies(s.experimental.extraStrategies)
+    }
     val prior = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -47,6 +57,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
             org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
           s"$name missing from the extensions-deployed session")
       }
+      // PARITY PIN: both paths install the same planner strategies (the
+      // as-of join and the one-partition sort), and only those
+      assert(registered === GraftFunctions.strategies)
+      assert(graftStrategies(spark.sessionState.planner.strategies) ===
+        GraftFunctions.strategies)
       // and a catalog member from the previously-drifted set WORKS
       val mh = spark.sql(
         "SELECT size(graft_minhash_bands_xx(array('a','b'), 64, 16)) AS n")

@@ -1,0 +1,32 @@
+package graft.plans
+
+import graft.{SparkEntry, SparkSpec}
+import graft.operators.{Dedup, TotalOrder}
+
+/** Upper bounds on the Spark jobs that executing each gate of the
+  * benchmark's `llm_ops` workload starts at sf0.001, from the same reset
+  * state the benchmark uses (memos dropped, cache cleared). Each bound is
+  * the count with [[SmallSortStrategy]]; a gate whose final sort falls back
+  * to a range sort pays a sampling and a range-shuffle job more and fails
+  * here. `txt_winnow_overlap` keeps its range sort: a join sits between its
+  * shuffle stages and the sort. */
+class GateJobCountSpec extends SparkSpec {
+
+  private val bounds = Seq(
+    "dedup_exact" -> 2, "txt_bpe_apply" -> 1, "txt_winnow_overlap" -> 13,
+    "sim_cosine_topk" -> 3, "emb_quantize_int8" -> 1, "smp_token_budget" -> 2,
+    "pipe_rag_prep" -> 2)
+
+  for ((gate, bound) <- bounds) test(s"$gate: execution starts at most $bound jobs") {
+    Dedup.invalidateBloomMemo(spark)
+    TotalOrder.invalidateBoundaryMemo(spark)
+    TotalOrder.dropPersistedStats(spark)
+    spark.catalog.clearCache()
+    val q = SparkEntry.allQueries.find(_.name == gate).get
+    val df = q.run(spark, "/root/testdata/sf0.001")
+    df.queryExecution.executedPlan
+    val (_, jobs) = jobsIn(df.collect())
+    assert(jobs <= bound, s"$gate started $jobs jobs:\n" +
+      df.queryExecution.executedPlan.toString.take(3000))
+  }
+}
