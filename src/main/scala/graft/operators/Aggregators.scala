@@ -75,6 +75,34 @@ object Aggregators {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
   }
 
+  /** Sorted distinct ids per group, bounded: a group with more than
+    * `maxIds` distinct ids finishes empty, and no buffer ever holds more
+    * than `maxIds + 1` ids. A full buffer (`maxIds + 1` distinct, real
+    * ids) is the overflow state: any union with it still overflows, so it
+    * absorbs every later id and merge. This is the df-cut of
+    * [[TextOps.winnowOverlap]], where plain `collect_set` would let one
+    * boilerplate fingerprint build a corpus-sized array. */
+  final case class BoundedIdSet(maxIds: Int)
+      extends Aggregator[Long, Array[Long], Array[Long]] {
+    require(maxIds >= 0 && maxIds < Int.MaxValue,
+      s"BoundedIdSet: maxIds must be in [0, ${Int.MaxValue - 1}], got $maxIds")
+    private val full = maxIds + 1
+    override def zero: Array[Long] = Array.emptyLongArray
+    override def reduce(buf: Array[Long], id: Long): Array[Long] = {
+      val i = java.util.Arrays.binarySearch(buf, id)
+      if (i >= 0 || buf.length == full) buf else buf.patch(-i - 1, Array(id), 0)
+    }
+    override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
+      if (a.length == full) a
+      else if (b.length == full) b
+      else (a ++ b).distinct.sorted.take(full)
+    override def finish(buf: Array[Long]): Array[Long] =
+      if (buf.length > maxIds) Array.emptyLongArray else buf
+    override def bufferEncoder: Encoder[Array[Long]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    override def outputEncoder: Encoder[Array[Long]] = bufferEncoder
+  }
+
   /** Streaming-friendly exact weighted mean: (sum, weight) buffer. */
   final case class WeightedMean() extends Aggregator[(Double, Double), (Double, Double), Double] {
     override def zero: (Double, Double) = (0.0, 0.0)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Text-analysis operators for a training-data pipeline: tokenization,
   * quality scoring, language-ID heuristic, document fingerprinting.
@@ -142,26 +143,44 @@ object TextOps {
 
   /** Substring-overlap pairs from shared [[winnow]] fingerprints — what
     * the fingerprints are for: two docs sharing `minShared` selected rare
-    * fingerprints share substantial verbatim token runs. Fingerprints
-    * appearing in more than `maxDf` docs are suppressed first (the
-    * standard boilerplate/hot-gram df-cut in fingerprint dedup), which is
-    * also what keeps the fp equi-join selective at corpus scale: candidate
-    * pairs per fingerprint are bounded by maxDf². */
+    * fingerprints share substantial verbatim token runs. A fingerprint
+    * found in more than `maxDf` distinct docs is suppressed (the standard
+    * boilerplate/hot-gram df-cut in fingerprint dedup).
+    *
+    * One grouped pass, no self-join: group the fingerprints by `fp` into
+    * each one's sorted distinct doc ids, bounded at `maxDf`
+    * ([[Aggregators.BoundedIdSet]]: a group past `maxDf` finishes empty and
+    * no buffer holds more than `maxDf + 1` ids), emit every pair
+    * `id1 < id2` inside a group of two or more, and count the pairs. So a
+    * fingerprint's df is its number of distinct docs, a fingerprint
+    * repeated inside one doc counts that doc once, `n_shared` is the number
+    * of distinct shared rare fingerprints, and the pairs per fingerprint
+    * are bounded by maxDf². The plan shuffles three times (docs, `fp`,
+    * pairs) and has no join or generator above the last one.
+    *
+    * Ids must be non-null `bigint`s (a null id fails the query, an `int`
+    * column fails the call). The output is `(id1, id2, n_shared)`, all
+    * `bigint`, with the schema of the self-join formulation. */
   def winnowOverlap(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int, minShared: Long, maxDf: Long): DataFrame = {
-    // materialize the fingerprint frame once: it feeds the df-cut AND both
-    // sides of the candidate self-join — uncached, the full winnow
-    // pipeline (explode + window + argmin agg) would run three times
-    // (same lifecycle as the minhash band cache: harness clearCache())
-    val fps = CacheOnce(winnow(df, idCol, textCol, k, w)
-      .select(col("doc_id"), col("fp")).distinct())
-    val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select("fp")
-    val f = fps.join(rare, Seq("fp"))
-    f.as("a")
-      .join(f.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+    val idType = df.schema(idCol).dataType
+    require(idType == LongType,
+      s"winnowOverlap: id column $idCol must be bigint, got ${idType.sql}")
+    require(maxDf.isValidInt, s"winnowOverlap: maxDf $maxDf is not an int")
+    val docIds = udaf(Aggregators.BoundedIdSet(maxDf.toInt))
+    // the pair ids keep the id column's nullability, as the self-join's
+    // do (the widening cast is free: the optimizer drops it)
+    val idArray = ArrayType(LongType, containsNull = df.schema(idCol).nullable)
+    winnow(df, idCol, textCol, k, w)
+      .groupBy("fp").agg(docIds(coalesce(col("doc_id"),
+        raise_error(lit(s"winnowOverlap: null id in $idCol")))).cast(idArray).as("ids"))
+      .filter(size(col("ids")) >= 2)
+      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
+      // ids are sorted and distinct: the ids after position i are the
+      // partners id2 > id1
+      .select(col("id1"),
+        explode(slice(col("ids"), col("i") + 2, size(col("ids")))).as("id2"))
+      .groupBy("id1", "id2")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }

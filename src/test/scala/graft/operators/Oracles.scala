@@ -78,4 +78,24 @@ object Oracles {
       .select(col("doc_id"), (-col("m.np")).as("pos"), col("m.h").as("fp"))
       .distinct()
   }
+
+  /** Self-join form of [[TextOps.winnowOverlap]]: the distinct
+    * `(doc_id, fp)` frame (cached, it feeds three branches), a per-`fp`
+    * distinct-doc count cut at `maxDf`, and an equi-join of the rare
+    * fingerprints with themselves on `fp`, `a.doc_id < b.doc_id`, counted
+    * per pair. The `txt_winnow_overlap` DuckDB oracle has the same shape. */
+  def winnowOverlapJoin(df: DataFrame, idCol: String, textCol: String,
+      k: Int, w: Int, minShared: Long, maxDf: Long): DataFrame = {
+    val fps = CacheOnce(TextOps.winnow(df, idCol, textCol, k, w)
+      .select(col("doc_id"), col("fp")).distinct())
+    val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf).select("fp")
+    val f = fps.join(rare, Seq("fp"))
+    f.as("a")
+      .join(f.as("b"),
+        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
+  }
 }

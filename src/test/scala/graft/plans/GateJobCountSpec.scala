@@ -8,12 +8,13 @@ import graft.operators.{Dedup, TotalOrder}
   * state the benchmark uses (memos dropped, cache cleared). Each bound is
   * the count with [[SmallSortStrategy]]; a gate whose final sort falls back
   * to a range sort pays a sampling and a range-shuffle job more and fails
-  * here. `txt_winnow_overlap` keeps its range sort: a join sits between its
-  * shuffle stages and the sort. */
+  * here. `txt_winnow_overlap` runs one job per shuffle stage (docs, `fp`,
+  * pairs) and one for the local sort: no join or generator sits above its
+  * last shuffle. */
 class GateJobCountSpec extends SparkSpec {
 
   private val bounds = Seq(
-    "dedup_exact" -> 2, "txt_bpe_apply" -> 1, "txt_winnow_overlap" -> 13,
+    "dedup_exact" -> 2, "txt_bpe_apply" -> 1, "txt_winnow_overlap" -> 4,
     "sim_cosine_topk" -> 3, "emb_quantize_int8" -> 1, "smp_token_budget" -> 2,
     "pipe_rag_prep" -> 2)
 

@@ -4,6 +4,8 @@ run each oracle SQL in DuckDB over the same parquet tables and compare
 with the Verify parquet output (columns sorted by name, values hashed).
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Each gate that threw in Verify (named in verify_failures.json) counts as a
+failure; a missing manifest means Verify did not finish, one failure more.
 Dev-only tool (driver-side stack: duckdb/pyarrow/pandas); the Scala
 library has no dependency on this.
 """
@@ -46,9 +48,20 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    manifest = f"{out_dir}/verify_failures.json"
+    if os.path.exists(manifest):
+        failed = json.load(open(manifest))
+    else:
+        print(f"{'verify_failures.json':35s} MISSING (Verify did not finish)")
+        failed = {}
+        n_fail += 1
+    for name in sorted(failed):
+        e = failed[name]
+        print(f"{name:35s} VERIFY-FAILED {e['class']}: {e['message']}")
+        n_fail += 1
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
+        if not os.path.isdir(d) or name in failed:
             continue
         files = glob.glob(f"{d}/*.parquet")
         got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
