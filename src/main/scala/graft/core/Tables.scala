@@ -31,8 +31,8 @@ object Tables {
     *
     * Caveat: the first read's file-listing snapshot is served for the
     * session's lifetime — correct for the immutable driver testdata this
-    * registry serves; call [[invalidateCache]] if a directory is rewritten
-    * mid-session. */
+    * registry serves; a directory rewritten mid-session needs a new
+    * session. */
   private val relationCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
@@ -50,130 +50,8 @@ object Tables {
     perSession.getOrElseUpdate((dir, name), build(spark, dir, name))
   }
 
-  /** Drop cached relations for a session (e.g. after rewriting a dir). */
-  def invalidateCache(spark: SparkSession): Unit =
-    relationCache.synchronized { relationCache.remove(spark) }
-
-  /** dirs whose tables are served from the session catalog WITH computed
-    * statistics (see [[analyzeDir]]): dir → database name. */
-  private val analyzedDirs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-
-  private def analyzedDb(spark: SparkSession, dir: String): Option[String] = {
-    val m = analyzedDirs.synchronized(analyzedDirs.get(spark))
-    if (m == null) None else m.get(dir)
-  }
-
-  /** The statistics story: register every table of `dir` as an external
-    * catalog table and run `ANALYZE TABLE … COMPUTE STATISTICS FOR ALL
-    * COLUMNS`; thereafter [[apply]] serves `spark.table` for that dir, so
-    * every plan carries row counts and per-column NDV/min/max and the
-    * cost-based estimator can price filters and join build sides from
-    * DATA, not file sizes. This is the general form of what a per-query
-    * join-strategy hint fixes pointwise: without stats the static
-    * estimator prices a column-pruned fact scan under the broadcast
-    * threshold while a join product carries no estimate at all (the
-    * measured q03 inversion, BENCH_NOTES r9).
-    *
-    * One scan + one aggregate per table, paid ONCE per (session, dir) —
-    * the warehouse-ingest analogue, same amortization class as parquet
-    * footer metadata in engines that read stats for free. Idempotent;
-    * re-analyzing after a data rewrite refreshes the stats. Plain-path
-    * mode stays the default: a deployment opts in by calling this once
-    * per session (the README's deployment example); Bench and Verify do
-    * not, because full-surface CBO measured slower (BENCH_NOTES r10). */
-  def analyzeDir(spark: SparkSession, dir: String,
-      forAllColumns: Boolean = true): Unit = {
-    // stable per-dir database name (paths are not valid identifiers) —
-    // a 64-bit digest prefix, NOT String.hashCode: a 32-bit collision
-    // between two dirs would silently alias one dir's CREATE TABLE ...
-    // LOCATION to the other's data
-    val db = "graft_stats_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    all.foreach { n =>
-      // events ships TIMESTAMP(NANOS) in one layout; the legacy conf must
-      // be live before schema inference, exactly as in [[build]] — but
-      // only AROUND this registration: leaving it set session-wide would
-      // silently change how every LATER parquet read in the caller's
-      // session infers nanos timestamps (ADVICE r10)
-      val savedNanos =
-        if (n == "events")
-          Some(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong"))
-        else None
-      if (n == "events")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      try {
-        // CREATE OR REPLACE semantics for re-analyze: IF NOT EXISTS
-        // pinned the schema from FIRST registration, so re-analyzing a
-        // dir whose physical layout changed would refresh stats against
-        // a stale catalog schema. Replace = drop + recreate (external
-        // LOCATION table: metadata only, no data touched).
-        if (spark.catalog.tableExists(s"$db.$n"))
-          spark.sql(s"DROP TABLE $db.$n")
-        spark.sql(s"CREATE TABLE $db.$n USING parquet " +
-          s"LOCATION '${path(dir, n)}'")
-        // column stats only for the types ANALYZE supports (numeric,
-        // string, binary, boolean, date/timestamp) — embeddings/token
-        // arrays have no NDV/min/max representation and would fail the
-        // whole command. The ANALYZE scan runs inside the same
-        // conf-save scope as the CREATE: the events reader needs the
-        // legacy nanos conf live at SCAN time too.
-        import org.apache.spark.sql.types._
-        // TimestampNTZType is deliberately EXCLUDED even though ANALYZE
-        // accepts it: Spark 4.1's FilterEstimation.evaluateBinary has no
-        // case for NTZ, so a binary predicate over an NTZ column WITH
-        // column stats crashes optimization under cbo.enabled
-        // (scala.MatchError: TimestampNTZType — measured here on
-        // l_shipdate). Without the colStat the estimator falls back to
-        // conservative selectivity instead of crashing; row counts still
-        // price the join sides correctly.
-        def analyzable(dt: DataType): Boolean = dt match {
-          case _: NumericType => true
-          case StringType | BinaryType | BooleanType | DateType |
-               TimestampType => true
-          case _ => false
-        }
-        val statCols =
-          if (!forAllColumns) Seq.empty
-          else spark.table(s"$db.$n").schema.fields
-            .filter(f => analyzable(f.dataType)).map(f => s"`${f.name}`").toSeq
-        spark.sql(s"ANALYZE TABLE $db.$n COMPUTE STATISTICS" +
-          (if (statCols.nonEmpty) statCols.mkString(" FOR COLUMNS ", ", ", "")
-           else ""))
-      } finally savedNanos.foreach {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None    => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
-    }
-    val m = analyzedDirs.synchronized {
-      val existing = analyzedDirs.get(spark)
-      if (existing != null) existing
-      else {
-        val fresh = scala.collection.concurrent.TrieMap.empty[String, String]
-        analyzedDirs.put(spark, fresh)
-        fresh
-      }
-    }
-    m.put(dir, db)
-    // relations built before the switch carry no stats — rebuild lazily
-    invalidateCache(spark)
-  }
-
-  /** Revert [[analyzeDir]]: serve plain path reads again (the catalog
-    * tables and their stats remain registered but unused). */
-  def resetAnalyzed(spark: SparkSession): Unit = {
-    analyzedDirs.synchronized { analyzedDirs.remove(spark) }
-    invalidateCache(spark)
-  }
-
   private def build(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark) // idempotent
-    def base(): DataFrame = analyzedDb(spark, dir) match {
-      case Some(db) => spark.table(s"$db.$name")
-      case None     => spark.read.parquet(path(dir, name))
-    }
     if (name == "events") {
       // events.ts has shipped in two physical layouts across testdata
       // generations, so the load is schema-adaptive:
@@ -214,7 +92,7 @@ object Tables {
           "(its ts column is a UTC wall-clock NTZ/nanos value; set " +
           "spark.sql.session.timeZone=UTC on the session before loading " +
           "events)")
-      val raw = base()
+      val raw = spark.read.parquet(path(dir, name))
       import org.apache.spark.sql.functions.{col, expr}
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -228,7 +106,7 @@ object Tables {
             .withColumn("ts_ns", expr("unix_micros(cast(ts as timestamp)) * 1000"))
             .withColumn("ts", col("ts").cast("timestamp"))
       }
-    } else base()
+    } else spark.read.parquet(path(dir, name))
   }
 
   /** UTC instant → raw nanos literal for pushdown-friendly filters on

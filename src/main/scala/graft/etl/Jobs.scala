@@ -545,8 +545,6 @@ final class Pipeline(
     processed: TableStore,
     warehouse: TableStore) {
 
-  def ingestedStore: TableStore = ingested
-  def processedStore: TableStore = processed
   def warehouseStore: TableStore = warehouse
 
   def runExtract(): Seq[String] = new IngestJob(source, ingested).run()

@@ -125,8 +125,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object GraftFunctions {
 
   val cosineName = "graft_cosine"
-  val intersectName = "graft_intersect_count"
-  val intersectSortedName = "graft_intersect_count_sorted"
   val intersectBoundedName = "graft_intersect_count_sorted_bounded"
   val quantizeName = "graft_quantize_int8"
   val prefixCollisionName = "graft_prefix_collision"
@@ -177,16 +175,6 @@ object GraftFunctions {
         "in one fused codegen loop (float/long/int read natively)",
       exprs => { arity(cosineName, exprs, 2, "a, b")
         CosineSimilarity(exprs(0), exprs(1)) }),
-    (intersectName, classOf[IntersectCount],
-      "_FUNC_(a, b) - |set(a) INTERSECT set(b)| of two array<string> " +
-        "columns, one fused hash-probe pass",
-      exprs => { arity(intersectName, exprs, 2, "a, b")
-        IntersectCount(exprs(0), exprs(1)) }),
-    (intersectSortedName, classOf[IntersectCountSorted],
-      "_FUNC_(a, b) - |a INTERSECT b| of two SORTED DISTINCT " +
-        "array<string> columns, allocation-free merge walk",
-      exprs => { arity(intersectSortedName, exprs, 2, "a, b")
-        IntersectCountSorted(exprs(0), exprs(1)) }),
     (intersectBoundedName, classOf[IntersectCountSortedBounded],
       "_FUNC_(a, b, minCount) - sorted-intersect count with the PPJoin " +
         "positional early-exit (exact only as a >= minCount test)",
@@ -217,7 +205,9 @@ object GraftFunctions {
         "token array: array<struct<pos, fp>> of each w-gram window's " +
         "minimal 60-bit md5 k-gram hash (rightmost on ties), one fused " +
         "O(G) deque pass per document",
-      winnowBuilder),
+      exprs => { arity(winnowName, exprs, 3, "tokens, k, w")
+        WinnowFingerprints(exprs(0), intLit(winnowName, exprs(1), "k"),
+          intLit(winnowName, exprs(2), "w")) }),
     (subwordName, classOf[SubwordTokenize],
       "_FUNC_(word, vocab) - greedy longest-match subword pieces of one " +
         "word against a literal vocabulary (single-char OOV fallback)",
@@ -299,19 +289,11 @@ object GraftFunctions {
   /** Column-API handle (requires register(spark) on the active session). */
   def cosine(a: Column, b: Column): Column = call_function(cosineName, a, b)
 
-  /** |set(a) ∩ set(b)| of two array<string> columns in any order, with
-    * duplicates and null elements (one hash-probe pass). */
-  def intersectCount(a: Column, b: Column): Column =
-    call_function(intersectName, a, b)
-
-  /** |a ∩ b| of two SORTED DISTINCT array<string> columns (merge walk,
-    * zero per-row allocation) — see [[IntersectCountSorted]]'s contract. */
-  def intersectCountSorted(a: Column, b: Column): Column =
-    call_function(intersectSortedName, a, b)
-
-  /** [[intersectCountSorted]] with the PPJoin positional filter: stops
+  /** |a ∩ b| of two SORTED DISTINCT array<string> columns by an
+    * allocation-free merge walk with the PPJoin positional filter: stops
     * early (returning an upper bound < minCount) once the pair cannot
-    * reach `minCount` — see [[IntersectCountSortedBounded]]'s exactness
+    * reach `minCount`; `minCount = 0` never stops early and counts
+    * exactly. See [[IntersectCountSortedBounded]]'s input and exactness
     * contract before using the result for anything but a >= threshold
     * filter on a count-monotone metric. */
   def intersectCountSortedBounded(a: Column, b: Column, minCount: Column): Column =
@@ -371,28 +353,6 @@ object GraftFunctions {
   def minhashBandsXX(tokens: Column, numHashes: Int, bands: Int): Column = {
     import org.apache.spark.sql.functions.lit
     call_function(minhashBandsXXName, tokens, lit(numHashes), lit(bands))
-  }
-
-  /** The one expression builder both deployment paths (temp-function
-    * registry and [[GraftExtensions]] injection) share — duplicated
-    * copies drifted once already. Accepts any foldable INTEGRAL literal
-    * for k/w (SQL integer literals can arrive as int or long) and fails
-    * with a named-argument error, not a ClassCastException. */
-  private[functions] def winnowBuilder(exprs: Seq[Expression]): Expression = {
-    // arity first: exprs(1)/exprs(2) below would otherwise surface a
-    // bare IndexOutOfBoundsException to the SQL caller
-    if (exprs.length != 3) throw new IllegalArgumentException(
-      s"$winnowName expects 3 arguments (tokens, k, w), got ${exprs.length}")
-    def litInt(e: Expression, what: String): Int = {
-      val v = if (e.foldable) e.eval() else null
-      v match {
-        case i: java.lang.Integer => i.intValue()
-        case l: java.lang.Long if l.longValue().isValidInt => l.intValue()
-        case _ => throw new IllegalArgumentException(
-          s"$winnowName $what must be an int literal, got $e")
-      }
-    }
-    WinnowFingerprints(exprs(0), litInt(exprs(1), "k"), litInt(exprs(2), "w"))
   }
 
   /** Fused int8 quantization → struct<scale: double, qvec: array<long>>. */

@@ -6,10 +6,21 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 
-/** [[IntersectCountSorted]] with the PPJoin POSITIONAL FILTER: the merge
-  * walk stops as soon as `count_so_far + min(remaining_a, remaining_b)` —
-  * an upper bound on the final intersection — falls below `minCount`, and
-  * returns that upper bound instead of finishing the walk.
+/** Native Catalyst expression: |a ∩ b| for two SORTED DISTINCT
+  * array<string> columns via a two-pointer merge walk, with the PPJoin
+  * POSITIONAL FILTER — the count behind every MinHash/containment
+  * verification tail.
+  *
+  * When both inputs are sorted and distinct the count falls out of one
+  * merge walk: O(|a|+|b|) byte-wise comparisons, zero allocations, no
+  * hashing (a per-row `HashSet` probe would allocate per candidate PAIR).
+  * The producer pays one `sort_array` per DOC (corpus-sized) to save
+  * per-PAIR work (candidate-sized, quadratic in cluster density).
+  *
+  * Positional filter: the walk stops as soon as
+  * `count_so_far + min(remaining_a, remaining_b)` — an upper bound on the
+  * final intersection — falls below `minCount`, and returns that upper
+  * bound instead of finishing the walk. `minCount = 0` never stops early.
   *
   * Exactness contract: for pairs whose true count reaches `minCount` the
   * walk never breaks (the bound is an over-estimate of what is still
@@ -26,8 +37,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * `floor(t·|a|)` (containment).
   *
   * On a dense LSH candidate set most pairs FAIL verification — the prune
-  * exists to shorten exactly those walks. Same sorted-distinct-no-nulls
-  * input contract as [[IntersectCountSorted]].
+  * exists to shorten exactly those walks.
+  *
+  * INPUT CONTRACT (caller-enforced, not checked): both arrays are sorted
+  * ascending in Spark's StringType order (`sort_array` default) and
+  * element-distinct, with no null elements. On unsorted input the count
+  * silently under-reports. UTF8String.compare is byte-wise lexicographic —
+  * exactly the ordering `sort_array` applies to StringType — so the walk's
+  * comparisons agree with the producer's sort by construction.
+  * IntersectCountSpec pins the `minCount = 0` walk to
+  * `size(array_intersect(a, b))` through both eval paths.
   */
 case class IntersectCountSortedBounded(left: Expression, right: Expression,
     minCount: Expression) extends TernaryExpression {

@@ -4,8 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Persisted dedup band index — the corpus side of incremental near-dup
-  * dedup ([[Dedup.incrementalNearDups]]) stored ONCE so nightly batches
-  * re-sketch only themselves.
+  * dedup (a NEW batch against an EXISTING corpus, the nightly-ingest case)
+  * stored ONCE so nightly batches re-sketch only themselves. Candidates
+  * come from the band equi-join of NEW bands against CORPUS bands only, so
+  * per-batch cost is O(|new| + collisions) regardless of corpus size. Doc
+  * ids must be unique ACROSS batch and corpus (a shared id means "the same
+  * document"); intra-batch duplicates are [[Dedup.minhashNearDups]]' job
+  * on the batch alone.
   *
   * Two bucketed+sorted tables per index:
   *  - `<name>_bands` (doc_id, n_toks, band_idx, band_hash), bucketed on
@@ -26,8 +31,8 @@ import org.apache.spark.sql.functions._
   * the accumulated file-sets back to one sorted file per bucket with a
   * shuffle-free rewrite.
   *
-  * A BandIndexSpec pins (a) result parity with the index-free
-  * [[Dedup.incrementalNearDups]] and (b) that the corpus band scan is
+  * BandIndexSpec pins (a) result parity with an index-free oracle that
+  * sketches the raw corpus each time and (b) that the corpus band scan is
   * bucketed in the executed plan.
   */
 object BandIndex {
@@ -210,8 +215,8 @@ object BandIndex {
         unseen(
           // the sketch's per-doc arrays are ALREADY sorted — part of the
           // index FORMAT contract: matches() verifies with the merge-walk
-          // kernel (IntersectCountSorted), which under-counts on unsorted
-          // arrays. An index persisted by a pre-sort build must be
+          // kernel (IntersectCountSortedBounded), which under-counts on
+          // unsorted arrays. An index persisted by a pre-sort build must be
           // rebuilt (build() or compact-as-rebuild) before this version
           // reads it.
           tokArr.select(col("doc_id"), col("toks"),
@@ -274,9 +279,9 @@ object BandIndex {
   }
 
   /** Verified near-dup matches of a new batch against the persisted
-    * index: (id_new, id_ref, jaccard). Identical output to
-    * [[Dedup.incrementalNearDups]](newDocs, corpus, ...) by construction
-    * (same sketch family, same verification tail — spec-pinned). */
+    * index: (id_new, id_ref, jaccard). Identical output to sketching the
+    * raw corpus afresh (same sketch family, same [[Dedup.crossMatches]]
+    * tail — spec-pinned against the index-free oracle). */
   def matches(newDocs: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int, threshold: Double, name: String,
       excludeBatch: Option[Long] = None): DataFrame = {
@@ -303,32 +308,14 @@ object BandIndex {
       case Some(b) => df.filter(col("src_batch") =!= b)
       case None => df
     }
-    val refBands = notOwn(refreshed(spark, s"${name}_bands"))
-    val refToks = notOwn(refreshed(spark, s"${name}_toks"))
-    val cands = newBands.as("a")
-      .join(refBands.as("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_hash") === col("b.band_hash"))
-      .select(col("a.doc_id").as("id_new"), col("b.doc_id").as("id_ref"),
-        col("a.n_toks").as("n1"), col("b.n_toks").as("n2"))
-      .distinct()
-    val newArr = newToks.select(col("doc_id").as("id_new"),
-      col("toks").as("toks1"))
-    val refArr = refToks
-      .select(col("doc_id").as("id_ref"), col("toks").as("toks2"))
-    Dedup.crossVerify(cands, newArr, refArr, threshold)
+    Dedup.crossMatches(newBands, newToks,
+      notOwn(refreshed(spark, s"${name}_bands")),
+      notOwn(refreshed(spark, s"${name}_toks")), threshold)
   }
 
-  /** New docs that survive the index check (left-anti on matched ids). */
-  def dedupAgainst(newDocs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, threshold: Double, name: String): DataFrame =
-    newDocs.join(
-      matches(newDocs, idCol, textCol, numHashes, bands, threshold, name)
-        .select(col("id_new").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-
-  /** Bounded-lifecycle [[dedupAgainst]] for long-running callers
-    * (streaming foreachBatch): runs `use` on the surviving docs, then
+  /** New docs that survive the index check (left-anti on matched ids),
+    * with a bounded lifecycle for long-running callers (streaming
+    * foreachBatch): runs `use` on the surviving docs, then
     * unpersists the per-batch sketch frames that
     * [[Dedup.portableSketch]] cached. A batch caller relies on the
     * harness-scoped `clearCache()`; a stream has no such scope, so

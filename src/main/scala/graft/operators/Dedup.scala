@@ -419,7 +419,8 @@ object Dedup {
       bandsOf: Column => Column): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     // sort_array at build: one per-row sort buys the allocation-free
-    // merge-walk verification kernel (IntersectCountSorted's contract)
+    // merge-walk verification kernel (IntersectCountSortedBounded's
+    // input contract)
     val perDoc =
       if (shingleN > 1)
         df.select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("t"))
@@ -445,25 +446,14 @@ object Dedup {
     (bandsDf, tokArr)
   }
 
-  /** Incremental near-dup matches: a NEW batch against an EXISTING
-    * reference corpus — the nightly-ingest case, where re-dedup-ing the
-    * whole corpus per batch (minhashNearDups over new ∪ corpus) would
-    * redo O(|corpus|²-shaped) work every night. Both sides are sketched
-    * with the portable family, and candidates come from the band
-    * equi-join of NEW bands against CORPUS bands ONLY — no corpus×corpus
-    * pairs are ever generated, so per-batch cost is O(|new| + collisions)
-    * regardless of corpus size. (At deployment scale the corpus band
-    * frame is the precomputed dedup index — amortized across batches;
-    * bucketed/partitioned storage of it is [[IvfIndex]]-shaped.) Returns
-    * (id_new, id_ref, jaccard) for every verified match; doc ids must be
-    * unique ACROSS the two frames (a shared id means "the same document").
-    * Intra-batch duplicates are [[minhashNearDups]]' job on `newDocs`
-    * alone — compose both for the full nightly pass. */
-  def incrementalNearDups(newDocs: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String,
-      numHashes: Int, bands: Int, threshold: Double): DataFrame = {
-    val (newBands, newToks) = portableSketch(newDocs, idCol, textCol, numHashes, bands)
-    val (refBands, refToks) = portableSketch(corpus, idCol, textCol, numHashes, bands)
+  /** Verified CROSS-side near-dup matches (id_new, id_ref, jaccard) of
+    * two portable sketches ([[portableSketch]]'s band and token-array
+    * frames): the band equi-join of NEW bands against REFERENCE bands
+    * only — no reference×reference pairs are ever generated — then the
+    * exact-Jaccard verification tail. [[BandIndex.matches]] passes the
+    * persisted index tables as the reference side. */
+  private[operators] def crossMatches(newBands: DataFrame, newToks: DataFrame,
+      refBands: DataFrame, refToks: DataFrame, threshold: Double): DataFrame = {
     val cands = newBands.as("a")
       .join(refBands.as("b"),
         col("a.band_idx") === col("b.band_idx")
@@ -475,15 +465,6 @@ object Dedup {
       col("toks").as("toks1"))
     val refArr = refToks.select(col("doc_id").as("id_ref"),
       col("toks").as("toks2"))
-    crossVerify(cands, newArr, refArr, threshold)
-  }
-
-  /** Exact-Jaccard verification of CROSS-side candidate pairs — the tail
-    * shared by [[incrementalNearDups]] and [[BandIndex.matches]].
-    * `cands`: (id_new, id_ref, n1, n2); `newArr`: (id_new, toks1);
-    * `refArr`: (id_ref, toks2). */
-  private[operators] def crossVerify(cands: DataFrame, newArr: DataFrame,
-      refArr: DataFrame, threshold: Double): DataFrame =
     cands
       // PPJoin length prune before the wide array joins (see
       // verifyCandidates) — provably output-preserving
@@ -502,18 +483,7 @@ object Dedup {
         / (size(col("toks1")) + size(col("toks2")) - col("c")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_new"), col("id_ref"), round(col("jaccard"), 4).as("jaccard"))
-
-  /** The user-facing incremental dedup: new docs that survive
-    * [[incrementalNearDups]] against the corpus (left-anti on matched
-    * new ids). */
-  def dedupAgainstCorpus(newDocs: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String,
-      numHashes: Int, bands: Int, threshold: Double): DataFrame =
-    newDocs.join(
-      incrementalNearDups(newDocs, corpus, idCol, textCol,
-          numHashes, bands, threshold)
-        .select(col("id_new").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+  }
 
   /** Keep-list resolution: given near-dup pairs (id1 < id2), drop every
     * doc that pairs with a smaller-id doc — one-iteration star clustering
@@ -1200,21 +1170,11 @@ object Dedup {
       .filter(col("n_clusters") > 0)
   }
 
-  /** Keep-list with transitive closure: keep one representative (the
-    * min id) per connected component of the pair graph. Docs in no pair
-    * are kept unchanged. */
-  def keepListComponents(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val comps = connectedComponents(pairs)
-    df.join(comps.withColumnRenamed("doc_id", idCol), Seq(idCol), "left")
-      .filter(col("comp").isNull || col("comp") === col(idCol))
-      .drop("comp")
-  }
-
   /** Quality-aware dedup resolution: keep the HIGHEST-`score` member of
     * each near-dup component (ties to the lowest id) plus every unpaired
     * doc — the "keep the best representative" rule production pipelines
-    * use where [[keepListComponents]]'s arbitrary min-id would discard a
-    * long original in favor of a short near-copy.
+    * use where an arbitrary min-id representative would discard a long
+    * original in favor of a short near-copy.
     *
     * Scale shape: component labels from [[connectedComponents]] (its
     * three-way dispatch), then ONE hash aggregate on the component id —

@@ -72,33 +72,6 @@ object Multimodal {
     }.toDF("doc_id", "frame_idx", "frame_bytes")
   }
 
-  /** STUB resize: recomputes target dimensions preserving aspect ratio —
-    * the metadata transform a real resize performs; the pixel work is the
-    * stubbed codec's job. Pure per-row math, stays in the typed pipeline. */
-  def resizeStub(spark: SparkSession, meta: Dataset[MediaMeta],
-      maxSide: Int): Dataset[MediaMeta] = {
-    import spark.implicits._
-    meta.map { m =>
-      val scale = math.min(1.0, maxSide.toDouble / math.max(m.width, m.height))
-      m.copy(width = math.max(1, (m.width * scale).toInt),
-        height = math.max(1, (m.height * scale).toInt))
-    }
-  }
-
-  /** STUB feature extraction: fixed-length float vector derived
-    * deterministically from the content digest — the embedding-column
-    * producer shape (doc_id, array<float>), partition-local. */
-  def featureStub(spark: SparkSession, blobs: DataFrame, dim: Int): DataFrame = {
-    import spark.implicits._
-    blobs.as[MediaBlob].map { b =>
-      val md = java.security.MessageDigest.getInstance("MD5").digest(b.content)
-      val feats = Array.tabulate(dim) { i =>
-        (((md(i % md.length) & 0xFF) ^ (i * 31)) % 256) / 255.0f - 0.5f
-      }
-      (b.doc_id, feats)
-    }.toDF("doc_id", "embedding")
-  }
-
   /** Blob-level metadata that needs no decode: size + content digest —
     * pure column algebra over the binary column. */
   def blobMeta(blobs: DataFrame): DataFrame =

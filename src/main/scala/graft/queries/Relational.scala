@@ -114,13 +114,12 @@ object Relational {
       // broadcast. PlanAuditSpec pins both the pushed timestamp predicates
       // and the absence of a lineitem-side broadcast.
       //
-      // The GENERAL fix exists (Tables.analyzeDir + cbo.enabled prices the
-      // build sides from row counts and picks the right side with no
-      // hint), but full-surface CBO was A/B'd at sf0.1 and REJECTED:
-      // +56% total, the dedup family's synthetic intermediates get
-      // mispriced (BENCH_NOTES r10). The hint stays: targeted, free, and
-      // it protects stat-less sessions where the static estimator still
-      // inverts.
+      // The general alternative — ANALYZE every table and let cbo.enabled
+      // price the build sides from row counts — was A/B'd at sf0.1 and
+      // REJECTED: 88.8 s against 56.9 s over 115 queries (+56%), the dedup
+      // family's synthetic intermediates get mispriced (BENCH_NOTES r10).
+      // The hint stays: targeted, free, and correct in the stat-less
+      // sessions where the static estimator inverts.
       l.join(o.join(c, col("o_custkey") === col("c_custkey"))
             .hint("shuffle_hash"),
           col("l_orderkey") === col("o_orderkey"))

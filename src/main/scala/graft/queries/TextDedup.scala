@@ -1860,7 +1860,7 @@ object TextDedup {
       // it once per corpus fingerprint — the nightly flow's ingest-time
       // step), so each batch reads the compact bucketed index instead
       // of re-sketching the whole corpus; BandIndex.matches is
-      // output-identical to incrementalNearDups by construction
+      // output-identical to sketching the raw corpus by construction
       // (spec-pinned), so the raw-corpus oracle replay still certifies it
       val idx = "gidx_" + dir.toLowerCase.replaceAll("[^a-z0-9]", "_")
       graft.operators.BandIndex.ensure(docs.filter(col("doc_id") < 300),

@@ -50,19 +50,10 @@ object CmsStream {
     graft.core.VersionedTable.retarget(spark, table, next)
   }
 
-  /** Start the stream: every micro-batch lands its cell deltas. */
-  def countStream(docs: DataFrame, textCol: String, table: String,
-      depth: Int, width: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        trigger(batch, batchId, textCol, table, depth, width)
-      }
-      .start()
-
-  /** One aggregate→guard→append trigger, split out so the replay spec
-    * can run the exact production body twice with the same batchId. */
+  /** One aggregate→guard→append trigger: the `foreachBatch` body of a
+    * streaming Count-Min, callable directly so the gate and the replay
+    * spec can run the exact production body twice with the same
+    * batchId. */
   private[graft] def trigger(batch: DataFrame, batchId: Long,
       textCol: String, table: String, depth: Int, width: Int): Unit = {
     val spark = batch.sparkSession

@@ -521,7 +521,7 @@ class PlanAuditSpec extends SparkSpec {
     // survive anywhere in the pipeline
     val docs = graft.core.Tables(spark, dir, "documents")
     val plan = planWithBroadcastDisabled(
-      graft.operators.Dedup.incrementalNearDups(
+      graft.operators.Oracles.incrementalNearDups(
         docs.filter(col("doc_id") >= 100 && col("doc_id") < 150),
         docs.filter(col("doc_id") < 100),
         "doc_id", "text", 64, 16, 0.8))

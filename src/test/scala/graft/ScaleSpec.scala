@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.etl.ParquetStore
-import graft.operators.Skew
 
 /** Scale-mechanics checks: partition pruning on hive layouts, bucketed
-  * co-located joins (no shuffle), salted skew joins (result parity). */
+  * co-located joins (no shuffle), AQE's runtime split of a skewed join
+  * partition. */
 class ScaleSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -93,22 +93,6 @@ class ScaleSpec extends SparkSpec {
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       "bucketed join should not shuffle:\n" + plan.take(2000))
-  }
-
-  test("salted join equals the plain join (skew scatter correctness)") {
-    val orders = graft.core.Tables(spark, dir, "orders")
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val customer = graft.core.Tables(spark, dir, "customer")
-      .select("c_custkey", "c_name")
-      .withColumnRenamed("c_custkey", "o_custkey")
-    val plain = orders.join(customer, Seq("o_custkey"), "inner")
-    val salted = Skew.saltedJoin(orders, customer, "o_custkey", salt = 8)
-    assert(salted.count() === plain.count())
-    assert(cells(salted.select("o_orderkey", "c_name")) ===
-      cells(plain.select("o_orderkey", "c_name")))
-    // the join key must carry the salt so the hot key spreads across tasks
-    val plan = salted.queryExecution.optimizedPlan.toString
-    assert(plan.contains("_salt"), plan.take(1500))
   }
 
   test("semDedup candidate generation is cluster-bounded (n²/C, not n²)") {

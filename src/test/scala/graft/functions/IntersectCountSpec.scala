@@ -3,52 +3,18 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The fused intersection-count kernel vs the composable
-  * size(array_intersect) form — must agree everywhere it replaces it. */
+/** The fused sorted-intersection-count kernel
+  * ([[IntersectCountSortedBounded]]) vs the composable
+  * size(array_intersect) form — with `minCount = 0` the merge walk never
+  * stops early and must agree exactly; above it, the threshold-filtered
+  * pair set must not change. */
 class IntersectCountSpec extends SparkSpec {
 
+  private def exact(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column) =
+    GraftFunctions.intersectCountSortedBounded(a, b, lit(0))
+
   test("agrees with size(array_intersect) on real corpus token arrays") {
-    val docs = graft.core.Tables(spark, "/root/testdata/sf0.001", "documents")
-      .filter(col("doc_id") < 60)
-    val sets = graft.operators.Dedup.tokenSet(docs, "doc_id", "text")
-    val arr = sets.groupBy("doc_id").agg(collect_set(col("w")).as("toks"))
-    val pairs = arr.select(col("doc_id").as("id1"), col("toks").as("t1"))
-      .crossJoin(arr.select(col("doc_id").as("id2"), col("toks").as("t2")))
-      .filter(col("id1") < col("id2"))
-    val diff = pairs.withColumn("fused",
-        GraftFunctions.intersectCount(col("t1"), col("t2")))
-      .withColumn("ref", size(array_intersect(col("t1"), col("t2"))))
-      .filter(col("fused") =!= col("ref"))
-      .count()
-    assert(diff === 0L)
-  }
-
-  test("set semantics under duplicates, empties, and null elements") {
-    import spark.implicits._
-    val df = Seq(
-      (Seq("a", "b", "b", "c"), Seq("b", "b", "c", "d")), // dup-heavy: {b,c}
-      (Seq.empty[String], Seq("a")),                      // empty left
-      (Seq("x"), Seq.empty[String]),                      // empty right
-      (Seq("a", "a"), Seq("a", "a"))                      // dups both sides
-    ).toDF("a", "b")
-    val got = df.select(GraftFunctions.intersectCount(col("a"), col("b")))
-      .collect().map(_.getInt(0)).toSeq
-    assert(got === Seq(2, 0, 0, 1))
-
-    // null array -> null result; null elements skipped
-    val withNulls = Seq(
-      (Some(Seq(Some("a"), None, Some("b"))), Some(Seq(Some("b"), None))),
-      (None: Option[Seq[Option[String]]], Some(Seq(Some("a"), None))))
-      .toDF("a", "b")
-    val rows = withNulls
-      .select(GraftFunctions.intersectCount(col("a"), col("b")).as("c"))
-      .collect()
-    assert(rows(0).getInt(0) === 1)
-    assert(rows(1).isNullAt(0))
-  }
-
-  test("sorted merge-walk kernel agrees with the hash kernel and the " +
-      "composable form on sorted real-corpus arrays") {
     val docs = graft.core.Tables(spark, "/root/testdata/sf0.001", "documents")
       .filter(col("doc_id") < 60)
     val sets = graft.operators.Dedup.tokenSet(docs, "doc_id", "text")
@@ -58,11 +24,9 @@ class IntersectCountSpec extends SparkSpec {
     val pairs = arr.select(col("doc_id").as("id1"), col("toks").as("t1"))
       .crossJoin(arr.select(col("doc_id").as("id2"), col("toks").as("t2")))
       .filter(col("id1") < col("id2"))
-    val diff = pairs
-      .withColumn("walk", GraftFunctions.intersectCountSorted(col("t1"), col("t2")))
-      .withColumn("hash", GraftFunctions.intersectCount(col("t1"), col("t2")))
+    val diff = pairs.withColumn("fused", exact(col("t1"), col("t2")))
       .withColumn("ref", size(array_intersect(col("t1"), col("t2"))))
-      .filter(col("walk") =!= col("ref") || col("walk") =!= col("hash"))
+      .filter(col("fused") =!= col("ref"))
       .count()
     assert(diff === 0L)
   }
@@ -76,19 +40,23 @@ class IntersectCountSpec extends SparkSpec {
       (Seq("a"), Seq("a")),                     // identical singletons
       (Seq("a", "c", "e"), Seq("b", "d", "f"))  // disjoint interleaved
     ).toDF("a", "b")
-    val got = df.select(GraftFunctions.intersectCountSorted(col("a"), col("b")))
+    val got = df.select(exact(col("a"), col("b")))
       .collect().map(_.getInt(0)).toSeq
     assert(got === Seq(2, 0, 0, 1, 0))
 
+    // a null array yields null
+    val withNull = Seq((None: Option[Seq[String]], Seq("a"))).toDF("a", "b")
+    assert(withNull.select(exact(col("a"), col("b"))).head().isNullAt(0))
+
     // interpreted (non-codegen) eval path must agree: evaluate the
     // expression directly against InternalRow-converted inputs
-    val expr = IntersectCountSorted(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq("a", "b", "c"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq("b", "c", "d"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType)))
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val strings = org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.StringType)
+    val expr = IntersectCountSortedBounded(
+      Literal.create(Seq("a", "b", "c"), strings),
+      Literal.create(Seq("b", "c", "d"), strings),
+      Literal(0))
     assert(expr.eval(null) === 2)
   }
 
@@ -110,8 +78,9 @@ class IntersectCountSpec extends SparkSpec {
     assert(got(2) === 1)
 
     // pipeline-level guarantee on real corpus arrays: the >= t filtered
-    // pair set is identical whether counts come from the exact sorted walk
-    // or the bounded walk with the jaccard-derived floor bound
+    // pair set is identical whether counts come from the exact
+    // size(array_intersect) or the bounded walk with the jaccard-derived
+    // floor bound
     val docs = graft.core.Tables(spark, "/root/testdata/sf0.001", "documents")
       .filter(col("doc_id") < 60)
     val arr = graft.operators.Dedup.tokenSet(docs, "doc_id", "text")
@@ -125,13 +94,12 @@ class IntersectCountSpec extends SparkSpec {
     def surviving(c: org.apache.spark.sql.Column) = pairs
       .filter(jac(c) >= t)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = surviving(
-      GraftFunctions.intersectCountSorted(col("t1"), col("t2")))
+    val reference = surviving(size(array_intersect(col("t1"), col("t2"))))
     val bounded = surviving(GraftFunctions.intersectCountSortedBounded(
       col("t1"), col("t2"),
       floor(lit(t / (1.0 + t)) * (size(col("t1")) + size(col("t2")))).cast("int")))
-    assert(exact.nonEmpty)
-    assert(bounded === exact)
+    assert(reference.nonEmpty)
+    assert(bounded === reference)
   }
 
   test("kernel appears in the plan (codegen path, not array_intersect)") {
@@ -140,7 +108,8 @@ class IntersectCountSpec extends SparkSpec {
       docs.filter(col("doc_id") < 50), "doc_id", "text", 64, 16, 0.8)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("graft_intersect_count"), plan.take(2000))
+    assert(plan.contains(GraftFunctions.intersectBoundedName + "("),
+      plan.take(2000))
     assert(!plan.contains("array_intersect"), "composable fallback in hot path")
   }
 }

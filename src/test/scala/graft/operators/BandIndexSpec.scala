@@ -22,7 +22,7 @@ class BandIndexSpec extends SparkSpec {
 
     val viaIndex = BandIndex.matches(batch, "doc_id", "text",
       numHashes = 64, bands = 16, threshold = 0.8, name = "bidx")
-    val direct = Dedup.incrementalNearDups(batch, corpus,
+    val direct = Oracles.incrementalNearDups(batch, corpus,
       "doc_id", "text", numHashes = 64, bands = 16, threshold = 0.8)
     assert(rows(viaIndex) === rows(direct),
       "persisted-index matches must equal the index-free pipeline")
@@ -36,10 +36,12 @@ class BandIndexSpec extends SparkSpec {
       "corpus band scan must be bucketed:\n" + plan.take(3000))
 
     // survivors partition the batch exactly as the index-free form does
-    val sIdx = BandIndex.dedupAgainst(batch, "doc_id", "text",
-        64, 16, 0.8, "bidx")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val sDirect = Dedup.dedupAgainstCorpus(batch, corpus,
+    var sIdx = Set.empty[Long]
+    BandIndex.dedupAgainstEphemeral(batch, "doc_id", "text",
+        64, 16, 0.8, "bidx") { kept =>
+      sIdx = kept.select("doc_id").collect().map(_.getLong(0)).toSet
+    }
+    val sDirect = Oracles.dedupAgainstCorpus(batch, corpus,
         "doc_id", "text", 64, 16, 0.8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(sIdx === sDirect)

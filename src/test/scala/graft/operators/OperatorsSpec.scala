@@ -87,14 +87,14 @@ class OperatorsSpec extends SparkSpec {
     val nArr = nSets.groupBy("doc_id").agg(collect_set(col("w")).as("t1"))
     val cArr = cSets.groupBy("doc_id").agg(collect_set(col("w")).as("t2"))
     val exact = nArr.as("a").crossJoin(cArr.as("b"))
-      .withColumn("c", graft.functions.GraftFunctions.intersectCount(col("t1"), col("t2")))
+      .withColumn("c", size(array_intersect(col("t1"), col("t2"))))
       .withColumn("j", col("c").cast("double")
         / (size(col("t1")) + size(col("t2")) - col("c")).cast("double"))
       .filter(col("j") >= 0.8)
       .select(col("a.doc_id"), col("b.doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val matches = Dedup.incrementalNearDups(newDocs, corpus,
+    val matches = Oracles.incrementalNearDups(newDocs, corpus,
         "doc_id", "text", 64, 16, 0.8)
       .select("id_new", "id_ref")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -105,7 +105,7 @@ class OperatorsSpec extends SparkSpec {
     // no corpus-side ids ever appear on the new side
     assert(matches.forall { case (n, _) => n >= 100 && n < 150 })
 
-    val survivors = Dedup.dedupAgainstCorpus(newDocs, corpus,
+    val survivors = Oracles.dedupAgainstCorpus(newDocs, corpus,
         "doc_id", "text", 64, 16, 0.8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val dropped = matches.map(_._1)
@@ -177,19 +177,15 @@ class OperatorsSpec extends SparkSpec {
       5L -> 5L, 6L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("keepListComponents keeps one representative per component") {
+  test("keepList is one greedy round: pairs (5,7), (6,7) keep both 5 and 6") {
     import spark.implicits._
     val docsDf = (1L to 12L).toDF("doc_id")
     val pairs = Seq((5L, 7L), (6L, 7L)).toDF("id1", "id2")
-    // greedy keepList sees only id2=7 -> keeps 5 AND 6; transitive
-    // closure merges 5,6 through 7 -> keeps only 5
+    // greedy keepList sees only id2=7 -> keeps 5 AND 6 (transitive
+    // closure would merge 5,6 through 7; that is keepBest's job)
     val greedy = Dedup.keepList(docsDf, "doc_id", pairs)
       .collect().map(_.getLong(0)).toSet
-    val cc = Dedup.keepListComponents(docsDf, "doc_id", pairs)
-      .collect().map(_.getLong(0)).toSet
-    assert(greedy.contains(6L) && !cc.contains(6L))
-    assert(cc === greedy - 6L)
-    assert(cc.contains(5L) && !cc.contains(7L) && cc.contains(12L))
+    assert(greedy === (1L to 12L).toSet - 7L)
   }
 
   test("connected components: 200-node chain converges (pointer jumping)") {
@@ -316,17 +312,6 @@ class OperatorsSpec extends SparkSpec {
       assert(members.keySet.min === label)
       assert(comps(label) === label)
     }
-  }
-
-  test("multimodal resize + feature stubs: shape and determinism") {
-    val blobs = Multimodal.attachBlob(docs.limit(20))
-    val resized = Multimodal.resizeStub(spark,
-      Multimodal.decodeStub(spark, blobs), maxSide = 128).collect()
-    assert(resized.forall(m => m.width <= 128 && m.height <= 128
-      && m.width >= 1 && m.height >= 1))
-    val feats = Multimodal.featureStub(spark, blobs, dim = 16).collect()
-    assert(feats.length === 20)
-    assert(feats.forall(_.getSeq[Float](1).size === 16))
   }
 
   test("simhash: identical docs collide at hamming 0; near-dup join finds them") {

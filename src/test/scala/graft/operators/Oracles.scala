@@ -79,6 +79,31 @@ object Oracles {
       .distinct()
   }
 
+  /** Index-free form of [[BandIndex.matches]]: sketch the raw `corpus`
+    * afresh with the same portable family and run the same cross-side
+    * match tail, so a persisted index must return exactly these
+    * (id_new, id_ref, jaccard) rows. */
+  def incrementalNearDups(newDocs: DataFrame, corpus: DataFrame,
+      idCol: String, textCol: String,
+      numHashes: Int, bands: Int, threshold: Double): DataFrame = {
+    val (newBands, newToks) =
+      Dedup.portableSketch(newDocs, idCol, textCol, numHashes, bands)
+    val (refBands, refToks) =
+      Dedup.portableSketch(corpus, idCol, textCol, numHashes, bands)
+    Dedup.crossMatches(newBands, newToks, refBands, refToks, threshold)
+  }
+
+  /** Index-free form of [[BandIndex.dedupAgainstEphemeral]]'s survivors:
+    * the new docs with no [[incrementalNearDups]] match in `corpus`. */
+  def dedupAgainstCorpus(newDocs: DataFrame, corpus: DataFrame,
+      idCol: String, textCol: String,
+      numHashes: Int, bands: Int, threshold: Double): DataFrame =
+    newDocs.join(
+      incrementalNearDups(newDocs, corpus, idCol, textCol,
+          numHashes, bands, threshold)
+        .select(col("id_new").as(idCol)).distinct(),
+      Seq(idCol), "left_anti")
+
   /** Self-join form of [[TextOps.winnowOverlap]]: the distinct
     * `(doc_id, fp)` frame (cached, it feeds three branches), a per-`fp`
     * distinct-doc count cut at `maxDf`, and an equi-join of the rare

@@ -218,7 +218,7 @@ class EventStreamsSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore,
       "per-batch sketch caches must be unpersisted after each trigger")
 
-    val expected = graft.operators.Dedup.dedupAgainstCorpus(
+    val expected = graft.operators.Oracles.dedupAgainstCorpus(
         docs.filter(org.apache.spark.sql.functions.col("doc_id")
           .between(100, 149)),
         corpus, "doc_id", "text", 64, 16, 0.8)
@@ -272,8 +272,10 @@ class EventStreamsSpec extends SparkSpec {
     // the appended survivors are queryable index content for later
     // callers too (batch path sees them)
     val late = Seq((30L, doc(fresh2.updated(5, "edited")))).toDF("doc_id", "text")
-    assert(graft.operators.BandIndex.dedupAgainst(late, "doc_id", "text",
-        64, 16, 0.8, "gidx").count() === 0,
+    var lateKept = -1L
+    graft.operators.BandIndex.dedupAgainstEphemeral(late, "doc_id", "text",
+        64, 16, 0.8, "gidx") { kept => lateKept = kept.count() }
+    assert(lateKept === 0L,
       "a near-dup of an appended survivor must be caught by the batch path")
     spark.catalog.clearCache()
   }

@@ -2,9 +2,10 @@
 # Pre-commit gate: never commit a non-compiling HEAD (round-3 failure mode).
 #
 # Usage:
-#   tools/preflight.sh              # compile + unit specs
-#   tools/preflight.sh --fast       # compile only (sbt + benchmark harness)
-#   tools/preflight.sh --gate       # compile + specs + sf0.001 Verify + check.py
+#   tools/preflight.sh              # test-only def scan + compile + unit specs
+#   tools/preflight.sh --fast       # test-only def scan + compile only
+#                                   # (sbt + benchmark harness)
+#   tools/preflight.sh --gate       # scan + compile + specs + sf0.001 Verify + check.py
 #                                   # + etl_ticks and llm_ops count repeatability
 #
 # Exit non-zero on any failure; commit only when this exits 0.
@@ -21,6 +22,11 @@ export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.co
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
 export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
+
+# No public src/main def may be reachable only from tests (or from nothing)
+# unless tools/test_only_defs.allow names it with a reason.
+echo "[preflight] test-only defs"
+python3 tools/test_only_defs.py
 
 echo "[preflight] sbt compile"
 sbt -batch compile Test/compile < /dev/null

@@ -1,0 +1,155 @@
+#!/usr/bin/env python3
+"""List public src/main definitions that no program code reaches.
+
+For every public `def`, `val`, `var`, `object`, `class` and `trait` declared
+in src/main/scala, the check counts the files under src/main/scala and
+perfbench/src that use the name as a whole identifier, with comments
+stripped. A name that occurs nowhere apart from its own definition is a
+hit: only tests (or nothing) can reach it.
+
+Hits listed in tools/test_only_defs.allow pass; any other hit fails the
+check. Allowlist lines are `<file stem>.<name>  # reason` (the file stem is
+the declaring file's name without `.scala`); blank lines and lines that
+start with `#` are ignored. An allowlist entry that no longer matches a
+hit is reported as stale and fails the check too, so the list cannot
+outlive the code it excuses.
+
+Limits, by design of a name scan:
+  * It checks one level only. A def whose only caller is another
+    test-only def is not found; delete the outer one and run again.
+  * Names are matched textually, so a test-only def that shares its name
+    with any other identifier in the program (an overload, a common word
+    such as `apply` or `build`) is not found either.
+  * `override` members and members marked `private`/`protected` (with or
+    without a qualifier) are skipped.
+
+Usage:
+  python3 tools/test_only_defs.py          # exit 1 on an unlisted hit
+  python3 tools/test_only_defs.py --all    # print every hit, allowed or not
+"""
+import os
+import re
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MAIN = os.path.join(ROOT, "src", "main", "scala")
+SEARCH = [MAIN, os.path.join(ROOT, "perfbench", "src")]
+ALLOW = os.path.join(ROOT, "tools", "test_only_defs.allow")
+
+IDENT = r"[A-Za-z_$][A-Za-z0-9_$]*"
+DECL = re.compile(
+    r"^[ \t]*((?:(?:private|protected)(?:\[\w+\])?|override|final|sealed|"
+    r"abstract|implicit|lazy|case|inline)\s+)*"
+    r"(def|val|var|object|class|trait)\s+(" + IDENT + r")",
+    re.MULTILINE)
+
+
+def strip_comments(src):
+    """Blank out // and (nested) /* */ comments, keeping string literals
+    and line structure intact."""
+    out = []
+    i, n = 0, len(src)
+    while i < n:
+        c = src[i]
+        if src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and src[j] == '"':  # """...""""" closes on the last
+                j += 1
+            out.append(src[i:j])
+            i = j
+        elif c == '"':
+            j = i + 1
+            while j < n and src[j] != '"' and src[j] != "\n":
+                j += 2 if src[j] == "\\" else 1
+            out.append(src[i:j + 1])
+            i = j + 1
+        elif c == "'" and i + 2 < n and (src[i + 2] == "'" or
+                                         (src[i + 1] == "\\" and i + 3 < n)):
+            j = src.find("'", i + 3 if src[i + 1] == "\\" else i + 2)
+            out.append(src[i:j + 1])
+            i = j + 1
+        elif src.startswith("//", i):
+            j = src.find("\n", i)
+            j = n if j < 0 else j
+            out.append(" " * (j - i))
+            i = j
+        elif src.startswith("/*", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                if src.startswith("/*", j):
+                    depth, j = depth + 1, j + 2
+                elif src.startswith("*/", j):
+                    depth, j = depth - 1, j + 2
+                else:
+                    j += 1
+            out.append("".join(ch if ch == "\n" else " " for ch in src[i:j]))
+            i = j
+        else:
+            out.append(c)
+            i += 1
+    return "".join(out)
+
+
+def scala_files(roots):
+    for root in roots:
+        for d, _, names in os.walk(root):
+            for name in sorted(names):
+                if name.endswith(".scala"):
+                    yield os.path.join(d, name)
+
+
+def hits():
+    texts = {p: strip_comments(open(p, encoding="utf-8").read())
+             for p in scala_files(SEARCH)}
+    found = []
+    for path, text in texts.items():
+        if not path.startswith(MAIN + os.sep):
+            continue
+        stem = os.path.splitext(os.path.basename(path))[0]
+        for m in DECL.finditer(text):
+            mods, name = m.group(1) or "", m.group(3)
+            if "private" in mods or "protected" in mods or "override" in mods:
+                continue
+            word = re.compile(r"(?<![A-Za-z0-9_])" + re.escape(name) +
+                              r"(?![A-Za-z0-9_$])")
+            uses = sum(len(word.findall(t)) for t in texts.values())
+            if uses <= 1:
+                line = text.count("\n", 0, m.start(3)) + 1
+                found.append((f"{stem}.{name}",
+                              f"{os.path.relpath(path, ROOT)}:{line}"))
+    return sorted(set(found))
+
+
+def allowlist():
+    allowed = {}
+    for raw in open(ALLOW, encoding="utf-8"):
+        line = raw.strip()
+        if not line or line.startswith("#"):
+            continue
+        key, _, reason = line.partition("#")
+        if not reason.strip():
+            sys.exit(f"test_only_defs: allowlist entry without a reason: {line}")
+        allowed[key.strip()] = reason.strip()
+    return allowed
+
+
+def main():
+    found = hits()
+    allowed = allowlist()
+    show_all = "--all" in sys.argv[1:]
+    bad = [(k, loc) for k, loc in found if k not in allowed]
+    stale = sorted(set(allowed) - {k for k, _ in found})
+    for k, loc in found:
+        if show_all or k not in allowed:
+            tag = "allowed" if k in allowed else "TEST-ONLY"
+            print(f"{tag:9} {k:45} {loc}")
+    for k in stale:
+        print(f"STALE     {k:45} (allowlisted, but now used or gone)")
+    print(f"test_only_defs: {len(found)} unreached, {len(found) - len(bad)} "
+          f"allowed, {len(bad)} not allowed, {len(stale)} stale")
+    return 1 if bad or stale else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
