@@ -21,6 +21,18 @@ object SparkEntry {
       _root_.graft.queries.SamplingQueries.defs ++
       _root_.graft.queries.Advanced.defs
 
+  /** The registered gates named in `names`, in that order. Throws an
+    * IllegalArgumentException that names every unknown name, so a typo in
+    * a dev subset fails the run instead of silently dropping a gate. */
+  def gates(names: Seq[String]): Seq[GQuery] = {
+    val byName = allQueries.map(q => q.name -> q).toMap
+    val unknown = names.filterNot(byName.contains).distinct
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown gate name(s): ${unknown.map(n => s"'$n'").mkString(", ")}")
+    names.map(byName)
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     allQueries.head.run(spark, "/root/testdata/sf0.001")

@@ -8,13 +8,15 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (dev iteration only;
-    // the driver always runs the full set)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // the driver always runs the full set); an unknown name fails the run
+    val gates = args.lift(2) match {
+      case Some(names) =>
+        SparkEntry.gates(names.split(",").toSeq).map(q => q.name -> q.run)
+      case None => SparkEntry.queries.toSeq
+    }
     val spark = GraftSession("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
-    dump(spark, sfDir, outDir,
-      SparkEntry.queries.toSeq.filter { case (name, _) => only.forall(_.contains(name)) })
+    dump(spark, sfDir, outDir, gates)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

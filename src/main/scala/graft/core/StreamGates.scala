@@ -1,115 +1,31 @@
 package graft.core
 
-/** Naming discipline for the streaming replay gates' persisted state
-  * (keys/index tables and their delivery ledgers).
+/** Shared pieces of the streaming replay gates (`stream_*_replay`).
   *
-  * Every stream gate persists two kinds of state in the warehouse: the
-  * operator's own table(s) (Bloom keys, band index, IVF cells) and the
-  * delivery LEDGER the warm path serves (the cold run drives the real
-  * production triggers and records per-key delivery counts — the same
-  * contract as foreachBatch's checkpoint: committed batches are not
-  * re-fired). Both are keyed by the data directory so different scale
-  * factors never share state.
-  *
-  * The semantics VERSION is the structural fix for the stale-ledger
-  * hazard (r13 verdict): a ledger records the output of a SPECIFIC gate
-  * semantics — batch construction, slice boundaries, survivor rules,
-  * operator parameters. If any of those change while the table name
-  * stays fixed, a persisted ledger from the old semantics is served
-  * against the new oracle and the gate fails red for a confusing reason.
-  * Folding the version into the name makes that impossible: a semantics
-  * change bumps `semVer`, the new name misses, and the gate takes its
-  * deterministic cold path (re-seed / rebuild + re-trigger). Old-version
-  * state — catalog tables, their orphaned directories, raw ParquetStore
-  * roots — is swept by [[reclaimSiblings]] on that same cold path
-  * (versioned names are never reused, so [[Warehouse.reclaimOrphan]]'s
-  * name-reuse trigger alone would leak every retired version forever).
-  *
-  * CONTRACT for gate authors: bump the gate's `semVer` whenever its
-  * batch slices, replay schedule, thresholds, sketch parameters, or the
-  * survivor semantics of the operator it drives change. Do NOT bump for
-  * output-neutral refactors — the persisted ledgers keep the driver's
-  * bench on the warm path. LedgerRecoverySpec pins that a bump ignores
-  * the previous version's ledger.
+  * Each gate is one self-contained run: it resets the operator's state
+  * table(s) (Bloom keys, Count-Min cells, band index, IVF cells) through
+  * the operator's own cold path, drives the production triggers,
+  * including an at-least-once replay of batch 0, and builds its output
+  * from the frames those triggers delivered plus a live read of the
+  * state. Nothing a gate writes is read back by a later run.
   */
 object StreamGates {
 
-  /** `<prefix><crc32(dataDir)>_<semVer>` — the base name for one gate's
-    * state at one data directory under one semantics version. Ledgers
-    * append `_dlv` to this. */
-  def table(prefix: String, dataDir: String, semVer: String): String =
-    f"$prefix${dirCrc(dataDir)}%08x_$semVer"
-
-  private def dirCrc(dataDir: String): Long = {
+  /** `<prefix><crc32(dataDir)>` — the name of one gate's state at one
+    * data directory, so two scale factors never share state in one
+    * warehouse. */
+  def table(prefix: String, dataDir: String): String = {
     val crc = new java.util.zip.CRC32()
     crc.update(dataDir.getBytes("UTF-8"))
-    crc.getValue
+    f"$prefix${crc.getValue}%08x"
   }
 
-  /** Reclaim every OTHER-version sibling of this gate's state at this
-    * data directory: warehouse residents named `<prefix><crc>…` that are
-    * not the current `_<semVer>` family — prior/later versions with
-    * their `_dlv` ledgers, and the retired pre-versioning names (bare
-    * `<prefix><crc>` / `<prefix><crc>_dlv`). Catalog entries are dropped
-    * when present and the managed directory is deleted either way (the
-    * in-memory catalog forgets tables at JVM exit but their directories
-    * survive, and raw ParquetStore roots were never catalog tables at
-    * all). Versioned names are never REUSED, so
-    * [[Warehouse.reclaimOrphan]]'s name-reuse trigger can never fire for
-    * a retired version — without this sweep every semVer bump leaks the
-    * old version's disk forever. Gates call it on their COLD path (the
-    * rebuild that a bump forces), so warm runs pay nothing.
-    * Best-effort like reclaimOrphan: a failed delete only leaves the
-    * leak it was reclaiming. */
-  def reclaimSiblings(spark: org.apache.spark.sql.SparkSession,
-      prefix: String, dataDir: String, semVer: String): Unit = {
-    val stem = f"$prefix${dirCrc(dataDir)}%08x"
-    val current = s"${stem}_$semVer"
-    val siblings =
-      try {
-        val wh = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"))
-        val fs = wh.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(wh)) Seq.empty
-        else fs.listStatus(wh).toSeq.map(st => (fs, st.getPath))
-          .filter { case (_, p) =>
-            val n = p.getName
-            n.startsWith(stem) && n != current &&
-              !n.startsWith(current + "_")
-          }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"graft.StreamGates: reclaimSiblings($stem) listing failed: $e")
-          Seq.empty
-      }
-    // per-sibling isolation: one failed drop must only leave ITS leak,
-    // never abort the rest of the sweep (the cold path is rare, so a
-    // skipped sibling would otherwise linger indefinitely)
-    siblings.foreach { case (fs, p) =>
-      val n = p.getName
-      try {
-        if (spark.catalog.tableExists(n)) spark.sql(s"DROP TABLE `$n`")
-        if (fs.exists(p)) fs.delete(p, true)
-        System.err.println(s"graft.StreamGates: reclaimed retired state $n")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"graft.StreamGates: reclaimSiblings($stem) failed on $n: $e")
-      }
-    }
-  }
-
-  /** The at-least-once delivery recorder every stream gate's cold run
-    * uses: the [[sink]] freezes each trigger's delivered frame at
-    * delivery time (localCheckpoint — the sink's view of the stream; a
-    * later state append must not retro-change it), and [[persist]]
-    * writes per-key delivery counts as the gate's ledger table. One
-    * implementation instead of a per-gate copy: the fallback-schema and
-    * checkpoint semantics are part of what the three existing gates
-    * certify, so they must not drift between gates. Compose a
-    * projection into the sink at the gate site when only part of the
-    * delivered row belongs in the ledger
+  /** The at-least-once delivery recorder a gate passes to its triggers:
+    * the [[sink]] freezes each delivered frame at delivery time
+    * (localCheckpoint — the sink's view of the stream; a later state
+    * append must not retro-change it), and [[counts]] returns how often
+    * each key was delivered. Compose a projection into the sink at the
+    * gate site when only part of the delivered row is the key
     * (`df => ledger.sink(df.select("doc_id"))`). */
   final class DeliveryLedger {
     private val delivered = scala.collection.mutable.ArrayBuffer
@@ -118,16 +34,15 @@ object StreamGates {
     val sink: org.apache.spark.sql.DataFrame => Unit =
       df => { delivered += df.localCheckpoint(true); () }
 
-    /** Write `groupCols -> n_deliveries` to `ledgerTable`; `empty` is a
-      * zero-row frame with the delivered schema (the no-trigger case —
-      * the ledger must still exist for the warm path's guard). */
-    def persist(empty: org.apache.spark.sql.DataFrame,
-        groupCols: Seq[String], ledgerTable: String): Unit = {
+    /** `groupCols -> n_deliveries` over every delivered frame; `empty` is
+      * a zero-row frame with the delivered schema (no trigger delivered
+      * anything). */
+    def counts(empty: org.apache.spark.sql.DataFrame,
+        groupCols: Seq[String]): org.apache.spark.sql.DataFrame = {
       import org.apache.spark.sql.functions.{col, count, lit}
       delivered.reduceOption(_.unionByName(_)).getOrElse(empty)
         .groupBy(groupCols.map(col): _*)
         .agg(count(lit(1)).as("n_deliveries"))
-        .write.mode("overwrite").saveAsTable(ledgerTable)
     }
   }
 }

@@ -12,10 +12,15 @@ object Aggregators {
 
   /** Bounded top-k: keeps the k largest values per group in the buffer —
     * a per-group top-k without sorting whole groups (the buffer is the
-    * only state that shuffles). */
-  final case class TopK(k: Int) extends Aggregator[Double, Seq[Double], Seq[Double]] {
+    * only state that shuffles). NULL inputs are skipped, as a built-in
+    * aggregate skips them; the `Option` input is what lets `reduce` see
+    * them (a primitive `Double` input decodes NULL as 0.0). An all-NULL
+    * group yields an empty list. */
+  final case class TopK(k: Int)
+      extends Aggregator[Option[Double], Seq[Double], Seq[Double]] {
     override def zero: Seq[Double] = Vector.empty
-    override def reduce(buf: Seq[Double], v: Double): Seq[Double] = insert(buf, v)
+    override def reduce(buf: Seq[Double], v: Option[Double]): Seq[Double] =
+      v.fold(buf)(insert(buf, _))
     override def merge(a: Seq[Double], b: Seq[Double]): Seq[Double] =
       b.foldLeft(a)(insert)
     override def finish(buf: Seq[Double]): Seq[Double] = buf

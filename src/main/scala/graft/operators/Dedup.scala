@@ -377,9 +377,21 @@ object Dedup {
 
   /** [[portableSketch]]'s production twin over the xxhash64 family —
     * identical dataflow, the fused [[graft.functions.MinhashBandsXX]]
-    * kernel instead of the md5-affine one; both emit `array<bigint>`
-    * band hashes, so every banding consumer — first-collision prefix
-    * scan included — is family-agnostic.
+    * kernel instead of the md5-affine one. The families emit different
+    * band-hash types (`array<bigint>` here, md5-hex `array<string>` from
+    * [[graft.functions.MinhashBands]]); every banding consumer — the
+    * first-collision prefix scan included — only tests band hashes for
+    * equality within one family, so it is family-agnostic.
+    *
+    * Why the twin stays rather than every caller using the portable
+    * family: measured at sf0.1 over 5,000 docs on a 4-core / 16 GB host,
+    * with the same [[byDoc]] exchange on both paths (medians of 5
+    * alternating rounds after a warm-up), word-set LSH at 64 hashes /
+    * 16 bands / 0.8 took 39.6 s CPU with xxhash against 72.0 s with
+    * md5, and shingle mode 1.68 s against 2.12 s. The md5 kernel alone
+    * is about 20 % faster per document, so the gap lies downstream of
+    * the kernel. The portable family stays the one whose every band the
+    * DuckDB oracle can replay.
     *
     * Unlike the portable twin, the raw doc rows are redistributed BEFORE
     * the kernel ([[byDoc]] — the same pre-explode exchange [[tokenSet]]
@@ -645,18 +657,6 @@ object Dedup {
         (col("pos1") + col("diag")).as("pos2"), col("len_tokens"))
   }
 
-  /** Per-document duplicated-span coverage: the fraction of each doc's
-    * token positions covered by at least one n-token span shared with
-    * ANOTHER document — the per-doc filter metric derived from
-    * [[dupSpans]] (drop or trim docs whose training value is mostly
-    * memorized boilerplate). Overlapping spans are union-merged with the
-    * classic running-max interval sweep so covered positions count once.
-    *
-    * Scale shape: the window frame feeds both the duplicated-span set and
-    * the interval scan — materialized once (CacheOnce, harness-scoped
-    * lifecycle like the LSH band cache). The interval-merge window
-    * partitions BY DOC (thousands of rows each, never a global window);
-    * everything else is equi-joins and linear aggregates. */
   /** The spans shared by >= 2 distinct docs, as min(doc_id) <> max(doc_id)
     * over ONE span-keyed exchange with map-side partials. The
     * countDistinct form both consumers used before planned the
@@ -672,19 +672,30 @@ object Dedup {
       .filter(col("_d0") =!= col("_d1"))
       .select("span")
 
-  def dupSpanCoverage(df: DataFrame, idCol: String, textCol: String,
+  /** Per doc, the disjoint token-position intervals `(doc_id, s0, e0)`
+    * (1-based, inclusive) covered by at least one n-token span that also
+    * occurs in ANOTHER document: every duplicated-span occurrence,
+    * union-merged with the classic running-max interval sweep so covered
+    * positions count once. The shared front half of [[dupSpanCoverage]]
+    * and [[stripDupSpans]].
+    *
+    * Scale shape: the window frame feeds both the duplicated-span set and
+    * the interval scan — materialized once (CacheOnce, harness-scoped
+    * lifecycle like the LSH band cache). The interval-merge window
+    * partitions BY DOC (thousands of rows each, never a global window);
+    * everything else is equi-joins and linear aggregates. */
+  private def mergedDupSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wins = CacheOnce(tokenWindows(df, idCol, textCol, n))
-    val dup = dupSpanSet(wins)
     // (doc, start, end) per duplicated-span occurrence; pos is unique per
     // doc (one window per position), so the merge sweep's ordering is
     // deterministic without a tiebreaker
-    val ivals = wins.join(dup, Seq("span"))
+    val ivals = wins.join(dupSpanSet(wins), Seq("span"))
       .select(col("doc_id"), col("pos").as("s"),
         (col("pos") + lit(n - 1)).as("e"))
     val byStart = Window.partitionBy("doc_id").orderBy("s")
-    val merged = ivals
+    ivals
       .withColumn("prev_max_e", max(col("e")).over(
         byStart.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("new_grp",
@@ -692,9 +703,20 @@ object Dedup {
       .withColumn("grp", sum(col("new_grp")).over(
         byStart.rowsBetween(Window.unboundedPreceding, 0)))
       .groupBy("doc_id", "grp")
-      .agg((max(col("e")) - min(col("s")) + 1).as("covered"))
+      .agg(min(col("s")).as("s0"), max(col("e")).as("e0"))
+      .select("doc_id", "s0", "e0")
+  }
+
+  /** Per-document duplicated-span coverage: the fraction of each doc's
+    * token positions covered by at least one n-token span shared with
+    * ANOTHER document — the per-doc filter metric derived from
+    * [[dupSpans]] (drop or trim docs whose training value is mostly
+    * memorized boilerplate), summed over [[mergedDupSpans]]. */
+  def dupSpanCoverage(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame = {
+    val merged = mergedDupSpans(df, idCol, textCol, n)
       .groupBy("doc_id")
-      .agg(sum(col("covered")).as("dup_tokens"))
+      .agg(sum(col("e0") - col("s0") + 1).as("dup_tokens"))
     df.select(col(idCol).as("doc_id"),
         TextOps.tokenCount(col(textCol)).as("n_tokens"))
       .join(merged, Seq("doc_id"), "left")
@@ -713,34 +735,17 @@ object Dedup {
     * and the stripped text (empty string when the whole doc was
     * duplicated boilerplate).
     *
-    * Scale shape: identical to [[dupSpanCoverage]] up to the merged
-    * disjoint intervals (one span-keyed shuffle with map-side partials,
-    * one per-doc window — never global), then the merged intervals
-    * collapse to ONE small array per doc (collect_list over disjoint
-    * ranges; order-insensitive because the position test is an
-    * `exists`) and the rewrite itself is pure per-row higher-order
-    * column algebra against the doc's own token array — no UDF, no
-    * second corpus shuffle. The output is the corpus, so the job is
-    * scan-bound like any rewrite; only spans' metadata ever moves
-    * through an exchange. */
+    * Scale shape: [[mergedDupSpans]]' intervals (one span-keyed shuffle
+    * with map-side partials, one per-doc window — never global) collapse
+    * to ONE small array per doc (collect_list over disjoint ranges;
+    * order-insensitive because the position test is an `exists`) and the
+    * rewrite itself is pure per-row higher-order column algebra against
+    * the doc's own token array — no UDF, no second corpus shuffle. The
+    * output is the corpus, so the job is scan-bound like any rewrite;
+    * only spans' metadata ever moves through an exchange. */
   def stripDupSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wins = CacheOnce(tokenWindows(df, idCol, textCol, n))
-    val dup = dupSpanSet(wins) // min<>max, one exchange — see dupSpanSet
-    val ivals = wins.join(dup, Seq("span"))
-      .select(col("doc_id"), col("pos").as("s"),
-        (col("pos") + lit(n - 1)).as("e"))
-    val byStart = Window.partitionBy("doc_id").orderBy("s")
-    val merged = ivals
-      .withColumn("prev_max_e", max(col("e")).over(
-        byStart.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("new_grp",
-        (col("prev_max_e").isNull || col("s") > col("prev_max_e")).cast("int"))
-      .withColumn("grp", sum(col("new_grp")).over(
-        byStart.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("doc_id", "grp")
-      .agg(min(col("s")).as("s0"), max(col("e")).as("e0"))
+    val merged = mergedDupSpans(df, idCol, textCol, n)
       .groupBy("doc_id")
       .agg(collect_list(struct(col("s0"), col("e0"))).as("ivs"))
     df.select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("t"))

@@ -11,27 +11,24 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r15")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val names = args.lift(2).map(_.split(",").toSeq)
-      .getOrElse(graft.SparkEntry.allQueries.map(_.name))
+    val gates = args.lift(2)
+      .map(names => graft.SparkEntry.gates(names.split(",").toSeq))
+      .getOrElse(graft.SparkEntry.allQueries)
     val spark = graft.GraftSession("graft-explain-all")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val byName = graft.SparkEntry.allQueries.map(q => q.name -> q).toMap
-    names.foreach { n =>
-      byName.get(n) match {
-        case Some(q) =>
-          // plan-only: build the DataFrame and print its formatted plan
-          // without executing (memo-building operators may still run
-          // their bounded driver-side prep)
-          val df = q.run(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(outDir, s"$n.txt"),
-            txt.getBytes("UTF-8"))
-          println(s"[explain] wrote $outDir/$n.txt")
-        case None => System.err.println(s"[explain] unknown query '$n'")
-      }
+    gates.foreach { q =>
+      val n = q.name
+      // plan-only: build the DataFrame and print its formatted plan
+      // without executing (memo-building operators may still run
+      // their bounded driver-side prep)
+      val df = q.run(spark, sfDir)
+      val txt = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(outDir, s"$n.txt"),
+        txt.getBytes("UTF-8"))
+      println(s"[explain] wrote $outDir/$n.txt")
     }
     spark.stop()
   }

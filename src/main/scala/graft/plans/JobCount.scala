@@ -11,8 +11,8 @@ package graft.plans
   * ([[graft.GraftSession.drainListenerBus]]). */
 object JobCount {
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.map(_.split(",").toSeq)
-      .getOrElse(Seq("sim_ann_ivf"))
+    val gates = graft.SparkEntry.gates(
+      args.headOption.map(_.split(",").toSeq).getOrElse(Seq("sim_ann_ivf")))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession("graft-jobcount")
     spark.sparkContext.setLogLevel("ERROR")
@@ -57,46 +57,42 @@ object JobCount {
               .addAndGet(m.shuffleReadMetrics.totalBytesRead)
           }
       })
-    val byName = graft.SparkEntry.allQueries.map(q => q.name -> q).toMap
-    names.foreach { n =>
-      byName.get(n) match {
-        case Some(q) =>
-          // same memo/cache hygiene as a timed bench query
-          graft.operators.Dedup.invalidateBloomMemo(spark)
-          graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-          graft.operators.TotalOrder.dropPersistedStats(spark)
-          stageTasks.clear(); stageShufRead.clear()
-          val (j0, s0, t0, c0) =
-            (jobs.get(), stages.get(), tasks.get(), cpuNs.get())
-          val w0 = System.nanoTime()
-          q.run(spark, sfDir).count()
-          val wall = (System.nanoTime() - w0) / 1e9
-          graft.GraftSession.drainListenerBus(spark)
-          println(f"[jobcount] $n%-28s jobs=${jobs.get() - j0}%3d " +
-            f"stages=${stages.get() - s0}%3d tasks=${tasks.get() - t0}%5d " +
-            f"wall=$wall%.3f cpu=${(cpuNs.get() - c0) / 1e9}%.3f")
-          if (sys.env.contains("GRAFT_STAGES")) {
-            // per-stage task-time shape, heaviest stages first: the
-            // guide-§2.5 skew read (max ≫ median) and the straggler read
-            // (sum ≪ n×max) in one line per stage
-            import scala.jdk.CollectionConverters._
-            val byStage = stageTasks.asScala.toSeq.map { case (sid, q) =>
-              val ds = q.asScala.toArray.sorted
-              val sum = ds.sum
-              (sid, ds, sum)
-            }.sortBy(-_._3).take(12)
-            byStage.foreach { case (sid, ds, sum) =>
-              val med = if (ds.isEmpty) 0L else ds(ds.length / 2)
-              val mx = if (ds.isEmpty) 0L else ds.last
-              val sr = Option(stageShufRead.get(sid)).map(_.get).getOrElse(0L)
-              println(f"[stage] $n%-22s stage=$sid%4d n=${ds.length}%5d " +
-                f"sum=${sum / 1e3}%8.2fs med=${med / 1e3}%7.3fs " +
-                f"max=${mx / 1e3}%7.3fs shufRead=${sr / 1e6}%8.1fMB")
-            }
-          }
-          spark.catalog.clearCache()
-        case None => System.err.println(s"[jobcount] unknown query '$n'")
+    gates.foreach { q =>
+      val n = q.name
+      // same memo/cache hygiene as a timed bench query
+      graft.operators.Dedup.invalidateBloomMemo(spark)
+      graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
+      graft.operators.TotalOrder.dropPersistedStats(spark)
+      stageTasks.clear(); stageShufRead.clear()
+      val (j0, s0, t0, c0) =
+        (jobs.get(), stages.get(), tasks.get(), cpuNs.get())
+      val w0 = System.nanoTime()
+      q.run(spark, sfDir).count()
+      val wall = (System.nanoTime() - w0) / 1e9
+      graft.GraftSession.drainListenerBus(spark)
+      println(f"[jobcount] $n%-28s jobs=${jobs.get() - j0}%3d " +
+        f"stages=${stages.get() - s0}%3d tasks=${tasks.get() - t0}%5d " +
+        f"wall=$wall%.3f cpu=${(cpuNs.get() - c0) / 1e9}%.3f")
+      if (sys.env.contains("GRAFT_STAGES")) {
+        // per-stage task-time shape, heaviest stages first: the
+        // guide-§2.5 skew read (max ≫ median) and the straggler read
+        // (sum ≪ n×max) in one line per stage
+        import scala.jdk.CollectionConverters._
+        val byStage = stageTasks.asScala.toSeq.map { case (sid, q) =>
+          val ds = q.asScala.toArray.sorted
+          val sum = ds.sum
+          (sid, ds, sum)
+        }.sortBy(-_._3).take(12)
+        byStage.foreach { case (sid, ds, sum) =>
+          val med = if (ds.isEmpty) 0L else ds(ds.length / 2)
+          val mx = if (ds.isEmpty) 0L else ds.last
+          val sr = Option(stageShufRead.get(sid)).map(_.get).getOrElse(0L)
+          println(f"[stage] $n%-22s stage=$sid%4d n=${ds.length}%5d " +
+            f"sum=${sum / 1e3}%8.2fs med=${med / 1e3}%7.3fs " +
+            f"max=${mx / 1e3}%7.3fs shufRead=${sr / 1e6}%8.1fMB")
+        }
       }
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -153,10 +153,9 @@ object SimilarityQueries {
     // layout every run). The delivered `cell` is hash-checked against
     // the oracle's replay of the md5-sample + cosine-argmax assignment,
     // so the quantizer freeze — not just the counts — is certified.
-    // Cold run persists the delivery ledger (StreamGates semantics-
-    // versioned naming; foreachBatch checkpoint contract), warm runs
-    // serve it; a lost index or ledger forces the deterministic
-    // reset-and-rebuild path (buildPortable overwrites the cells layout).
+    // Every run is deterministic BY RESET: buildPortable overwrites the
+    // centroids and the cells layout before the triggers, and
+    // n_deliveries counts this run's deliveries.
     GQuery(
       "stream_ann_append_replay",
       """WITH ranked AS (
@@ -184,36 +183,27 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       def slice(lo: Int, hi: Int) =
         emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
-      val (gaisPrefix, gaisVer) = ("gais_", "s1")
-      val name = graft.core.StreamGates.table(gaisPrefix, dir, gaisVer)
-      val ledger = s"${name}_dlv"
       val store = new graft.etl.ParquetStore(s,
-        s.conf.get("spark.sql.warehouse.dir") + "/" + name)
-      if (!s.catalog.tableExists(ledger)
-          || !store.exists("idx_centroids") || !store.exists("idx_cells")) {
-        graft.core.Warehouse.reclaimOrphan(s, ledger)
-        // the versioned ParquetStore root (gais_<crc>_sN/) is not a
-        // catalog table — a semVer bump leaks it without this sweep
-        graft.core.StreamGates.reclaimSiblings(s, gaisPrefix, dir, gaisVer)
-        // deterministic BY RESET: the grown cells layout is the stream's
-        // output, so rebuild the corpus-only index before the triggers
-        IvfIndex.buildPortable(slice(0, 300), store, "idx", numCentroids = 16)
-        val dlv = new graft.core.StreamGates.DeliveryLedger
-        AnnStream.trigger(slice(300, 350), 0L, store, "idx", dlv.sink)
-        // at-least-once replay of batch 0 — same assignments delivered
-        // again, no new index rows
-        AnnStream.trigger(slice(300, 350), 0L, store, "idx", dlv.sink)
-        AnnStream.trigger(slice(350, 400), 1L, store, "idx", dlv.sink)
-        dlv.persist(
-          emb.select(col("vec_id")).withColumn("cell", lit(0L)).limit(0),
-          Seq("vec_id", "cell"), ledger)
-      }
+        s.conf.get("spark.sql.warehouse.dir") + "/" +
+          graft.core.StreamGates.table("gais_", dir))
+      // the grown cells layout is the stream's output, so rebuild the
+      // corpus-only index before the triggers
+      IvfIndex.buildPortable(slice(0, 300), store, "idx", numCentroids = 16)
+      val dlv = new graft.core.StreamGates.DeliveryLedger
+      AnnStream.trigger(slice(300, 350), 0L, store, "idx", dlv.sink)
+      // at-least-once replay of batch 0 — same assignments delivered
+      // again, no new index rows
+      AnnStream.trigger(slice(300, 350), 0L, store, "idx", dlv.sink)
+      AnnStream.trigger(slice(350, 400), 1L, store, "idx", dlv.sink)
       val idxRows = store.read("idx_cells")
         .filter(col("src_batch") =!= lit(IvfIndex.NoBatch))
         .groupBy(col("cand_id").as("vec_id"))
         .agg(count(lit(1)).as("n_index_rows"))
       slice(300, 400).select("vec_id")
-        .join(s.table(ledger), Seq("vec_id"), "left")
+        .join(dlv.counts(
+            emb.select(col("vec_id")).withColumn("cell", lit(0L)).limit(0),
+            Seq("vec_id", "cell")),
+          Seq("vec_id"), "left")
         .join(idxRows, Seq("vec_id"), "left")
         .select(col("vec_id"), col("cell").cast("long").as("cell"),
           coalesce(col("n_deliveries"), lit(0L)).as("n_deliveries"),

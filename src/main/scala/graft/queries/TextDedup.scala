@@ -359,10 +359,10 @@ object TextDedup {
     // the hash breaks). Because cell merge is additive, the final table
     // state equals the batch sketch over the union slice — which is what
     // the oracle replays as batch SQL (same md5+Carter–Wegman family,
-    // WHERE doc_id < 300). Idempotent across runs: the guard skips
-    // already-landed batch ids, so re-running the gate serves the same
-    // state; a fresh JVM re-seeds via the versioned write-then-retarget
-    // lifecycle.
+    // WHERE doc_id < 300). Every run re-seeds first (a new physical
+    // version through the versioned write-then-retarget lifecycle), so
+    // the triggers always land on the seed alone and no run reads state
+    // an earlier run left.
     GQuery(
       "stream_cms_replay",
       cmsOracle(depth = 4, width = 256,
@@ -372,19 +372,9 @@ object TextDedup {
       import graft.streaming.CmsStream
       val (depth, width) = (4, 256)
       val docs = t(s, dir, "documents")
-      // semantics-versioned state name (StreamGates contract): bump the
-      // semVer if the seed/batch slices or sketch params change
-      // ONE (prefix, semVer) pair feeds both the name and the sweep — a
-      // bump that updated one literal but not the other would misdirect
-      // the sweep at the new version's own state
-      val (cmsPrefix, cmsVer) = ("graft_cms_stream_", "s1")
-      val table = graft.core.StreamGates.table(cmsPrefix, dir, cmsVer)
-      if (!s.catalog.tableExists(table)) {
-        // cold path: sweep retired-version state for this prefix+dir
-        graft.core.StreamGates.reclaimSiblings(s, cmsPrefix, dir, cmsVer)
-        CmsStream.seed(docs.filter(col("doc_id") < 100), "text", table,
-          depth, width)
-      }
+      val table = graft.core.StreamGates.table("graft_cms_stream_", dir)
+      CmsStream.seed(docs.filter(col("doc_id") < 100), "text", table,
+        depth, width)
       def slice(lo: Int, hi: Int) =
         docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
       CmsStream.trigger(slice(100, 200), 0L, "text", table, depth, width)
@@ -423,16 +413,9 @@ object TextDedup {
     // gains duplicate rows → n_key_rows 2 ≠ 1 → hash break). Deliveries
     // are frozen at delivery time (localCheckpoint — the sink's
     // at-least-once view), counted distributedly; no driver collect.
-    // Idempotence across runs follows stream_cms_replay's guard-skip
-    // pattern, extended to the delivered stream: the COLD run drives the
-    // production triggers and persists the per-key delivery ledger next
-    // to the keys table (a production stream's deliveries land in a sink
-    // table just like this); later runs serve the ledger — a re-run must
-    // not re-deliver batches whose commit already landed, which is
-    // exactly foreachBatch's checkpoint contract. n_key_rows always
-    // reads the LIVE keys table, so the persisted state stays certified
-    // on every run; a fresh JVM re-seeds after reclaiming the orphaned
-    // warehouse dirs.
+    // Every run re-seeds the keys table and recovers the bitmap from it
+    // before the triggers, so n_deliveries counts this run's deliveries
+    // and n_key_rows reads the LIVE keys table they left.
     GQuery(
       "stream_bloom_replay",
       """SELECT doc_id,
@@ -447,35 +430,22 @@ object TextDedup {
       val keys = t(s, dir, "documents").select(col("doc_id"))
       def slice(lo: Int, hi: Int) =
         keys.filter(col("doc_id") >= lo && col("doc_id") < hi)
-      // semantics-versioned state/ledger names (StreamGates contract): a
-      // changed batch construction bumps the semVer, so a stale ledger
-      // can never be served against the new oracle (r13 verdict item)
-      val (bloomPrefix, bloomVer) = ("graft_bloom_stream_", "s1")
-      val table = graft.core.StreamGates.table(bloomPrefix, dir, bloomVer)
-      val ledger = s"${table}_dlv"
-      if (!s.catalog.tableExists(table) || !s.catalog.tableExists(ledger)) {
-        // a previous JVM's managed dirs may outlive their catalog entries
-        graft.core.Warehouse.reclaimOrphan(s, table)
-        graft.core.Warehouse.reclaimOrphan(s, ledger)
-        // and retired-version siblings never get a name reuse at all
-        graft.core.StreamGates.reclaimSiblings(s, bloomPrefix, dir, bloomVer)
-        BloomStream.seed(slice(0, 100), "doc_id", table)
-        val state = BloomStream.recover(s, table, "doc_id", mBits, k)
-        val dlv = new graft.core.StreamGates.DeliveryLedger
-        val b0 = slice(100, 200).unionByName(slice(0, 20))
-        val b1 = slice(200, 300).unionByName(slice(120, 140))
-          .unionByName(slice(20, 40))
-        BloomStream.trigger(b0, 0L, "doc_id", table, state, dlv.sink)
-        BloomStream.trigger(b1, 1L, "doc_id", table, state, dlv.sink)
-        // at-least-once replay of batch 0 — same survivors, no new keys
-        BloomStream.trigger(b0, 0L, "doc_id", table, state, dlv.sink)
-        dlv.persist(keys.limit(0), Seq("doc_id"), ledger)
-      }
+      val table = graft.core.StreamGates.table("graft_bloom_stream_", dir)
+      BloomStream.seed(slice(0, 100), "doc_id", table)
+      val state = BloomStream.recover(s, table, "doc_id", mBits, k)
+      val dlv = new graft.core.StreamGates.DeliveryLedger
+      val b0 = slice(100, 200).unionByName(slice(0, 20))
+      val b1 = slice(200, 300).unionByName(slice(120, 140))
+        .unionByName(slice(20, 40))
+      BloomStream.trigger(b0, 0L, "doc_id", table, state, dlv.sink)
+      BloomStream.trigger(b1, 1L, "doc_id", table, state, dlv.sink)
+      // at-least-once replay of batch 0 — same survivors, no new keys
+      BloomStream.trigger(b0, 0L, "doc_id", table, state, dlv.sink)
       s.catalog.refreshTable(table)
       val keyRows = s.table(table)
         .groupBy("doc_id").agg(count(lit(1)).as("n_key_rows"))
       keys.filter(col("doc_id") < 300)
-        .join(s.table(ledger), Seq("doc_id"), "left")
+        .join(dlv.counts(keys.limit(0), Seq("doc_id")), Seq("doc_id"), "left")
         .join(keyRows, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_deliveries"), lit(0L)).as("n_deliveries"),
@@ -496,15 +466,12 @@ object TextDedup {
     // the check must exclude same-batch index rows (else the replayed
     // batch anti-joins its own appended survivors → n_deliveries 1 ≠ 2)
     // and the append must skip them (else duplicate token-set rows →
-    // n_index_rows 2 ≠ 1). The COLD run is deterministic BY RESET, not
-    // by guard-skip: the grown index is the stream's OUTPUT, so build()
-    // re-lands the corpus-only index as the next physical version
-    // (atomic retarget supersedes any previous appends) before the
-    // triggers run. Completed runs persist the delivery ledger (the
-    // cms-gate guard-skip pattern extended to the delivered stream —
-    // foreachBatch's checkpoint contract is precisely "don't re-fire
-    // committed batches"), so re-runs serve it; n_index_rows always
-    // reads the LIVE index, keeping the persisted state certified.
+    // n_index_rows 2 ≠ 1). Every run is deterministic BY RESET: the
+    // grown index is the stream's OUTPUT, so build() re-lands the
+    // corpus-only index as the next physical version (atomic retarget
+    // supersedes any previous appends) before the triggers run;
+    // n_deliveries counts this run's deliveries and n_index_rows reads
+    // the LIVE index they grew.
     GQuery(
       "stream_banddedup_replay",
       s"""WITH corp AS (
@@ -593,38 +560,26 @@ object TextDedup {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       def slice(lo: Int, hi: Int) =
         docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-      // semantics-versioned names (StreamGates contract, see bloom gate)
-      val (gbsrPrefix, gbsrVer) = ("gbsr_", "s1")
-      val idx = graft.core.StreamGates.table(gbsrPrefix, dir, gbsrVer)
-      val ledger = s"${idx}_dlv"
-      // guard BOTH the ledger and the index: a surviving ledger with a
-      // lost index must take the deterministic reset-and-rebuild path,
-      // not throw in the warm path's live index read (mirrors the bloom
-      // gate's two-table guard)
-      if (!s.catalog.tableExists(ledger)
-          || !s.catalog.tableExists(s"${idx}_toks")) {
-        graft.core.Warehouse.reclaimOrphan(s, ledger)
-        graft.core.StreamGates.reclaimSiblings(s, gbsrPrefix, dir, gbsrVer)
-        graft.operators.BandIndex.build(slice(0, 300), "doc_id", "text",
-          numHashes = 64, bands = 16, buckets = 8, idx)
-        val dlv = new graft.core.StreamGates.DeliveryLedger
-        val sink = (df: org.apache.spark.sql.DataFrame) =>
-          dlv.sink(df.select("doc_id"))
-        val (b0, b1) = (slice(300, 350), slice(350, 400))
-        EventStreams.growIndexTrigger(b0, 0L, "doc_id", "text",
-          numHashes = 64, bands = 16, threshold = 0.8, idx, buckets = 8, sink)
-        // at-least-once replay of batch 0 before the next batch lands —
-        // the trigger-retry case foreachBatch actually produces
-        EventStreams.growIndexTrigger(b0, 0L, "doc_id", "text",
-          numHashes = 64, bands = 16, threshold = 0.8, idx, buckets = 8, sink)
-        EventStreams.growIndexTrigger(b1, 1L, "doc_id", "text",
-          numHashes = 64, bands = 16, threshold = 0.8, idx, buckets = 8, sink)
-        dlv.persist(docs.select("doc_id").limit(0), Seq("doc_id"), ledger)
-      }
+      val idx = graft.core.StreamGates.table("gbsr_", dir)
+      graft.operators.BandIndex.build(slice(0, 300), "doc_id", "text",
+        numHashes = 64, bands = 16, buckets = 8, idx)
+      val dlv = new graft.core.StreamGates.DeliveryLedger
+      val sink = (df: org.apache.spark.sql.DataFrame) =>
+        dlv.sink(df.select("doc_id"))
+      val (b0, b1) = (slice(300, 350), slice(350, 400))
+      EventStreams.growIndexTrigger(b0, 0L, "doc_id", "text",
+        numHashes = 64, bands = 16, threshold = 0.8, idx, buckets = 8, sink)
+      // at-least-once replay of batch 0 before the next batch lands —
+      // the trigger-retry case foreachBatch actually produces
+      EventStreams.growIndexTrigger(b0, 0L, "doc_id", "text",
+        numHashes = 64, bands = 16, threshold = 0.8, idx, buckets = 8, sink)
+      EventStreams.growIndexTrigger(b1, 1L, "doc_id", "text",
+        numHashes = 64, bands = 16, threshold = 0.8, idx, buckets = 8, sink)
       val idxRows = graft.core.VersionedTable.refreshed(s, s"${idx}_toks")
         .groupBy("doc_id").agg(count(lit(1)).as("n_index_rows"))
       slice(300, 400).select("doc_id")
-        .join(s.table(ledger), Seq("doc_id"), "left")
+        .join(dlv.counts(docs.select("doc_id").limit(0), Seq("doc_id")),
+          Seq("doc_id"), "left")
         .join(idxRows, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_deliveries"), lit(0L)).as("n_deliveries"),

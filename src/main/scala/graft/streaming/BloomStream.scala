@@ -63,10 +63,14 @@ object BloomStream {
 
   /** Seed the keys table from an existing corpus (src_batch = NoBatch so
     * no real trigger's replay guard can ever exclude corpus rows). */
-  def seed(corpus: DataFrame, keyCol: String, keysTable: String): Unit =
+  def seed(corpus: DataFrame, keyCol: String, keysTable: String): Unit = {
+    // a previous JVM's managed location may survive its (in-memory)
+    // catalog entry and block re-creation — reclaim it first
+    graft.core.Warehouse.reclaimOrphan(corpus.sparkSession, keysTable)
     corpus.select(col(keyCol)).distinct()
       .withColumn("src_batch", lit(NoBatch))
       .write.mode("overwrite").saveAsTable(keysTable)
+  }
 
   /** Rebuild the driver bitmap from the keys table — the bounded collect
     * is of [[Dedup.bloomWords]]'s ≤ m/64-row frame, never of keys. */

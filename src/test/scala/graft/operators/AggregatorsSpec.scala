@@ -28,6 +28,18 @@ class AggregatorsSpec extends SparkSpec {
     assert(got === expected)
   }
 
+  test("TopK skips NULL inputs; an all-NULL group has an empty top-k") {
+    import spark.implicits._
+    val topk = udaf(Aggregators.TopK(3))
+    val got = Seq[(String, Option[Double])](
+        ("a", Some(-5.0)), ("a", Some(-3.0)), ("a", None), ("a", Some(4.0)),
+        ("b", None), ("b", None))
+      .toDF("g", "v")
+      .groupBy("g").agg(topk(col("v")).as("top3"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    assert(got === Map("a" -> Seq(4.0, -3.0, -5.0), "b" -> Seq.empty[Double]))
+  }
+
   test("WeightedMean aggregator: quantity-weighted price per flag") {
     import spark.implicits._
     val li = graft.core.Tables(spark, "/root/testdata/sf0.001", "lineitem")

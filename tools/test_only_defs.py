@@ -4,8 +4,11 @@
 For every public `def`, `val`, `var`, `object`, `class` and `trait` declared
 in src/main/scala, the check counts the files under src/main/scala and
 perfbench/src that use the name as a whole identifier, with comments
-stripped. A name that occurs nowhere apart from its own definition is a
-hit: only tests (or nothing) can reach it.
+stripped. A name is reached only when it occurs more times than it is
+declared in that code, so two unused defs that share a name (say two
+`compact` methods) do not count as each other's use. A name that occurs
+nowhere apart from its own declarations is a hit: only tests (or nothing)
+can reach it.
 
 Hits listed in tools/test_only_defs.allow pass; any other hit fails the
 check. Allowlist lines are `<file stem>.<name>  # reason` (the file stem is
@@ -17,9 +20,10 @@ outlive the code it excuses.
 Limits, by design of a name scan:
   * It checks one level only. A def whose only caller is another
     test-only def is not found; delete the outer one and run again.
-  * Names are matched textually, so a test-only def that shares its name
-    with any other identifier in the program (an overload, a common word
-    such as `apply` or `build`) is not found either.
+  * Names are matched textually, so a test-only def whose name is also
+    used as another identifier in the program (a common word such as
+    `apply` or `build`, a parameter, a called overload) is not found
+    either.
   * `override` members and members marked `private`/`protected` (with or
     without a qualifier) are skipped.
 
@@ -102,6 +106,10 @@ def scala_files(roots):
 def hits():
     texts = {p: strip_comments(open(p, encoding="utf-8").read())
              for p in scala_files(SEARCH)}
+    declared = {}
+    for text in texts.values():
+        for m in DECL.finditer(text):
+            declared[m.group(3)] = declared.get(m.group(3), 0) + 1
     found = []
     for path, text in texts.items():
         if not path.startswith(MAIN + os.sep):
@@ -114,7 +122,7 @@ def hits():
             word = re.compile(r"(?<![A-Za-z0-9_])" + re.escape(name) +
                               r"(?![A-Za-z0-9_$])")
             uses = sum(len(word.findall(t)) for t in texts.values())
-            if uses <= 1:
+            if uses <= declared[name]:
                 line = text.count("\n", 0, m.start(3)) + 1
                 found.append((f"{stem}.{name}",
                               f"{os.path.relpath(path, ROOT)}:{line}"))
