@@ -158,14 +158,12 @@ object Bench {
 
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMDIR", sfDir)
     queries.foreach { q =>
-      // warm under the SAME memo state as the timed pass (memos cleared,
-      // any ingest-landed order-stats table dropped) — a warm pass with
-      // warm state can compile a different plan shape than the cold timed
-      // pass will run, and the timed region then pays the Janino+JIT
-      // compile the warm pass exists to absorb
-      graft.operators.Dedup.invalidateBloomMemo(spark)
-      graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-      graft.operators.TotalOrder.dropPersistedStats(spark)
+      // warm under the SAME memo state as the timed pass (memos
+      // cleared) — a warm pass with warm state can compile a different
+      // plan shape than the cold timed pass will run, and the timed
+      // region then pays the Janino+JIT compile the warm pass exists to
+      // absorb
+      GraftSession.resetGateState(spark)
       try q.run(spark, warmDir).count() catch { case _: Throwable => () }
       spark.catalog.clearCache() // bound storage across the warm sweep
     }
@@ -186,21 +184,16 @@ object Bench {
     // that amortization is their production contract. For MEASUREMENT it
     // would be an asymmetry: the warm sweep pre-populates them, so timed
     // probes would skip the corpus scan their gate SQL implies while the
-    // DuckDB baseline executes the full NOT EXISTS/scan every run. Reset
-    // both memos before every timed query (and before cold reruns) so each
-    // measured number includes the build its oracle semantics include.
-    // No gate serves catalog state an earlier run wrote: the token-budget
-    // gates build their order stats into the memo through
-    // ensureOrderStats, so the reset makes each timed gate pay that build,
-    // and the stream replay gates reset their state tables (seed or index
-    // build) and drive their triggers on every run. Order-stats tables
-    // landed by TotalOrder.persistOrderStats (an explicit ingest call no
-    // gate makes) are dropped on the same schedule, so none can be served.
-    def resetMemos(): Unit = {
-      graft.operators.Dedup.invalidateBloomMemo(spark)
-      graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-      graft.operators.TotalOrder.dropPersistedStats(spark)
-    }
+    // DuckDB baseline executes the full NOT EXISTS/scan every run.
+    // GraftSession.resetGateState clears both memos and the cache before
+    // every timed query (and before cold reruns), so each measured number
+    // includes the build its oracle semantics include. No gate serves
+    // state an earlier run left behind: the token-budget gates build
+    // their order stats into the memo through ensureOrderStats, so the
+    // reset makes each timed gate pay that build; dedup_incremental
+    // builds the band index it probes; and the stream replay gates reset
+    // their state tables (seed or index build) and drive their triggers
+    // on every run.
 
     val loadStart = loadavg()
     // name, first, rerun, loadavg at rerun start
@@ -214,7 +207,7 @@ object Bench {
       loads ::= (q.name -> loadAtStart)
       val (spill0, fail0, cpu0) =
         (health.spilled.get(), health.failed.get(), health.cpuNs.get())
-      resetMemos()
+      GraftSession.resetGateState(spark)
       def once(): Double = {
         val t0 = System.nanoTime()
         try { q.run(spark, sfDir).count() } catch { case _: Throwable => () }
@@ -236,8 +229,7 @@ object Bench {
         // every cache-heavy query look like a load spike — the exact
         // ambiguity the rerun exists to resolve. Fresh loadavg recorded
         // so the pair is interpretable on a time-shared host.
-        spark.catalog.clearCache()
-        resetMemos()
+        GraftSession.resetGateState(spark)
         val rerunLoad = loadavg()
         reruns ::= ((q.name, first, once(), rerunLoad))
       }

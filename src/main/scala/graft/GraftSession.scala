@@ -36,6 +36,18 @@ object GraftSession {
       .getOrCreate()
   }
 
+  /** The state a measured gate run starts from: the driver-side memos
+    * (Dedup's bloom bitmap, TotalOrder's order statistics) and Spark's
+    * cached frames cleared, so each run pays the builds its oracle SQL
+    * implies. The memos deliberately survive `clearCache()` in
+    * production; Bench, `plans.JobCount` and the job-count spec call
+    * this before every gate they measure. */
+  def resetGateState(spark: SparkSession): Unit = {
+    graft.operators.Dedup.invalidateBloomMemo(spark)
+    graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
+    spark.catalog.clearCache()
+  }
+
   /** Blocks until every listener event posted so far has been delivered.
     * Listener delivery is asynchronous, so counters a listener keeps are
     * read only after this. Uses the bus's own `waitUntilEmpty` (private

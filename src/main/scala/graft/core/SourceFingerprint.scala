@@ -21,8 +21,8 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, File
   * and timestamps coincide. Non-file leaves (in-memory rows, JDBC)
   * contribute nothing: LocalRelation data is part of the semantic hash
   * already, and JDBC-backed memo staleness cannot be fingerprinted
-  * cheaply from the driver (callers version those flows explicitly, as
-  * BandIndex does).
+  * cheaply from the driver (callers rebuild that state explicitly, as
+  * `BandIndex.build` does).
   *
   * Cost: the file listing is already materialized in the relation's
   * `FileIndex` at read time — no filesystem RPCs, a pure driver-side

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Managed-location hygiene for the persisted-state tables (BandIndex,
-  * CmsStream, BloomStream, TotalOrder boundaries): with the default
+  * CmsStream, BloomStream): with the default
   * in-memory catalog, table METADATA dies with the JVM but the managed
   * warehouse DIRECTORIES persist, so the next session's `saveAsTable`
   * under the same name fails with LOCATION_ALREADY_EXISTS even though,

@@ -3,14 +3,15 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Storage-agnostic (DataFrame → DataFrame) counterparts of
-  * [[JdbcWarehouseSink]]'s keyed load modes, for warehouses that live in
-  * parquet/object storage rather than behind JDBC — the lakehouse shape
-  * of the reference's load stage (SURVEY §7.3.5: the reference's
-  * re-runs duplicate dimension rows; `upsert`/SCD-2 are the [EXT] modes
-  * a production user needs). The JDBC sink pushes the matching into the
-  * warehouse as SQL; here the SAME set semantics run as Spark joins, so
-  * the result can be written back with an overwrite (or fed onward).
+/** Storage-agnostic (DataFrame → DataFrame) keyed load modes — the
+  * counterpart of [[JdbcWarehouseSink.upsert]] and an SCD-2 merge — for
+  * warehouses that live in parquet/object storage rather than behind
+  * JDBC: the lakehouse shape of the reference's load stage (SURVEY
+  * §7.3.5: the reference's re-runs duplicate dimension rows;
+  * `upsert`/SCD-2 are the [EXT] modes a production user needs). The
+  * JDBC sink pushes the upsert's matching into the warehouse as SQL;
+  * here the same set semantics run as Spark joins, so the result can be
+  * written back with an overwrite (or fed onward).
   *
   * Scale shape (both ops): ONE equi-join of the current snapshot against
   * the batch's key set plus a union — the key set is `|batch|` rows wide
@@ -38,12 +39,10 @@ object FrameLoads {
     * `valid_from`/`valid_to`/`is_current` (open rows have NULL
     * `valid_to`); each batch row CLOSES the open version of its key
     * (valid_to := effectiveDate, is_current := false) and opens a new
-    * current version — the same transition [[JdbcWarehouseSink.scd2Load]]
-    * runs as warehouse SQL. Historical (already-closed) rows pass
-    * through untouched. `batch` carries the business columns only; the
-    * three SCD columns are attached here. As with the JDBC form, a
-    * batch row always opens a new version — diff upstream if
-    * only-changed-rows history is wanted. */
+    * current version. Historical (already-closed) rows pass through
+    * untouched. `batch` carries the business columns only; the three
+    * SCD columns are attached here. A batch row always opens a new
+    * version — diff upstream if only-changed-rows history is wanted. */
   def scd2Merge(current: DataFrame, batch: DataFrame, keys: Seq[String],
       effectiveDate: Column): DataFrame = {
     require(keys.nonEmpty, "scd2Merge needs at least one key column")

@@ -430,34 +430,15 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     * parallel batched-insert path as [[append]] (executors do the data
     * movement), then ONE set-based transaction on the warehouse —
     * `DELETE … WHERE EXISTS (match on keys)` + `INSERT … SELECT` — swaps
-    * the matched rows. The driver never iterates rows: the DB performs
-    * the match as a join, so warehouse-side cost scales with the DB's
-    * join, not with a row-at-a-time driver loop. Batches must be
+    * the matched rows (rolled back if either statement fails), and the
+    * stage is dropped whether the transaction committed or rolled back.
+    * The driver never iterates rows: the DB performs the match as a
+    * join, so warehouse-side cost scales with the DB's join, not with a
+    * row-at-a-time driver loop. Batches must be
     * key-unique (dims are; a duplicate-key batch would insert both
     * copies, same as any SQL MERGE source). */
   def upsert(table: String, df: DataFrame, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, s"upsert into $table needs at least one key column")
-    stagedSwap(table, df, keys) { (stage, cols, matched) =>
-      (s"DELETE FROM ${q(table)} WHERE $matched",
-        s"INSERT INTO ${q(table)} ($cols) SELECT $cols FROM $stage")
-    }
-  }
-
-  /** Quotes an identifier the way Spark's JDBC writer quotes COLUMN names
-    * it creates (case-preserved; also covers "unit price"). */
-  private def q(id: String) = "\"" + id + "\""
-
-  /** The set-based swap [[upsert]] and [[scd2Load]] share: land `df`
-    * (conformed, writer-capped) in the `<table>_stage` table through the
-    * parallel batched-insert path, run the two statements `statements`
-    * builds in ONE transaction (rolled back if either fails, so a failed
-    * second statement leaves the first undone), then drop the stage,
-    * whether the transaction committed or rolled back.
-    * `statements` receives the quoted stage name, the quoted column list
-    * and the correlated `EXISTS` predicate that matches a `table` row to
-    * a stage row on `keys`. */
-  private def stagedSwap(table: String, df: DataFrame, keys: Seq[String])(
-      statements: (String, String, String) => (String, String)): Unit = {
     // table names pass through the writer verbatim, so the stage is
     // created under its quoted name to match the statements
     val stage = q(s"${table}_stage")
@@ -469,7 +450,6 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     val cols = frame.schema.fieldNames.map(q).mkString(", ")
     val matched = s"EXISTS (SELECT 1 FROM $stage s WHERE " +
       keys.map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ") + ")"
-    val (first, second) = statements(stage, cols, matched)
     JdbcSource.withConnection(url, props, table) { conn =>
       conn.setAutoCommit(false)
       val st = conn.createStatement()
@@ -477,8 +457,8 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
       // or stage drop that fails after it (a broken connection) is attached
       var failure: Throwable = null
       try {
-        st.executeUpdate(first)
-        st.executeUpdate(second)
+        st.executeUpdate(s"DELETE FROM ${q(table)} WHERE $matched")
+        st.executeUpdate(s"INSERT INTO ${q(table)} ($cols) SELECT $cols FROM $stage")
         conn.commit()
       } catch {
         case e: Throwable =>
@@ -494,6 +474,10 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     }
   }
 
+  /** Quotes an identifier the way Spark's JDBC writer quotes COLUMN names
+    * it creates (case-preserved; also covers "unit price"). */
+  private def q(id: String) = "\"" + id + "\""
+
   /** [[upsert]] with the star schema's declared natural keys
     * ([[Schemas.warehouseKeys]]); unknown tables refuse loudly rather
     * than guessing a key. */
@@ -501,38 +485,6 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     upsert(table, df, Schemas.warehouseKeys.getOrElse(table,
       throw new IllegalArgumentException(
         s"no declared natural key for $table — pass keys explicitly")))
-
-  /** [EXT] SCD-2 load: dimension history instead of replacement. Each
-    * row carries `valid_from`/`valid_to`/`is_current`; loading a batch
-    * CLOSES the current version of every matched key (valid_to :=
-    * batch's effective date, is_current := false) and inserts the new
-    * version as current — the slowly-changing-dimension type-2 pattern
-    * the reference's append-only loader approximates without effective
-    * dating (its re-runs keep all versions but give readers no way to
-    * pick one; SURVEY §7.3.5). Point-in-time queries join on
-    * `valid_from <= d < valid_to`; current-state queries filter
-    * `is_current`.
-    *
-    * Same set-based dataflow as [[upsert]] — staging table via the
-    * parallel writer, then one transaction: UPDATE-close + INSERT —
-    * so the warehouse does the matching as joins, never a driver loop.
-    * Unchanged-row detection is intentionally NOT done here (a batch
-    * row always opens a new version); feed deltas, or diff upstream
-    * with [[graft.operators.Dedup.exactGroups]]-style content hashing,
-    * if only-changed-rows history is wanted. */
-  def scd2Load(table: String, df: DataFrame, keys: Seq[String],
-      effectiveDate: java.sql.Date): Unit = {
-    require(keys.nonEmpty, s"scd2Load into $table needs at least one key column")
-    val d = "'" + effectiveDate.toString + "'"
-    stagedSwap(table, df, keys) { (stage, cols, matched) =>
-      (s"UPDATE ${q(table)} SET ${q("valid_to")} = DATE($d), " +
-        s"${q("is_current")} = false " +
-        s"WHERE ${q("is_current")} = true AND $matched",
-        s"INSERT INTO ${q(table)} ($cols, ${q("valid_from")}, " +
-          s"${q("valid_to")}, ${q("is_current")}) " +
-          s"SELECT $cols, DATE($d), CAST(NULL AS DATE), true FROM $stage")
-    }
-  }
 }
 
 /** The three stages chained over shared storage — the reference runs them

@@ -76,77 +76,6 @@ object BandIndex {
     writeIndex(corpus, idCol, textCol, numHashes, bands, buckets, name,
       mode = "overwrite", batchId = NoBatch)
 
-  /** Session memo for [[ensure]]: name → (corpus file fingerprint, plan
-    * semantic hash, numHashes, bands, buckets) already verified this
-    * session, so repeat ensure calls (every gate execution) are a pure
-    * driver-side check. */
-  private val ensureMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, (Long, Int, Int, Int, Int)]]()
-
-  /** Idempotent [[build]]: (re)builds the persisted index iff it is
-    * absent or its recorded provenance — corpus FILE fingerprint
-    * ([[graft.core.SourceFingerprint]]), corpus PLAN semantic hash, and
-    * the sketch parameters — no longer matches. The provenance lands in
-    * a one-row `<name>_meta` table next to the index, so a corpus
-    * rewrite between sessions triggers a rebuild instead of serving
-    * stale matches (the same staleness window the bloom memo closes
-    * with its fingerprint key). This is the entry point for flows whose
-    * per-batch cost should read the compact index, not re-sketch the
-    * corpus: ingest ensures once, every batch probes. */
-  def ensure(corpus: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, buckets: Int, name: String): Unit = {
-    val spark = corpus.sparkSession
-    val fpCovered = graft.core.SourceFingerprint.ofCovered(corpus)
-    if (fpCovered.isEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"BandIndex.ensure($name): corpus plan has no file-backed leaf " +
-          "to fingerprint — staleness detection degrades to plan-hash " +
-          "keying; a corpus rewrite behind the same plan will NOT " +
-          "trigger a rebuild (call build() explicitly after rewrites)")
-    val fp = fpCovered.getOrElse(0L)
-    val sem = corpus.semanticHash()
-    val memo = ensureMemo.synchronized {
-      val existing = ensureMemo.get(spark)
-      if (existing != null) existing
-      else {
-        val m = scala.collection.concurrent.TrieMap
-          .empty[String, (Long, Int, Int, Int, Int)]
-        ensureMemo.put(spark, m)
-        m
-      }
-    }
-    // the memo value carries the SKETCH PARAMETERS too: a same-session
-    // ensure under the same name with different (numHashes, bands,
-    // buckets) must fall through to the meta check and rebuild — band
-    // hashes from mismatched sketch params never line up, so serving the
-    // old index would silently return empty/wrong matches
-    if (memo.get(name).contains((fp, sem, numHashes, bands, buckets))) return
-    val metaName = s"${name}_meta"
-    val recorded: Option[(Long, Int, Int, Int, Int)] =
-      if (!spark.catalog.tableExists(metaName)) None
-      else try {
-        val r = spark.table(metaName).collect()(0)
-        Some((r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
-      } catch {
-        // unreadable meta ⇒ treat as no provenance and rebuild; NonFatal
-        // only so OOM/interrupts propagate instead of forcing a rebuild
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"graft.BandIndex: meta table $metaName unreadable: $e")
-          None
-      }
-    if (!recorded.contains((fp, sem, numHashes, bands, buckets))) {
-      build(corpus, idCol, textCol, numHashes, bands, buckets, name)
-      graft.core.Warehouse.reclaimOrphan(spark, metaName)
-      import spark.implicits._
-      Seq((fp, sem, numHashes, bands, buckets))
-        .toDF("fp", "sem", "num_hashes", "bands", "buckets")
-        .write.mode("overwrite").saveAsTable(metaName)
-    }
-    memo.put(name, (fp, sem, numHashes, bands, buckets))
-  }
-
   /** Incremental index maintenance: sketch ONLY `batch` and append its
     * bands/token-sets to the existing index tables. The write hashes the
     * batch into the tables' bucket layout — the corpus files are never

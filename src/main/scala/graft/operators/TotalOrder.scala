@@ -74,10 +74,7 @@ import graft.core.SourceFingerprint
   *
   * State: one session memo of order statistics (boundaries, and for a
   * bounded cum-sum the exact per-bucket totals of its weight), built on
-  * the query path and never written anywhere. [[persistOrderStats]] is
-  * the one call that writes: an ingest step lands the statistics as one
-  * fingerprinted catalog table, which the query path serves while the
-  * fingerprint matches the input's files.
+  * the query path and never written anywhere.
   *
   * Determinism: `orderCol` must be a total order (unique per row) for the
   * running values to be well-defined — the same requirement the
@@ -149,15 +146,17 @@ object TotalOrder {
 
   /** Drop the session's memoized order statistics. Correctness never
     * needs this (stale boundaries only skew bucket balance; stale totals
-    * are refused by fingerprint); Bench calls it per measured query so
-    * timed TotalOrder consumers pay the sketch and totals passes their
-    * oracle SQL implies rather than an amortized number. */
+    * are refused by fingerprint); [[graft.GraftSession.resetGateState]]
+    * calls it per measured gate so timed TotalOrder consumers pay the
+    * sketch and totals passes their oracle SQL implies rather than an
+    * amortized number. */
   def invalidateBoundaryMemo(spark: SparkSession): Unit =
     memo.synchronized(Option(memo.get(spark)).foreach(_.clear()))
 
-  /** Drop every order-stats table [[persistOrderStats]] landed in the
-    * session catalog. A measured run calls it per timed query, so no
-    * timed query is served state that an earlier run landed. */
+  /** Drop every `graft_ordstats_*` table in the session catalog; nothing
+    * in the program writes one. Kept only because the benchmark
+    * harness's per-gate reset (`perfbench` `Gates.reset`) calls it: the
+    * next change to the benchmark removes that call, and then this def. */
   def dropPersistedStats(spark: SparkSession): Unit =
     try spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_ordstats_")).foreach { name =>
@@ -169,13 +168,6 @@ object TotalOrder {
     catch {
       case NonFatal(e) => log.warn(s"dropPersistedStats failed: $e")
     }
-
-  private def statsTableFor(key: StatsKey): String = {
-    val crc = new java.util.zip.CRC32()
-    crc.update(s"${key._1}|${key._2}|${key._3}|${key._4.getOrElse("")}"
-      .getBytes("UTF-8"))
-    f"graft_ordstats_${crc.getValue}%08x"
-  }
 
   private def statsKey(df: DataFrame, img: Column, nb: Int,
       weightCol: String): StatsKey =
@@ -252,46 +244,16 @@ object TotalOrder {
     }
   }
 
-  /** The stats [[persistOrderStats]] landed for `key`, when its table
-    * exists and was built from the files `fp` witnesses. A stale or
-    * unreadable table is logged at WARN and serves nothing. */
-  private def landed(spark: SparkSession, key: StatsKey,
-      fp: Long): Option[OrderStats] = {
-    val name = statsTableFor(key)
-    try {
-      if (!spark.catalog.tableExists(name)) None
-      else spark.table(name).collect().headOption.flatMap { row =>
-        val (bnds, totals) =
-          (row.getSeq[Double](2).toIndexedSeq, row.getSeq[Long](3).toIndexedSeq)
-        if (row.getLong(0) != fp || !key._4.contains(row.getString(1))) {
-          log.warn(s"$name is stale: the data changed since the stats " +
-            "were landed")
-          None
-        } else if (totals.length != key._3 || bnds.length != key._3 - 1) {
-          log.warn(s"order-stats table $name does not hold ${key._3} buckets")
-          None
-        } else Some(OrderStats(Some(bnds), Some((fp, totals))))
-      }
-    } catch {
-      case NonFatal(e) =>
-        log.warn(s"order-stats table $name unreadable: $e")
-        None
-    }
-  }
-
   /** The fingerprint-checked (boundaries, per-bucket totals) for
     * (df, img, nb, weightCol): the memo entry while its fingerprint
-    * equals the input's current one, else a current landed table
-    * (memoized). None when the input has no fingerprintable file leaf
-    * or nothing current exists; never builds, so a cut whose stats were
-    * not ensured stays in-plan. */
+    * equals the input's current one. None when the input has no
+    * fingerprintable file leaf or no current entry exists; never builds,
+    * so a cut whose stats were not ensured stays in-plan. */
   private def servedOrderStats(df: DataFrame, img: Column, nb: Int,
       weightCol: String): Option[(IndexedSeq[Double], IndexedSeq[Long])] =
     SourceFingerprint.ofCovered(df).flatMap { fp =>
-      val key = statsKey(df, img, nb, weightCol)
-      val m = memoFor(df.sparkSession)
-      m.get(key).filter(_.totals.exists(_._1 == fp))
-        .orElse(landed(df.sparkSession, key, fp).map { s => m.put(key, s); s })
+      memoFor(df.sparkSession).get(statsKey(df, img, nb, weightCol))
+        .filter(_.totals.exists(_._1 == fp))
         .collect { case OrderStats(Some(bnds), Some((_, totals))) => (bnds, totals) }
     }
 
@@ -301,9 +263,9 @@ object TotalOrder {
     * bounded [[globalCumSum]] over the same input then prunes the SCAN to
     * the buckets that can land under its bound and adds prefix offsets
     * as literals: zero aggregates, zero joins, one window exchange over
-    * ~⌈bound/bucket⌉ buckets. Served from the memo or a current
-    * [[persistOrderStats]] table when either exists, else built (one
-    * sketch pass and one totals pass, one job each). Writes nothing.
+    * ~⌈bound/bucket⌉ buckets. Served from the memo when a current entry
+    * exists, else built (one sketch pass and one totals pass, one job
+    * each). Writes nothing.
     * A no-op when the order type has no numeric image; logged at DEBUG
     * when the input has no fingerprintable file leaf (staleness could
     * not be witnessed), the weight does not sum to BIGINT, or the input
@@ -322,47 +284,6 @@ object TotalOrder {
             buildOrderStats(df, img, nb, weightCol, fp).foreach(s =>
               memoFor(df.sparkSession).put(statsKey(df, img, nb, weightCol), s))
         }
-    }
-
-  /** Ingest API: land the weighted order statistics of (df, orderCol,
-    * weightCol) — fingerprint, boundaries and totals — as ONE catalog
-    * table, so a COLD consumer of the same input (a new session, or a
-    * memo-reset run) serves them instead of re-scanning the corpus. The
-    * versioned-state analogue of [[BandIndex]]: an ingest pipeline lands
-    * the stats once next to the data it lands. The build path reads the
-    * table only while its fingerprint matches the input's files.
-    * Idempotent: a no-op when a current table exists; a stale one is
-    * rewritten. Skips with a WARN when there is nothing to serve (the
-    * conditions of [[ensureOrderStats]]). Write failures propagate. */
-  def persistOrderStats(df: DataFrame, orderCol: String,
-      weightCol: String): Unit =
-    doubleImage(df.schema(orderCol).dataType, col(orderCol)).foreach { img =>
-      val spark = df.sparkSession
-      val nb = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val key = statsKey(df, img, nb, weightCol)
-      val name = statsTableFor(key)
-      if (nb > 1) SourceFingerprint.ofCovered(df) match {
-        case None =>
-          log.warn(s"$name not persisted: the input has no fingerprintable " +
-            "file leaf, staleness could not be witnessed")
-        case Some(fp) if landed(spark, key, fp).isDefined => () // current
-        case Some(fp) =>
-          memoFor(spark).get(key).filter(_.totals.exists(_._1 == fp))
-            .orElse(buildOrderStats(df, img, nb, weightCol, fp)) match {
-            case Some(s @ OrderStats(Some(bnds), Some((_, totals)))) =>
-              memoFor(spark).put(key, s)
-              // a previous JVM's managed location may survive its
-              // (in-memory) catalog entry and block re-creation
-              graft.core.Warehouse.reclaimOrphan(spark, name)
-              import spark.implicits._
-              Seq((fp, weightCol, bnds.toSeq, totals.toSeq))
-                .toDF("_fp", "_wt", "_bnds", "_ptots")
-                .write.mode("overwrite").saveAsTable(name)
-            case _ =>
-              log.warn(s"$name not persisted: the input is empty or " +
-                s"sum($weightCol) is not BIGINT")
-          }
-      }
     }
 
   /** Bucket id of `img` against the broadcast `_bnds` array: count of

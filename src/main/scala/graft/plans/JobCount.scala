@@ -60,9 +60,7 @@ object JobCount {
     gates.foreach { q =>
       val n = q.name
       // same memo/cache hygiene as a timed bench query
-      graft.operators.Dedup.invalidateBloomMemo(spark)
-      graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-      graft.operators.TotalOrder.dropPersistedStats(spark)
+      graft.GraftSession.resetGateState(spark)
       stageTasks.clear(); stageShufRead.clear()
       val (j0, s0, t0, c0) =
         (jobs.get(), stages.get(), tasks.get(), cpuNs.get())

@@ -761,8 +761,7 @@ object TextDedup {
         |JOIN sz s2 ON s2.doc_id = id2
         |WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8
         |ORDER BY id1, id2""".stripMargin) { (s, dir) =>
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      Dedup.jaccardPairs(Dedup.tokenSet(docs, "doc_id", "text"), 0.8)
+      nearDupPairs(nearDupScope(s, dir))
         .orderBy("id1", "id2")
     },
 
@@ -869,8 +868,8 @@ object TextDedup {
         |SELECT doc_id, lang FROM documents
         |WHERE doc_id < 200 AND doc_id NOT IN (SELECT id2 FROM dropped)
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val pairs = Dedup.jaccardPairs(Dedup.tokenSet(docs, "doc_id", "text"), 0.8)
+      val docs = nearDupScope(s, dir)
+      val pairs = nearDupPairs(docs)
       Dedup.keepList(docs, "doc_id", pairs)
         .select("doc_id", "lang")
         .orderBy("doc_id")
@@ -882,26 +881,7 @@ object TextDedup {
     // proves chains a~b~c collapse even when a,c never paired directly.
     GQuery(
       "dedup_keep_best",
-      """WITH RECURSIVE w AS (
-        |  SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents WHERE doc_id < 200),
-        |sz AS (SELECT doc_id, count(*) AS n FROM w GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-        |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id1, id2 FROM inter
-        |  JOIN sz s1 ON s1.doc_id = id1
-        |  JOIN sz s2 ON s2.doc_id = id2
-        |  WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8),
-        |edges AS (
-        |  SELECT id1 AS s, id2 AS d FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT walk.s, e.d FROM walk JOIN edges e ON walk.d = e.s),
+      s"""WITH RECURSIVE $closureCtes,
         |comp AS (
         |  SELECT s AS doc_id, least(s, min(d)) AS comp
         |  FROM walk GROUP BY s),
@@ -916,8 +896,8 @@ object TextDedup {
         |  AND (d.doc_id NOT IN (SELECT doc_id FROM comp)
         |    OR d.doc_id IN (SELECT doc_id FROM reps))
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val pairs = Dedup.jaccardPairs(Dedup.tokenSet(docs, "doc_id", "text"), 0.8)
+      val docs = nearDupScope(s, dir)
+      val pairs = nearDupPairs(docs)
       Dedup.keepBest(docs, "doc_id", col("n_chars"), pairs)
         .select("doc_id", "n_chars")
         .orderBy("doc_id")
@@ -926,31 +906,10 @@ object TextDedup {
     // ---- Quality-aware keep above; min-id transitive closure below.
     GQuery(
       "dedup_components",
-      """WITH RECURSIVE w AS (
-        |  SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents WHERE doc_id < 200),
-        |sz AS (SELECT doc_id, count(*) AS n FROM w GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-        |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id1, id2 FROM inter
-        |  JOIN sz s1 ON s1.doc_id = id1
-        |  JOIN sz s2 ON s2.doc_id = id2
-        |  WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8),
-        |edges AS (
-        |  SELECT id1 AS s, id2 AS d FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT walk.s, e.d FROM walk JOIN edges e ON walk.d = e.s)
+      s"""WITH RECURSIVE $closureCtes
         |SELECT s AS doc_id, least(s, min(d)) AS comp
         |FROM walk GROUP BY s ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val pairs = Dedup.jaccardPairs(Dedup.tokenSet(docs, "doc_id", "text"), 0.8)
-      Dedup.connectedComponents(pairs).orderBy("doc_id")
+      Dedup.connectedComponents(nearDupPairs(nearDupScope(s, dir))).orderBy("doc_id")
     },
 
     // ---- Star-contraction components twin: same pair graph, same
@@ -961,31 +920,10 @@ object TextDedup {
     // evidence beyond its unit spec.
     GQuery(
       "dedup_components_star",
-      """WITH RECURSIVE w AS (
-        |  SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents WHERE doc_id < 200),
-        |sz AS (SELECT doc_id, count(*) AS n FROM w GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-        |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id1, id2 FROM inter
-        |  JOIN sz s1 ON s1.doc_id = id1
-        |  JOIN sz s2 ON s2.doc_id = id2
-        |  WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8),
-        |edges AS (
-        |  SELECT id1 AS s, id2 AS d FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT walk.s, e.d FROM walk JOIN edges e ON walk.d = e.s)
+      s"""WITH RECURSIVE $closureCtes
         |SELECT s AS doc_id, least(s, min(d)) AS comp
         |FROM walk GROUP BY s ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val pairs = Dedup.jaccardPairs(Dedup.tokenSet(docs, "doc_id", "text"), 0.8)
-      Dedup.connectedComponentsStar(pairs).orderBy("doc_id")
+      Dedup.connectedComponentsStar(nearDupPairs(nearDupScope(s, dir))).orderBy("doc_id")
     },
 
     // ---- Dedup diagnostic: cluster-size histogram over the near-dup
@@ -995,26 +933,7 @@ object TextDedup {
     // aggregations.
     GQuery(
       "dedup_cluster_stats",
-      """WITH RECURSIVE w AS (
-        |  SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents WHERE doc_id < 200),
-        |sz AS (SELECT doc_id, count(*) AS n FROM w GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
-        |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id1, id2 FROM inter
-        |  JOIN sz s1 ON s1.doc_id = id1
-        |  JOIN sz s2 ON s2.doc_id = id2
-        |  WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8),
-        |edges AS (
-        |  SELECT id1 AS s, id2 AS d FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT walk.s, e.d FROM walk JOIN edges e ON walk.d = e.s),
+      s"""WITH RECURSIVE $closureCtes,
         |comp AS (
         |  SELECT s AS doc_id, least(s, min(d)) AS comp FROM walk GROUP BY s),
         |hist AS (
@@ -1029,8 +948,8 @@ object TextDedup {
         |FROM hist GROUP BY cluster_size
         |HAVING sum(n_clusters) > 0
         |ORDER BY cluster_size""".stripMargin) { (s, dir) =>
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val pairs = Dedup.jaccardPairs(Dedup.tokenSet(docs, "doc_id", "text"), 0.8)
+      val docs = nearDupScope(s, dir)
+      val pairs = nearDupPairs(docs)
       Dedup.clusterSizeHistogram(docs, "doc_id", pairs)
         .orderBy("cluster_size")
     },
@@ -1811,14 +1730,13 @@ object TextDedup {
          |WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8
          |ORDER BY id_new, id_ref""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
-      // the corpus side probes the PERSISTED band index (ensure builds
-      // it once per corpus fingerprint — the nightly flow's ingest-time
-      // step), so each batch reads the compact bucketed index instead
-      // of re-sketching the whole corpus; BandIndex.matches is
+      // the corpus side is the persisted band index, built by this run
+      // (the nightly flow's ingest step) and then probed, so the run
+      // reads no index an earlier run left behind; BandIndex.matches is
       // output-identical to sketching the raw corpus by construction
       // (spec-pinned), so the raw-corpus oracle replay still certifies it
       val idx = "gidx_" + dir.toLowerCase.replaceAll("[^a-z0-9]", "_")
-      graft.operators.BandIndex.ensure(docs.filter(col("doc_id") < 300),
+      graft.operators.BandIndex.build(docs.filter(col("doc_id") < 300),
         "doc_id", "text", numHashes = 64, bands = 16, buckets = 8, idx)
       graft.operators.BandIndex.matches(
           docs.filter(col("doc_id") >= 300 && col("doc_id") < 400),
@@ -2104,6 +2022,41 @@ object TextDedup {
     * (rows with rn = 1 are the selected fingerprints) — shared by the
     * selection gate and the overlap-pairs gate. Emitted WITHOUT the
     * leading WITH. */
+  /** The documents the near-duplicate gates scope to: doc_id < 200. */
+  private def nearDupScope(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "documents").filter(col("doc_id") < 200)
+
+  /** The near-duplicate pairs (id1 < id2) of [[nearDupScope]]: word sets
+    * at Jaccard >= 0.8. */
+  private def nearDupPairs(docs: org.apache.spark.sql.DataFrame) =
+    Dedup.jaccardPairs(Dedup.tokenSet(docs, "doc_id", "text"), 0.8)
+
+  /** The oracle side of [[nearDupPairs]] and its transitive closure, after
+    * a `WITH RECURSIVE`: word sets `w`, sizes `sz`, shared-word counts
+    * `inter`, the Jaccard >= 0.8 `pairs`, both edge directions `edges`,
+    * and `walk(s, d)`, every doc `d` reachable from `s`. */
+  private def closureCtes: String =
+    """w AS (
+      |  SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
+      |  FROM documents WHERE doc_id < 200),
+      |sz AS (SELECT doc_id, count(*) AS n FROM w GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS c
+      |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2),
+      |pairs AS (
+      |  SELECT id1, id2 FROM inter
+      |  JOIN sz s1 ON s1.doc_id = id1
+      |  JOIN sz s2 ON s2.doc_id = id2
+      |  WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8),
+      |edges AS (
+      |  SELECT id1 AS s, id2 AS d FROM pairs
+      |  UNION SELECT id2, id1 FROM pairs),
+      |walk(s, d) AS (
+      |  SELECT s, d FROM edges
+      |  UNION
+      |  SELECT walk.s, e.d FROM walk JOIN edges e ON walk.d = e.s)""".stripMargin
+
   private def winnowingCtes: String =
     """t AS (
       |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk

@@ -39,37 +39,13 @@ class WarehouseSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $name")
   }
 
-  test("BandIndex.ensure survives an orphaned location from a dead JVM") {
+  test("BandIndex.build survives an orphaned location from a dead JVM") {
     val docs = Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "x y z w"))
       .toDF("doc_id", "text")
-    // simulate the dead-JVM leftover for every table ensure will create
-    Seq("worph_bands_v1", "worph_toks_v1", "worph_meta").foreach(orphanDir)
-    graft.operators.BandIndex.ensure(docs, "doc_id", "text",
+    // simulate the dead-JVM leftover for every table build will create
+    Seq("worph_bands_v1", "worph_toks_v1").foreach(orphanDir)
+    graft.operators.BandIndex.build(docs, "doc_id", "text",
       numHashes = 16, bands = 4, buckets = 2, name = "worph")
     assert(spark.table("worph_bands").count() > 0)
-  }
-
-  test("TotalOrder.persistBoundaries survives an orphaned boundary location") {
-    // the one order-stats ingest call, persistOrderStats, writes a
-    // fingerprinted table, so the input is file-backed
-    val dir = tmpDir("worph_stats")
-    (1L to 500L).map(i => (i, i % 7)).toDF("k", "v")
-      .write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    // first persist to learn the table name (by before/after diff —
-    // other suites in the shared session may land their own tables),
-    // drop the table but keep a fresh orphan dir, then persist again
-    // from a cleared memo
-    val before = spark.catalog.listTables().collect().map(_.name).toSet
-    graft.operators.TotalOrder.persistOrderStats(df, "k", "v")
-    val name = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_ordstats_"))
-      .filterNot(before).head
-    spark.sql(s"DROP TABLE $name")
-    orphanDir(name)
-    graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-    graft.operators.TotalOrder.persistOrderStats(df, "k", "v")
-    assert(spark.table(name).count() === 1L)
-    spark.sql(s"DROP TABLE $name")
   }
 }

@@ -100,43 +100,6 @@ class JdbcUpsertSpec extends SparkSpec {
     assertNoStage("dim_checked")
   }
 
-  test("scd2Load closes current versions and opens new ones with effective dating") {
-    val conn = DriverManager.getConnection(url)
-    val st = conn.createStatement()
-    st.executeUpdate(
-      """CREATE TABLE "dim_staff_hist" (
-        |  "staff_id" INT, "name" VARCHAR(32),
-        |  "valid_from" DATE, "valid_to" DATE, "is_current" BOOLEAN)"""
-        .stripMargin)
-    st.close(); conn.close()
-
-    import spark.implicits._
-    val sink = new JdbcWarehouseSink(url, props, batchSize = 2)
-    def day(s: String) = java.sql.Date.valueOf(s)
-    sink.scd2Load("dim_staff_hist",
-      Seq((1, "Ada"), (2, "Grace")).toDF("staff_id", "name"),
-      Seq("staff_id"), day("2023-01-01"))
-    // staff 1 renamed; staff 3 appears
-    sink.scd2Load("dim_staff_hist",
-      Seq((1, "Ada L."), (3, "Edsger")).toDF("staff_id", "name"),
-      Seq("staff_id"), day("2023-06-01"))
-
-    val rows = spark.read.jdbc(url, "\"dim_staff_hist\"", props)
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1),
-        String.valueOf(r.getDate(2)), String.valueOf(r.getDate(3)),
-        r.getBoolean(4)))
-      .toSet
-    assert(rows === Set(
-      // staff 1: old version closed at the second load's effective date
-      (1, "Ada", "2023-01-01", "2023-06-01", false),
-      (1, "Ada L.", "2023-06-01", "null", true),
-      // staff 2: untouched by the second batch, still current
-      (2, "Grace", "2023-01-01", "null", true),
-      // staff 3: new key, one current version
-      (3, "Edsger", "2023-06-01", "null", true)))
-  }
-
   test("declared natural keys drive the convenience overload; unknown tables refuse") {
     setup
     assert(Schemas.warehouseKeys("dim_currency") === Seq("currency_id"))

@@ -132,44 +132,4 @@ class BandIndexSpec extends SparkSpec {
     assert(rows(BandIndex.matches(probe, "doc_id", "text",
       64, 16, 0.8, "aidx")) === expected)
   }
-
-  test("ensure rebuilds when the sketch parameters change under the same name") {
-    val corpus = docs.filter(col("doc_id") < 60)
-    BandIndex.ensure(corpus, "doc_id", "text",
-      numHashes = 64, bands = 16, buckets = 4, name = "pidx")
-    val v1 = BandIndex.physicalTable(spark, "pidx_bands")
-    // same session, same name, DIFFERENT params: the memo must not
-    // short-circuit (mismatched band hashes would silently match nothing)
-    BandIndex.ensure(corpus, "doc_id", "text",
-      numHashes = 32, bands = 8, buckets = 4, name = "pidx")
-    val v2 = BandIndex.physicalTable(spark, "pidx_bands")
-    assert(v1 !== v2, "param change must version-bump the physical index")
-    // each band row now hashes 32/8 = 4 signature slots
-    assert(spark.table("pidx_bands").select("band_idx").distinct().count() === 8L)
-    // unchanged params are a no-op (no further version bump)
-    BandIndex.ensure(corpus, "doc_id", "text",
-      numHashes = 32, bands = 8, buckets = 4, name = "pidx")
-    assert(BandIndex.physicalTable(spark, "pidx_bands") === v2)
-  }
-
-  test("ensure rebuilds when the corpus FILES change behind the same plan") {
-    // the staleness window the fingerprint exists to close: same path,
-    // same plan (same semantic hash), rewritten data — serving the old
-    // index would emit matches against vanished documents
-    val corpusDir = tmpDir("ensure-fp")
-    docs.filter(col("doc_id") < 40).write.mode("overwrite").parquet(corpusDir)
-    def corpus() = spark.read.parquet(corpusDir)
-    BandIndex.ensure(corpus(), "doc_id", "text",
-      numHashes = 16, bands = 4, buckets = 2, name = "fidx")
-    val v1 = BandIndex.physicalTable(spark, "fidx_bands")
-    val rows1 = spark.table("fidx_toks").count()
-    // rewrite with a different slice (fresh part files, fresh mtimes)
-    docs.filter(col("doc_id") >= 40 && col("doc_id") < 60)
-      .write.mode("overwrite").parquet(corpusDir)
-    BandIndex.ensure(corpus(), "doc_id", "text",
-      numHashes = 16, bands = 4, buckets = 2, name = "fidx")
-    assert(BandIndex.physicalTable(spark, "fidx_bands") !== v1,
-      "corpus rewrite must version-bump the physical index")
-    assert(spark.table("fidx_toks").count() !== rows1)
-  }
 }

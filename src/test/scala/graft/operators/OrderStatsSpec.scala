@@ -11,11 +11,10 @@ import org.apache.spark.sql.expressions.Window
   * cut, mid-bucket, bucket edge, whole corpus); the served plan carries
   * NO aggregate (the totals come from the fingerprinted session memo);
   * stale stats (data rewritten under the same path) are refused with an
-  * in-plan fallback and rebuilt by the next ensure; non-integral weights
+  * in-plan fallback and rebuilt by the next ensure, an emptied input
+  * included; non-integral weights
   * never serve (float prefix sums are order-sensitive). The TotalOrder
-  * gates' build path writes no catalog table and repeats for free;
-  * [[TotalOrder.persistOrderStats]] lands one table, served only while
-  * its fingerprint matches. */
+  * gates' build path writes no catalog table and repeats for free. */
 class OrderStatsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -105,6 +104,15 @@ class OrderStatsSpec extends SparkSpec {
     val q2 = served(df1, 50L)
     assert(!hasAggregate(q2))
     assert(q2.collect().map(_.toSeq).toSeq === truth(df1, 50L))
+    // emptied under the same path: the memoized draw still serves as
+    // boundaries, and the rebuilt totals are all zero
+    Seq.empty[(Long, Long)].toDF("k", "w").write.mode("overwrite").parquet(dir)
+    spark.catalog.refreshByPath(dir)
+    val df2 = spark.read.parquet(dir)
+    TotalOrder.ensureOrderStats(df2, "k", "w")
+    val q3 = served(df2, 50L)
+    assert(!hasAggregate(q3))
+    assert(q3.count() === 0L)
   }
 
   test("non-integral weights never persist; empty input never persists") {
@@ -150,19 +158,14 @@ class OrderStatsSpec extends SparkSpec {
   test("TotalOrder gates build without catalog writes; a rebuild starts no job") {
     val dir = documentsDir()
     def gate(name: String) = graft.SparkEntry.allQueries.find(_.name == name).get
-    def reset(): Unit = {
-      TotalOrder.invalidateBoundaryMemo(spark)
-      TotalOrder.dropPersistedStats(spark)
-      spark.catalog.clearCache()
-    }
-    reset()
+    graft.GraftSession.resetGateState(spark)
     assert(statsTables().isEmpty)
     for (name <- Seq("smp_token_budget", "smp_token_budget_subword",
         "smp_token_shards", "txt_ppl_buckets")) {
       assert(gate(name).run(spark, dir).collect().nonEmpty, name)
       assert(statsTables().isEmpty, s"$name landed a catalog table")
     }
-    reset()
+    graft.GraftSession.resetGateState(spark)
     val budget = gate("smp_token_budget")
     val (cut, cold) = jobsIn(budget.run(spark, dir))
     info(s"smp_token_budget cold build: $cold jobs")
@@ -171,50 +174,6 @@ class OrderStatsSpec extends SparkSpec {
     assert(warm === 0, s"a second build in the session started $warm jobs")
     assert(!hasAggregate(again), "the rebuilt cut must still be served")
     assert(again.collect().toSeq === cut.collect().toSeq)
-    assert(statsTables().isEmpty)
-  }
-
-  test("persistOrderStats lands one table, served after a memo reset until the data changes") {
-    val dir = tmpDir("ordstats_persist")
-    val rnd = new scala.util.Random(5L)
-    (1L to 200L).map(k => (k, 1L + rnd.nextInt(9))).toDF("k", "w")
-      .write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    TotalOrder.invalidateBoundaryMemo(spark)
-    TotalOrder.dropPersistedStats(spark)
-    val inPlan = served(df, 300L)
-    assert(hasAggregate(inPlan))
-    val expected = inPlan.collect().map(_.toSeq).toSeq
-
-    TotalOrder.persistOrderStats(df, "k", "w")
-    val landed = statsTables()
-    assert(landed.size === 1 && landed.head.startsWith("graft_ordstats_"),
-      s"expected exactly one order-stats table, got $landed")
-    TotalOrder.persistOrderStats(df, "k", "w") // current: no second table
-    assert(statsTables() === landed)
-
-    TotalOrder.invalidateBoundaryMemo(spark)
-    val q = served(df, 300L)
-    assert(!hasAggregate(q), "a reset memo must serve the landed table")
-    assert(q.collect().map(_.toSeq).toSeq === expected)
-
-    // rewrite the corpus under the same path: the table is now stale
-    (1L to 200L).map(k => (k, 3L)).toDF("k", "w")
-      .write.mode("overwrite").parquet(dir)
-    spark.catalog.refreshByPath(dir)
-    TotalOrder.invalidateBoundaryMemo(spark)
-    val df1 = spark.read.parquet(dir)
-    val q1 = served(df1, 300L)
-    assert(hasAggregate(q1), "a stale landed table must be refused")
-    assert(q1.collect().map(_.toSeq).toSeq === truth(df1, 300L))
-    // emptied under the same path: the memoized draw still serves as
-    // boundaries, and the rebuilt totals are all zero
-    Seq.empty[(Long, Long)].toDF("k", "w").write.mode("overwrite").parquet(dir)
-    spark.catalog.refreshByPath(dir)
-    val df2 = spark.read.parquet(dir)
-    TotalOrder.ensureOrderStats(df2, "k", "w")
-    assert(served(df2, 300L).count() === 0L)
-    TotalOrder.dropPersistedStats(spark)
     assert(statsTables().isEmpty)
   }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
-import graft.{SparkEntry, SparkSpec}
-import graft.operators.{Dedup, TotalOrder}
+import graft.{GraftSession, SparkEntry, SparkSpec}
 
 /** Upper bounds on the Spark jobs that executing each gate of the
   * benchmark's `llm_ops` workload starts at sf0.001, from the same reset
@@ -19,10 +18,7 @@ class GateJobCountSpec extends SparkSpec {
     "pipe_rag_prep" -> 2)
 
   for ((gate, bound) <- bounds) test(s"$gate: execution starts at most $bound jobs") {
-    Dedup.invalidateBloomMemo(spark)
-    TotalOrder.invalidateBoundaryMemo(spark)
-    TotalOrder.dropPersistedStats(spark)
-    spark.catalog.clearCache()
+    GraftSession.resetGateState(spark)
     val q = SparkEntry.allQueries.find(_.name == gate).get
     val df = q.run(spark, "/root/testdata/sf0.001")
     df.queryExecution.executedPlan

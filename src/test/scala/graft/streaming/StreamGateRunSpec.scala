@@ -4,14 +4,15 @@ import graft.SparkSpec
 import graft.core.{StreamGates, VersionedTable}
 import org.apache.spark.sql.functions._
 
-/** Each streaming replay gate is one self-contained run: it resets its
-  * state through the operator's own cold path, drives the triggers and
-  * counts that run's deliveries, so its rows never depend on what an
-  * earlier run left behind. Every gate must give the same rows when run
-  * twice in one session, after its state is dropped, and after a stray
-  * row lands in its state table; the stray row is chosen so that a gate
-  * that read stale state would change its output. No gate persists a
-  * delivery ledger (`*_dlv`). */
+/** Each gate that keeps persisted state (the streaming replay gates and
+  * `dedup_incremental`) is one self-contained run: it resets its state
+  * through the operator's own cold path (a seed or an index build), then
+  * drives its triggers or probes, so its rows never depend on what an
+  * earlier run left behind. Every such gate must give the same rows when
+  * run twice in one session, after its state is dropped, and after a
+  * stray row lands in its state table; the stray row is chosen so that a
+  * gate that read stale state would change its output. No gate persists
+  * a delivery ledger (`*_dlv`). */
 class StreamGateRunSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -92,6 +93,18 @@ class StreamGateRunSpec extends SparkSpec {
       spark.table(toks).limit(1)
         .withColumn("doc_id", lit(300L).cast(spark.table(toks).schema("doc_id").dataType))
         .withColumn("src_batch", lit(1L))
+        .write.mode("append").insertInto(toks)
+    }
+  }
+
+  test("dedup_incremental: rerun, dropped state, stray row agree") {
+    val idx = "gidx_" + dir.toLowerCase.replaceAll("[^a-z0-9]", "_")
+    checkSelfContained("dedup_incremental", idx) {
+      // a second token-set row for the corpus doc of the first match:
+      // read as state, that pair would be verified, and emitted, twice
+      val idRef = run("dedup_incremental").head(1)
+      val toks = VersionedTable.physicalTable(spark, s"${idx}_toks")
+      spark.table(toks).filter(col("doc_id") === idRef)
         .write.mode("append").insertInto(toks)
     }
   }

@@ -3,8 +3,10 @@
 
 For every public `def`, `val`, `var`, `object`, `class` and `trait` declared
 in src/main/scala, the check counts the files under src/main/scala and
-perfbench/src that use the name as a whole identifier, with comments
-stripped. A name is reached only when it occurs more times than it is
+perfbench/src that use the name as a whole identifier, with comments and
+the text of string literals stripped: a name inside a message or an SQL
+string is not a use, while the `$name` and `${expr}` parts of an
+interpolated literal are code and count. A name is reached only when it occurs more times than it is
 declared in that code, so two unused defs that share a name (say two
 `compact` methods) do not count as each other's use. A name that occurs
 nowhere apart from its own declarations is a hit: only tests (or nothing)
@@ -46,53 +48,104 @@ DECL = re.compile(
     r"abstract|implicit|lazy|case|inline)\s+)*"
     r"(def|val|var|object|class|trait)\s+(" + IDENT + r")",
     re.MULTILINE)
+SPLICE_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
-def strip_comments(src):
-    """Blank out // and (nested) /* */ comments, keeping string literals
-    and line structure intact."""
-    out = []
-    i, n = 0, len(src)
+def blank(text):
+    """Spaces for `text`, keeping its newlines (so line numbers hold)."""
+    return "".join(ch if ch == "\n" else " " for ch in text)
+
+
+def code_only(src):
+    """Blank out comments and the text of string and char literals. The
+    `$name` and `${expr}` parts of an interpolated literal stay: they are
+    code, and `expr` is scanned the same way, so a literal nested inside
+    it (`${rx(s"|$x|")}`) is handled too. Line structure is kept."""
+    out, _ = _code(src, 0, False)
+    return out
+
+
+def _code(src, i, in_splice):
+    """Scan code from `i`; inside a `${...}` splice, stop after the `}`
+    that closes it. Returns (kept text, index after the scan)."""
+    out, n, depth = [], len(src), 0
     while i < n:
         c = src[i]
-        if src.startswith('"""', i):
-            j = src.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            while j < n and src[j] == '"':  # """...""""" closes on the last
-                j += 1
-            out.append(src[i:j])
-            i = j
-        elif c == '"':
-            j = i + 1
-            while j < n and src[j] != '"' and src[j] != "\n":
-                j += 2 if src[j] == "\\" else 1
-            out.append(src[i:j + 1])
-            i = j + 1
+        if c == '"':
+            interp = i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_")
+            text, i = _literal(src, i, interp)
+            out.append(text)
         elif c == "'" and i + 2 < n and (src[i + 2] == "'" or
                                          (src[i + 1] == "\\" and i + 3 < n)):
             j = src.find("'", i + 3 if src[i + 1] == "\\" else i + 2)
-            out.append(src[i:j + 1])
+            j = n - 1 if j < 0 else j
+            out.append(blank(src[i:j + 1]))
             i = j + 1
         elif src.startswith("//", i):
             j = src.find("\n", i)
             j = n if j < 0 else j
-            out.append(" " * (j - i))
+            out.append(blank(src[i:j]))
             i = j
         elif src.startswith("/*", i):
-            depth, j = 1, i + 2
-            while j < n and depth:
+            d, j = 1, i + 2
+            while j < n and d:
                 if src.startswith("/*", j):
-                    depth, j = depth + 1, j + 2
+                    d, j = d + 1, j + 2
                 elif src.startswith("*/", j):
-                    depth, j = depth - 1, j + 2
+                    d, j = d - 1, j + 2
                 else:
                     j += 1
-            out.append("".join(ch if ch == "\n" else " " for ch in src[i:j]))
+            out.append(blank(src[i:j]))
             i = j
         else:
+            if in_splice and c == "{":
+                depth += 1
+            elif in_splice and c == "}":
+                if depth == 0:
+                    return "".join(out), i + 1
+                depth -= 1
             out.append(c)
             i += 1
-    return "".join(out)
+    return "".join(out), i
+
+
+def _literal(src, i, interp):
+    """Scan the string literal that opens at `i`: its text blanked, and,
+    when `interp`, its `$name` and `${expr}` splices kept as code.
+    Returns (kept text, index after the closing quote)."""
+    n = len(src)
+    triple = src.startswith('"""', i)
+    out = [" " * (3 if triple else 1)]
+    j = i + (3 if triple else 1)
+    while j < n:
+        if triple and src.startswith('"""', j):
+            j += 3
+            while j < n and src[j] == '"':  # """...""""" closes on the last
+                j += 1
+            break
+        if not triple and src[j] in '"\n':
+            out.append(blank(src[j]))
+            j += 1
+            break
+        if not triple and src[j] == "\\":
+            out.append(blank(src[j:j + 2]))
+            j += 2
+        elif interp and src.startswith("$$", j):
+            out.append("  ")
+            j += 2
+        elif interp and src.startswith("${", j):
+            text, k = _code(src, j + 2, True)
+            out.append("  " + text + " ")
+            j = k
+        elif interp and src[j] == "$":
+            m = SPLICE_NAME.match(src, j + 1)
+            k = m.end() if m else j + 1
+            out.append(" " + src[j + 1:k])
+            j = k
+        else:
+            out.append(blank(src[j]))
+            j += 1
+    return "".join(out), j
 
 
 def scala_files(roots):
@@ -104,7 +157,7 @@ def scala_files(roots):
 
 
 def hits():
-    texts = {p: strip_comments(open(p, encoding="utf-8").read())
+    texts = {p: code_only(open(p, encoding="utf-8").read())
              for p in scala_files(SEARCH)}
     declared = {}
     for text in texts.values():
